@@ -10,6 +10,11 @@ same dataflow runs through the Spark Cassandra Connector (see
 ``sources/cassandra.py`` for the connector-config design notes covering
 A1/A3/A6/A9/A10, which are not exercisable in this sandbox).
 
+Every copy goes through one write/read-back core (``_write`` /
+``_read_back``) behind two entry points: ``copy_table`` for a whole-table
+copy with an optional layout reshape, and ``copy_table_resumable`` for the
+range-by-range loop (done-markers, pacing, injected failure).
+
 Scale notes (100-TB design point):
   - Bulk copy is pure ``read → write``: no shuffle at all. Parallelism
     comes from source splits (parquet file splits / connector token
@@ -26,6 +31,7 @@ Scale notes (100-TB design point):
 from __future__ import annotations
 
 import os
+import time
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,72 +88,62 @@ def schema_manifest(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFram
     return spark.createDataFrame(rows, _MANIFEST_SCHEMA)
 
 
+def _options(fmt: str) -> dict:
+    # CSV is the one sink that needs a header line to carry column names
+    return {"header": True} if fmt == "csv" else {}
+
+
+def _write(df: DataFrame, path: str, fmt: str = "parquet", partition_by=()) -> None:
+    """The copy core's write: overwrite ``path`` with ``df`` in ``fmt``,
+    one directory per value of each ``partition_by`` column."""
+    writer = df.write.mode("overwrite").format(fmt).options(**_options(fmt))
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(path)
+
+
+def _read_back(
+    spark: SparkSession, path: str, schema: T.StructType, fmt: str = "parquet"
+) -> DataFrame:
+    """The copy core's read-back, with the written frame's schema enforced.
+
+    This is a migrator's contract (replay the DDL, then load against
+    it): text formats carry no types of their own, an explicit schema
+    costs no footer-inference job, and an EMPTY copy stays readable — a
+    0-row write may leave no data file to infer a schema from (the
+    quiet-day incremental run). Partition columns read back last."""
+    return spark.read.format(fmt).options(**_options(fmt)).schema(schema).load(path)
+
+
 def copy_table(
-    spark: SparkSession, src_dir: str, dst_dir: str, name: str
-) -> DataFrame:
-    """Bulk table copy (A4): full scan → schema/value-preserving write.
-
-    Shuffle-free: source splits map 1:1 to output files. On Cassandra the
-    same dataflow is ``connector read → connector write`` with writetime/
-    TTL read options carried as extra columns (A6 — see
-    ``sources/cassandra.py``). Returns the re-read target so callers can
-    validate the round trip (A7/A8 run on the result).
-    """
-    dst = os.path.join(dst_dir, f"{name}.parquet")
-    load_table(spark, src_dir, name).write.mode("overwrite").parquet(dst)
-    return spark.read.parquet(dst)
-
-
-def copy_table_via(
-    spark: SparkSession, src_dir: str, dst_dir: str, name: str, fmt: str
-) -> DataFrame:
-    """Format-generic bulk copy (A4 over csv/json sinks): write the table
-    through a text format and read it back with the SOURCE schema
-    enforced — exactly a migrator's flow (replicate DDL first, then load
-    data against it; text formats carry no types of their own).
-
-    Same shuffle-free shape as ``copy_table``; the schema-on-read is what
-    makes the round trip value-preserving (doubles serialize at full
-    precision in both csv and json writers)."""
-    src = load_table(spark, src_dir, name)
-    dst = os.path.join(dst_dir, f"{name}.{fmt}")
-    writer = src.write.mode("overwrite").format(fmt)
-    reader = spark.read.format(fmt).schema(src.schema)
-    if fmt == "csv":
-        writer = writer.option("header", True)
-        reader = reader.option("header", True)
-    writer.save(dst)
-    return reader.load(dst)
-
-
-def copy_table_partitioned(
     spark: SparkSession,
     src_dir: str,
     dst_dir: str,
     name: str,
-    partition_expr: F.Column,
-    partition_name: str,
+    *,
+    fmt: str = "parquet",
+    layout=None,
+    partition_by=(),
 ) -> DataFrame:
-    """A4 at scale: copy with a partitioned target layout.
+    """Bulk table copy (A4): full scan → value-preserving write of
+    ``<dst_dir>/<name>.<fmt>``, returned as its read-back so callers can
+    validate the round trip (A7/A8 run on the result).
 
-    Writes ``partitionBy(partition_name)`` so the target is a directory
-    per partition value — the layout that turns downstream date filters
-    into partition pruning (no file even opened outside the range) and
-    bounds per-task output size. The partition column is derived (e.g.
-    ``year(o_orderdate)``) and carried alongside the original columns;
-    read-back returns the original column set for value-preservation
-    checks."""
+    ``layout`` is an optional DataFrame→DataFrame reshape applied before
+    the write: derived columns (a partition key, A6 writetime metadata),
+    a file-count repartition (compaction), a range clustering and sort.
+    Without one the copy is shuffle-free — source splits map 1:1 to
+    output files. ``partition_by`` writes a directory per value of those
+    columns, the layout that turns filters on them into partition
+    pruning. Derived columns are part of the read-back; callers project
+    them away to compare against the source. On Cassandra the same
+    dataflow is ``connector read → connector write`` (sources/cassandra.py).
+    """
     src = load_table(spark, src_dir, name)
-    dst = os.path.join(dst_dir, f"{name}_part.parquet")
-    with_part = src.withColumn(partition_name, partition_expr)
-    with_part.write.mode("overwrite").partitionBy(partition_name).parquet(dst)
-    # Explicit schema (source schema + derived partition column): the
-    # source schema is the read-back contract anyway, and it keeps an
-    # EMPTY copy readable — a 0-row partitionBy write emits no files at
-    # all, so schema inference would fail on the quiet-day case.
-    return (
-        spark.read.schema(with_part.schema).parquet(dst).select(*src.columns)
-    )
+    out = layout(src) if layout else src
+    dst = os.path.join(dst_dir, f"{name}.{fmt}")
+    _write(out, dst, fmt, partition_by)
+    return _read_back(spark, dst, out.schema, fmt)
 
 
 def range_split_counts(df: DataFrame, key: str, n_splits: int = 16) -> DataFrame:
@@ -192,77 +188,32 @@ def range_split_counts(df: DataFrame, key: str, n_splits: int = 16) -> DataFrame
     )
 
 
-def copy_table_with_writetime(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    name: str,
-    ts_col: str,
-    value_cols: tuple,
-) -> DataFrame:
-    """Writetime-preserving copy (A6, simulated): per-cell WRITETIME
-    metadata rides along as ``<col>_writetime`` columns and survives the
-    copy byte-for-byte.
-
-    On Cassandra the connector materializes real per-cell timestamps via
-    its ``writetime.<col>`` read option and replays them on write (see
-    sources/cassandra.py::reader_options); the parquet keyspace has no
-    cell metadata, so the simulation derives a deterministic writetime
-    (epoch micros of ``ts_col``) — the POINT under test is the dataflow:
-    metadata columns attach at read, flow through the shuffle-free copy
-    untouched, and verify on the target."""
-    src = load_table(spark, src_dir, name)
-    # writetime = epoch micros OF THE NAIVE WALL-CLOCK (DuckDB's
-    # epoch_us of the same naive timestamps). unix_micros alone reads
-    # the raw internal epoch, which follows spark.sql.session.timeZone;
-    # from_utc_timestamp(col, session_tz) shifts it so the result is
-    # the naive micros under ANY session zone (identity under the
-    # engine's pinned UTC — same value, same plan shape).
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC") or "UTC"
-    wt = F.unix_micros(
-        F.from_utc_timestamp(F.col(ts_col).cast("timestamp"), tz)
-    )
-    with_meta = src.select(
-        "*", *[wt.alias(f"{c}_writetime") for c in value_cols]
-    )
-    dst = os.path.join(dst_dir, f"{name}.parquet")
-    with_meta.write.mode("overwrite").parquet(dst)
-    return spark.read.parquet(dst)
-
-
 def plan_key_ranges(df: DataFrame, key: str, n_splits: int) -> list[tuple]:
-    """Compute ``n_splits`` contiguous (lo, hi) key ranges covering the
-    table (inclusive bounds) — the migration plan A5 produces and A9
-    persists. One small aggregation job; bounds come from the same
-    ntile math as ``range_split_counts``."""
+    """Compute ``n_splits`` contiguous ``(lo, hi, n_rows)`` key ranges
+    covering the table (inclusive bounds, exact row counts) — the
+    migration plan A5 produces and A9 persists. One small aggregation
+    job; bounds come from the same ntile math as ``range_split_counts``."""
     rows = (
         range_split_counts(df, key, n_splits)
         .orderBy("bucket")
-        .select("min_key", "max_key")
+        .select("min_key", "max_key", "n_rows")
         .collect()
     )
-    return [(r.min_key, r.max_key) for r in rows]
-
-
-def _read_ranged_target(
-    spark: SparkSession, table_dir: str, src: DataFrame
-) -> DataFrame:
-    """Read back a ``range=i``-partitioned copy target with the source
-    schema enforced (plus the ``range`` partition column, projected away).
-
-    The explicit schema is what keeps an EMPTY copy readable: a 0-row
-    table plans 0 ranges, so the target directory holds no parquet files
-    and schema inference would fail — while a migrator's contract is the
-    source schema regardless of row count (the quiet-day incremental
-    run)."""
-    schema = T.StructType(
-        list(src.schema.fields) + [T.StructField("range", T.IntegerType())]
-    )
-    return spark.read.schema(schema).parquet(table_dir).select(*src.columns)
+    return [tuple(r) for r in rows]
 
 
 class SimulatedFailure(RuntimeError):
     """Raised by copy_table_resumable(fail_after=k) to test resume."""
+
+
+class WallClock:
+    """Real clock for production throttling; tests inject a fake."""
+
+    def now(self) -> float:
+        return time.monotonic()
+
+    def sleep(self, seconds: float) -> None:
+        time.sleep(seconds)
 
 
 def copy_table_resumable(
@@ -272,11 +223,14 @@ def copy_table_resumable(
     name: str,
     key: str,
     n_splits: int = 16,
+    *,
+    rows_per_second: float | None = None,
+    clock=None,
     fail_after: int | None = None,
 ) -> DataFrame:
-    """Resumable bulk copy (A9): the table is copied one key range at a
-    time; each completed range writes its data then a done-marker, and a
-    restarted run skips every marked range.
+    """Resumable, optionally throttled bulk copy (A9/A10): the table is
+    copied one key range at a time; each completed range writes its data
+    then a done-marker, and a restarted run skips every marked range.
 
     This is the reference's core control loop (per-token-range copy with
     persisted progress — SURVEY.md §3.1) expressed over Spark jobs: each
@@ -295,106 +249,44 @@ def copy_table_resumable(
     a partition of the key space for any key distribution — no
     unique-key precondition.
 
+    ``rows_per_second`` paces the loop to a rows/second budget so the
+    migration never overruns the source cluster's serving capacity:
+    before submitting a range it waits until ``start + rows_copied /
+    rows_per_second``, where ``rows_copied`` counts the exact planned
+    rows of the ranges this run has copied — so a resumed run re-paces
+    only the ranges it still copies. ``clock`` (``now``/``sleep``) is
+    injectable so tests assert the sleep schedule exactly; the default
+    is the real monotonic clock. This driver-side pacing bounds SOURCE
+    read pressure; executor-side write throttling maps to the
+    connector's throughput option (see sources/cassandra.py).
+
     ``fail_after=k`` aborts after k ranges to let tests exercise the
     resume path. Returns the re-read of the completed target.
-    """
-    src = load_table(spark, src_dir, name)
-    table_dir = os.path.join(dst_dir, f"{name}.parquet")
-    os.makedirs(table_dir, exist_ok=True)
-    ranges = plan_key_ranges(src, key, n_splits)
-    done = 0
-    for i, (lo, hi) in enumerate(ranges):
-        marker = os.path.join(dst_dir, f"_{name}_range_{i}.done")
-        if os.path.exists(marker):
-            continue
-        if fail_after is not None and done >= fail_after:
-            raise SimulatedFailure(f"injected failure before range {i}")
-        if i + 1 < len(ranges):
-            pred = (F.col(key) >= lo) & (F.col(key) < ranges[i + 1][0])
-        else:
-            pred = (F.col(key) >= lo) & (F.col(key) <= hi)
-        (
-            src.filter(pred)
-            .write.mode("overwrite")
-            .parquet(os.path.join(table_dir, f"range={i}"))
-        )
-        with open(marker, "w") as fh:
-            fh.write(f"{lo}..{hi}\n")
-        done += 1
-    return _read_ranged_target(spark, table_dir, src)
-
-
-class WallClock:
-    """Real clock for production throttling; tests inject a fake."""
-
-    def now(self) -> float:
-        import time
-
-        return time.monotonic()
-
-    def sleep(self, seconds: float) -> None:
-        import time
-
-        time.sleep(seconds)
-
-
-def copy_table_throttled(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    name: str,
-    key: str,
-    n_splits: int = 16,
-    rows_per_second: float | None = None,
-    clock=None,
-) -> DataFrame:
-    """Throttled bulk copy (A10): the per-range copy loop paced to a
-    rows/second budget so the migration never overruns the source
-    cluster's serving capacity — the reference's rate-limit knob made
-    executable.
-
-    Pacing is token-bucket-by-completed-work: before submitting range
-    i, wait until ``start + rows_copied_so_far / rows_per_second`` —
-    i.e. the NEXT range may only start once the budget has caught up
-    with everything already copied. Range sizes come from the A5 plan
-    (exact per-range counts), so the schedule is known up front and a
-    resumable run (A9 markers) re-paces only the remaining ranges.
-
-    The clock is injectable: tests drive a fake clock and assert the
-    sleep schedule deterministically (no wall-clock flakiness); the
-    default is the real monotonic clock. On a real cluster this
-    driver-side pacing bounds SOURCE read pressure (ranges are read
-    sequentially); executor-side write throttling maps to the
-    connector's throughput option (see sources/cassandra.py) — the two
-    compose.
     """
     clock = clock or WallClock()
     src = load_table(spark, src_dir, name)
     table_dir = os.path.join(dst_dir, f"{name}.parquet")
     os.makedirs(table_dir, exist_ok=True)
-    plan = (
-        range_split_counts(src, key, n_splits)
-        .orderBy("bucket")
-        .select("min_key", "max_key", "n_rows")
-        .collect()
-    )
-    start = clock.now()
-    copied = 0
-    for i, row in enumerate(plan):
+    ranges = plan_key_ranges(src, key, n_splits)
+    start, copied, done = clock.now(), 0, 0
+    for i, (lo, hi, n_rows) in enumerate(ranges):
+        marker = os.path.join(dst_dir, f"_{name}_range_{i}.done")
+        if os.path.exists(marker):
+            continue
+        if fail_after is not None and done >= fail_after:
+            raise SimulatedFailure(f"injected failure before range {i}")
         if rows_per_second and copied:
-            earliest = start + copied / rows_per_second
-            delay = earliest - clock.now()
+            delay = start + copied / rows_per_second - clock.now()
             if delay > 0:
                 clock.sleep(delay)
-        if i + 1 < len(plan):
-            pred = (F.col(key) >= row.min_key) & (F.col(key) < plan[i + 1].min_key)
-        else:
-            pred = (F.col(key) >= row.min_key) & (F.col(key) <= row.max_key)
-        src.filter(pred).write.mode("overwrite").parquet(
-            os.path.join(table_dir, f"range={i}")
-        )
-        copied += row.n_rows
-    return _read_ranged_target(spark, table_dir, src)
+        below = F.col(key) < ranges[i + 1][0] if i + 1 < len(ranges) else F.col(key) <= hi
+        _write(src.filter((F.col(key) >= lo) & below), os.path.join(table_dir, f"range={i}"))
+        with open(marker, "w") as fh:
+            fh.write(f"{lo}..{hi}\n")
+        copied += n_rows
+        done += 1
+    # the range=i directories read back as a partition column: dropped
+    return _read_back(spark, table_dir, src.schema).select(*src.columns)
 
 
 def table_counts(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFrame:
@@ -433,32 +325,6 @@ def content_checksum(df: DataFrame, table_name: str) -> DataFrame:
         F.min("h").alias("min_hash"),
         F.max("h").alias("max_hash"),
     )
-
-
-def copy_table_compacted(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    name: str,
-    rows_per_file: int,
-) -> DataFrame:
-    """Compaction copy (the small-files lever of a migration): size the
-    target layout explicitly — ceil(rows / rows_per_file) output files
-    via round-robin repartition — instead of inheriting however many
-    fragments the source scan produced.
-
-    Why it matters at 100 TB: a migrator that writes one file per input
-    task turns a fragmented source into a fragmented target; every
-    downstream scan then pays per-file open/seek overhead. Sizing from
-    a cheap count() (metadata-only on parquet) keeps target files near
-    the optimal ~128 MB-1 GB band regardless of source layout. The
-    repartition is the one (round-robin, balanced) shuffle a compaction
-    copy fundamentally requires."""
-    src = load_table(spark, src_dir, name)
-    n_files = max(1, -(-src.count() // rows_per_file))
-    dst = os.path.join(dst_dir, f"{name}.parquet")
-    src.repartition(n_files).write.mode("overwrite").parquet(dst)
-    return spark.read.parquet(dst)
 
 
 def snapshot_diff(
@@ -547,59 +413,30 @@ def migrate_keyspace(
     interleaves them across executors; per-job fixed overhead stops
     serializing). Counts on the parquet target are metadata-only. The
     report rows are collected driver-side per TABLE NAME (10 scalars,
-    never data) and emitted as one frame in ``tables`` order."""
+    never data) and emitted as one frame in ``tables`` order; no tables
+    is an empty report.
+
+    The write goes through the copy core (``_write``); the target count
+    re-reads the files with their own footer schema, so it checks what
+    a fresh reader of the target sees, independent of the writer."""
     from concurrent.futures import ThreadPoolExecutor
 
     def copy_one(name: str):
         src = load_table(spark, src_dir, name)
         dst = os.path.join(dst_dir, f"{name}.parquet")
         n_src = src.count()
-        n_files = max(1, -(-n_src // 1_000_000))
-        src.coalesce(n_files).write.mode("overwrite").parquet(dst)
+        _write(src.coalesce(max(1, -(-n_src // 1_000_000))), dst)
         n_dst = spark.read.parquet(dst).count()
         return (name, n_src, n_dst, n_src == n_dst)
 
-    with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:
-        rows = list(ex.map(copy_one, tables))  # preserves tables order
+    rows = []
+    if tables:
+        with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:
+            rows = list(ex.map(copy_one, tables))  # preserves tables order
     return spark.createDataFrame(
         rows,
         "table_name string, n_rows_src bigint, n_rows_dst bigint, counts_match boolean",
     )
-
-
-def copy_table_clustered(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    name: str,
-    range_col: str,
-    cluster_cols: list[str],
-    n_ranges: int = 8,
-) -> DataFrame:
-    """A4 at scale, layout variant 2: copy with a RANGE-CLUSTERED
-    target — ``repartitionByRange`` on the range column (each output
-    file covers a contiguous key range, the CQL partition-ordering
-    analog) then ``sortWithinPartitions`` on the clustering columns
-    (the CQL clustering-columns analog: rows physically ordered inside
-    each file).
-
-    Why at 100 TB: parquet stores per-row-group min/max stats, so a
-    range predicate on the clustered column skips whole row groups in
-    files whose range doesn't overlap — the complement of a4d's
-    directory-level partition pruning, without the small-files risk of
-    high-cardinality partitionBy. Sorting within partitions also makes
-    downstream merge joins on the cluster key cheaper and compresses
-    better (runs of similar values).
-    """
-    src = load_table(spark, src_dir, name)
-    dst = os.path.join(dst_dir, f"{name}_clustered.parquet")
-    (
-        src.repartitionByRange(n_ranges, F.col(range_col))
-        .sortWithinPartitions(*cluster_cols)
-        .write.mode("overwrite")
-        .parquet(dst)
-    )
-    return spark.read.parquet(dst)
 
 
 def expectations_report(

@@ -115,7 +115,7 @@ def a4b_copy_roundtrip_csv(spark, sf_dir):
     """Bulk copy through a CSV sink: schema enforced on read-back (text
     formats are schema-less — the migrator replays DDL first)."""
     dst = scratch_dir_unique("a4b")
-    return mig.copy_table_via(spark, sf_dir, dst, "nation", "csv")
+    return mig.copy_table(spark, sf_dir, dst, "nation", fmt="csv")
 
 
 @register("a4c_copy_roundtrip_json", oracle="SELECT * FROM customer")
@@ -123,28 +123,29 @@ def a4c_copy_roundtrip_json(spark, sf_dir):
     """Bulk copy through a JSON-lines sink: doubles serialize at full
     precision, so the round trip is value-preserving."""
     dst = scratch_dir_unique("a4c")
-    return mig.copy_table_via(spark, sf_dir, dst, "customer", "json")
+    return mig.copy_table(spark, sf_dir, dst, "customer", fmt="json")
 
 
 @register("a4d_copy_partitioned", oracle="SELECT * FROM orders")
 def a4d_copy_partitioned(spark, sf_dir):
     """Bulk copy with a partitioned target layout (directory per order
-    year) — the 100-TB A4 shape; partition pruning on the result is
-    plan-asserted in tests/test_plans.py."""
-    from pyspark.sql import functions as F
-
+    year) — the 100-TB A4 shape: date filters become partition pruning
+    (asserted in tests/test_plans.py) and per-task output stays bounded.
+    The derived partition column is projected away on read-back."""
     dst = scratch_dir_unique("a4d")
-    return mig.copy_table_partitioned(
-        spark, sf_dir, dst, "orders", F.year("o_orderdate"), "o_year"
-    )
+    return mig.copy_table(
+        spark, sf_dir, dst, "orders",
+        layout=lambda df: df.withColumn("o_year", F.year("o_orderdate")),
+        partition_by=("o_year",),
+    ).drop("o_year")
 
 
 @register("a4e_copy_roundtrip_orc", oracle="SELECT * FROM supplier")
 def a4e_copy_roundtrip_orc(spark, sf_dir):
     """Bulk copy through an ORC sink (Spark's other native columnar
-    format) — typed like parquet, so no schema-on-read is needed."""
+    format), read back with the written schema like every copy."""
     dst = scratch_dir_unique("a4e")
-    return mig.copy_table_via(spark, sf_dir, dst, "supplier", "orc")
+    return mig.copy_table(spark, sf_dir, dst, "supplier", fmt="orc")
 
 
 @register(
@@ -161,11 +162,23 @@ def a6_writetime_copy(spark, sf_dir):
     """Writetime-preserving copy (simulated A6): per-cell WRITETIME
     metadata columns attach at read and survive the copy exactly (on
     Cassandra the connector's writetime read/write options do this with
-    real cell timestamps)."""
+    real cell timestamps; see sources/cassandra.py::reader_options).
+
+    The parquet keyspace has no cell metadata, so the simulated
+    writetime is epoch micros OF THE NAIVE WALL-CLOCK of o_orderdate
+    (DuckDB's epoch_us of the same naive timestamps). unix_micros alone
+    reads the raw internal epoch, which follows the session timezone;
+    from_utc_timestamp(col, session_tz) shifts it so the result is the
+    naive micros under ANY session zone (identity under the engine's
+    pinned UTC)."""
     dst = scratch_dir_unique("a6")
-    return mig.copy_table_with_writetime(
-        spark, sf_dir, dst, "orders", "o_orderdate",
-        ("o_totalprice", "o_orderstatus"),
+    tz = spark.conf.get("spark.sql.session.timeZone", "UTC") or "UTC"
+    wt = F.unix_micros(F.from_utc_timestamp(F.col("o_orderdate").cast("timestamp"), tz))
+    return mig.copy_table(
+        spark, sf_dir, dst, "orders",
+        layout=lambda df: df.select(
+            "*", *[wt.alias(f"{c}_writetime") for c in ("o_totalprice", "o_orderstatus")]
+        ),
     )
 
 
@@ -225,7 +238,7 @@ def a10_throttled_copy(spark, sf_dir):
     asserted in tests/test_migrate.py); hash-match proves throttling
     changes WHEN ranges copy, never WHAT arrives."""
     dst = scratch_dir_unique("a10")
-    return mig.copy_table_throttled(
+    return mig.copy_table_resumable(
         spark, sf_dir, dst, "orders", "o_orderkey", n_splits=8,
         rows_per_second=1000.0, clock=_FakeClock(),
     )
@@ -299,9 +312,14 @@ def a4f_copy_compacted(spark, sf_dir):
     table lands in ceil(rows / 20k) balanced files instead of
     inheriting the source's fragmentation — the small-files remedy a
     100-TB target layout needs (file count asserted in
-    tests/test_migrate.py)."""
+    tests/test_migrate.py). The file count comes from a metadata-only
+    parquet count, and the round-robin repartition is the one balanced
+    shuffle a compaction copy fundamentally requires."""
     dst = scratch_dir_unique("a4f")
-    return mig.copy_table_compacted(spark, sf_dir, dst, "lineitem", rows_per_file=20000)
+    return mig.copy_table(
+        spark, sf_dir, dst, "lineitem",
+        layout=lambda df: df.repartition(max(1, -(-df.count() // 20000))),
+    )
 
 
 @register(
@@ -576,8 +594,8 @@ def a16_clustered_copy_scan(spark, sf_dir):
     """Range-clustered copy + pruned scan: orders is copied via
     ``repartitionByRange(o_orderdate) + sortWithinPartitions`` (the
     Spark analog of Cassandra's partition ordering + clustering
-    columns — see operators/migrate.py::copy_table_clustered), then a
-    6-month date-range aggregate runs against the CLUSTERED copy. The
+    columns, passed to ``copy_table`` as its layout), then a 6-month
+    date-range aggregate runs against the CLUSTERED copy. The
     hash-match against the oracle (which reads the original table)
     proves the layout transform is value-preserving; the plan test
     asserts the range predicate is pushed into the clustered scan,
@@ -597,15 +615,14 @@ def a16_clustered_copy_scan(spark, sf_dir):
     dst = scratch_dir(
         "a16_" + hashlib.md5(f"{sf_dir}|tz={tz}".encode()).hexdigest()[:10]
     )
-    done = os.path.join(dst, "orders_clustered.parquet", "_SUCCESS")
-    if os.path.exists(done):
-        clustered = spark.read.parquet(
-            os.path.join(dst, "orders_clustered.parquet")
-        )
+    path = os.path.join(dst, "orders.parquet")
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        clustered = spark.read.parquet(path)
     else:
-        clustered = mig.copy_table_clustered(
-            spark, sf_dir, dst, "orders", "o_orderdate",
-            ["o_orderdate", "o_orderkey"],
+        clustered = mig.copy_table(
+            spark, sf_dir, dst, "orders",
+            layout=lambda df: df.repartitionByRange(8, F.col("o_orderdate"))
+            .sortWithinPartitions("o_orderdate", "o_orderkey"),
         )
     six_months = clustered.filter(
         (F.col("o_orderdate") >= "1996-01-01")
@@ -824,20 +841,9 @@ def a19_migration_plan_estimate(spark, sf_dir):
     migration lifecycle: estimate (a19) → copy (a4/a13) → throttle
     (a10) → validate (a7/a8/a14/a18) → diff/repair (a11/a15) →
     history (a17)."""
-    rows = []
-    tables = ["orders", "lineitem", "customer", "supplier", "events"]
-    frames = []
-    for name in tables:
-        df = t(spark, sf_dir, name)
-        frames.append(
-            df.agg(
-                F.lit(name).alias("table_name"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-        )
-    sizes = frames[0]
-    for fr in frames[1:]:
-        sizes = sizes.unionByName(fr)
+    sizes = mig.table_counts(
+        spark, sf_dir, ["orders", "lineitem", "customer", "supplier", "events"]
+    )
     return sizes.select(
         "table_name",
         "n_rows",

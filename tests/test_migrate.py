@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+from pyspark.sql import functions as F
+
 from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
 from cassandra_migrate_keyspace_from_cluster_spark.sources import cassandra as cass
 from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
@@ -12,13 +15,41 @@ from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
 from .conftest import SF_SMOKE as SMOKE_SF
 
 
-def test_copy_roundtrip_schema_and_checksum(spark):
-    src = load_table(spark, SMOKE_SF, "nation")
-    dst_dir = tempfile.mkdtemp(prefix="mig_rt_")
-    copied = mig.copy_table(spark, SMOKE_SF, dst_dir, "nation")
-    assert copied.schema == src.schema
-    a = mig.content_checksum(src, "nation").collect()
-    b = mig.content_checksum(copied, "nation").collect()
+# (copy_table keyword arguments, derived columns the layout adds)
+COPY_LAYOUTS = {
+    "parquet": ({}, ()),
+    "csv": ({"fmt": "csv"}, ()),
+    "json": ({"fmt": "json"}, ()),
+    "orc": ({"fmt": "orc"}, ()),
+    "partitioned": (
+        {
+            "layout": lambda df: df.withColumn("o_year", F.year("o_orderdate")),
+            "partition_by": ("o_year",),
+        },
+        ("o_year",),
+    ),
+    "compacted": ({"layout": lambda df: df.repartition(3)}, ()),
+    "clustered": (
+        {
+            "layout": lambda df: df.repartitionByRange(4, F.col("o_orderdate"))
+            .sortWithinPartitions("o_orderdate", "o_orderkey")
+        },
+        (),
+    ),
+}
+
+
+@pytest.mark.parametrize("layout", list(COPY_LAYOUTS))
+def test_copy_roundtrip_schema_and_checksum(spark, tmp_path, layout):
+    """Every copy layout reads back with the source schema (plus only
+    its derived columns) and the source's content checksum."""
+    kwargs, derived = COPY_LAYOUTS[layout]
+    src = load_table(spark, SMOKE_SF, "orders")
+    copied = mig.copy_table(spark, SMOKE_SF, str(tmp_path), "orders", **kwargs)
+    assert copied.columns == src.columns + list(derived)
+    assert copied.drop(*derived).schema == src.schema
+    a = mig.content_checksum(src, "orders").collect()
+    b = mig.content_checksum(copied.drop(*derived), "orders").collect()
     assert a == b
 
 
@@ -38,8 +69,6 @@ def test_resumable_copy_skips_completed_ranges(spark):
     ranges are skipped (markers untouched) and the final content equals
     the source."""
     import os
-
-    import pytest
 
     src = load_table(spark, SMOKE_SF, "orders")
     dst = tempfile.mkdtemp(prefix="mig_resume_")
@@ -87,25 +116,21 @@ def test_throttled_copy_pacing_schedule(spark, tmp_path):
     """A10: with a fake clock, the pacing schedule is exact — before
     range i starts, virtual time >= rows_copied_before_i / rate; with
     no rate, no sleeps; the copied table is identical either way."""
-    from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
     from cassandra_migrate_keyspace_from_cluster_spark.queries.part_a_migration import (
         _FakeClock,
     )
 
-    sf = "/root/testdata/sf0.001"
+    sf = SMOKE_SF
     rate = 500.0
     clock = _FakeClock()
-    out = mig.copy_table_throttled(
+    out = mig.copy_table_resumable(
         spark, sf, str(tmp_path / "thr"), "orders", "o_orderkey",
         n_splits=4, rows_per_second=rate, clock=clock,
     )
     src = spark.read.parquet(f"{sf}/orders.parquet")
     assert out.count() == src.count()
     assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
-    counts = [
-        r.n_rows
-        for r in mig.range_split_counts(src, "o_orderkey", 4).orderBy("bucket").collect()
-    ]
+    counts = [n for _, _, n in mig.plan_key_ranges(src, "o_orderkey", 4)]
     # ranges run sequentially: cumulative virtual time when the LAST
     # range starts must be >= everything-before / rate (clock only
     # advances via sleep, so the schedule is exact, not approximate)
@@ -113,12 +138,58 @@ def test_throttled_copy_pacing_schedule(spark, tmp_path):
     assert abs(clock.t - sum(counts[:-1]) / rate) < 1e-6
     # unthrottled: same bytes, zero sleeps
     clock2 = _FakeClock()
-    out2 = mig.copy_table_throttled(
+    out2 = mig.copy_table_resumable(
         spark, sf, str(tmp_path / "unthr"), "orders", "o_orderkey",
         n_splits=4, rows_per_second=None, clock=clock2,
     )
     assert not clock2.slept
     assert out2.exceptAll(out).count() == 0 and out.exceptAll(out2).count() == 0
+
+
+def test_paced_copy_resumes_and_repaces_remaining_ranges(spark, tmp_path):
+    """A9 + A10 in one loop: a paced copy interrupted after two of four
+    ranges keeps its markers; the resumed run skips those ranges, paces
+    only the ranges it copies itself (a fresh clock sleeps for every
+    range but the last, at the planned row counts), and completes the
+    table exactly."""
+    import os
+
+    from cassandra_migrate_keyspace_from_cluster_spark.queries.part_a_migration import (
+        _FakeClock,
+    )
+
+    rate = 500.0
+    dst = str(tmp_path / "paced")
+    args = (spark, SMOKE_SF, dst, "orders", "o_orderkey")
+    first = _FakeClock()
+    with pytest.raises(mig.SimulatedFailure):
+        mig.copy_table_resumable(
+            *args, n_splits=4, rows_per_second=rate, clock=first, fail_after=2
+        )
+    src = load_table(spark, SMOKE_SF, "orders")
+    counts = [n for _, _, n in mig.plan_key_ranges(src, "o_orderkey", 4)]
+    assert abs(first.t - counts[0] / rate) < 1e-6
+    markers = sorted(f for f in os.listdir(dst) if f.endswith(".done"))
+    assert len(markers) == 2
+    stamps = {m: os.stat(os.path.join(dst, m)).st_mtime_ns for m in markers}
+
+    second = _FakeClock()
+    out = mig.copy_table_resumable(
+        *args, n_splits=4, rows_per_second=rate, clock=second
+    )
+    assert len([f for f in os.listdir(dst) if f.endswith(".done")]) == 4
+    for m, ns in stamps.items():
+        assert os.stat(os.path.join(dst, m)).st_mtime_ns == ns
+    assert abs(sum(second.slept) - sum(counts[2:-1]) / rate) < 1e-6
+    assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
+
+
+def test_migrate_keyspace_without_tables_reports_nothing(spark, tmp_path):
+    """An empty table list is an empty four-column report, not a thread
+    pool error."""
+    report = mig.migrate_keyspace(spark, SMOKE_SF, str(tmp_path), tables=[])
+    assert report.columns == ["table_name", "n_rows_src", "n_rows_dst", "counts_match"]
+    assert report.count() == 0
 
 
 def test_cluster_source_token_ranges(spark):
@@ -158,10 +229,13 @@ def test_compacted_copy_file_count_and_values(spark):
     import os
 
     dst = tempfile.mkdtemp(prefix="spark_graft_test_a4f_")
-    out = mig.copy_table_compacted(spark, SMOKE_SF, dst, "orders", rows_per_file=100)
     src = load_table(spark, SMOKE_SF, "orders")
     n_rows = src.count()
     expected_files = -(-n_rows // 100)
+    out = mig.copy_table(
+        spark, SMOKE_SF, dst, "orders",
+        layout=lambda df: df.repartition(max(1, -(-df.count() // 100))),
+    )
     files = glob.glob(os.path.join(dst, "orders.parquet", "part-*"))
     assert len(files) == expected_files, (len(files), expected_files)
     assert out.count() == n_rows

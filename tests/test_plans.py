@@ -76,10 +76,12 @@ def test_partitioned_copy_prunes_partitions(spark):
     from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
 
     dst = tempfile.mkdtemp(prefix="plans_a4d_")
-    mig.copy_table_partitioned(
-        spark, SF_SMOKE, dst, "orders", F.year("o_orderdate"), "o_year"
+    mig.copy_table(
+        spark, SF_SMOKE, dst, "orders",
+        layout=lambda df: df.withColumn("o_year", F.year("o_orderdate")),
+        partition_by=("o_year",),
     )
-    df = spark.read.parquet(f"{dst}/orders_part.parquet").filter(F.col("o_year") == 1996)
+    df = spark.read.parquet(f"{dst}/orders.parquet").filter(F.col("o_year") == 1996)
     plan = physical_plan(df)
     pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert pf and "o_year" in pf[0], f"no partition pruning:\n{plan}"
