@@ -1,18 +1,30 @@
-"""Deduplication operators for a training-data pipeline.
+"""Deduplication operators for a training-data pipeline (SURVEY.md
+§2 Part F).
 
-Four tiers, trading exactness for scale (SURVEY.md §2 Part F):
-  - exact_dedup: hash-groupBy on normalized text. One shuffle on the
-    hash; survivor chosen by explicit ordering (never engine-default).
-  - jaccard_pairs: exact n-gram/token-set Jaccard within blocking keys.
-    O(block²) — correct but only viable with good blocking; the
-    verifiable ground truth for the approximate tiers.
-  - minhash_lsh_pairs: MinHash + LSH banding via MLlib — the 100-TB
-    path: candidate pairs come from band-bucket joins, not a cross
-    join. Hash seeds are engine-specific → rows-only + recall-tested
-    against jaccard_pairs (tests/test_operators.py).
-  - simhash: 60-bit SimHash per doc as pure column expressions; near-dup
-    = small Hamming distance. Pinned md5-derived token hashes (the f24
-    idiom) → cross-engine reproducible, hash-checked against DuckDB.
+  - exact_dedup: one deterministic survivor per normalized-text hash;
+    one shuffle on the 128-bit hash.
+  - Near-dup pairs ``(doc_a, doc_b, jaccard)`` — token-set Jaccard >=
+    threshold within blocking keys — on an exact-to-approximate ladder
+    that ``auto_neardup`` routes from one corpus-stats aggregate
+    (``choose_neardup_tier``):
+      postings  jaccard_pairs_postings: inverted-index self-join, pair
+                work Σ df² within blocks;
+      prefix    jaccard_pairs_prefix: SSJoin prefix filtering, exact,
+                for candidate spaces past the postings budget;
+      lsh       lsh_verified_pairs: pinned-MinHash band candidates,
+                recall < 1, when no exact dataflow fits the budget.
+    Every tier reads one persisted token-set frame
+    (``_token_set_frame``), and prefix and lsh certify their candidates
+    through one verify join (``_verified``). ``jaccard_pairs``, the
+    blocked O(block²) cross join, is the independent reference the
+    tests hold every tier to.
+  - neardup_clusters / neardup_clusters_star: connected components over
+    the pair graph (min-label propagation / small-star–large-star).
+  - Pinned-hash MinHash (minhash_signatures[_wide], minhash_bands,
+    minhash_band_candidates) and simhash60_pinned: md5-derived token
+    hashes any engine reproduces, so results are hash-checked against
+    DuckDB. minhash_lsh_pairs is the MLlib form (engine-specific seeds,
+    rows-only, recall-tested against jaccard_pairs).
 """
 
 from __future__ import annotations
@@ -104,15 +116,70 @@ def jaccard_pairs(
     )
 
 
+def _token_set_frame(
+    docs: DataFrame, blocking: list[str], id_col: str, text_col: str
+) -> DataFrame:
+    """The persisted ``(id, *blocking, toks, n)`` frame every near-dup
+    tier reads: the one place the tiers tokenize.
+
+    Replay law (see jaccard_pairs): duplicate rows collapse at ingress.
+    For the count-based postings form this is a correctness rule, not
+    just a multiplicity one: replicated (id, tok) postings would
+    multiply the per-pair intersection count while ``n`` stays per row,
+    so ``|A∪B| = n_a + n_b - inter`` could reach 0.
+
+    Persisted because every reader references it at least twice (both
+    sides of a self-join, or the candidates plus the verify join). The
+    persist point is the compact one-row-per-doc frame, not the
+    exploded postings: each join side fuses its own explode on top of
+    the small cache scan (r13 A/B at sf0.1: no persist 1.32 s,
+    post-explode persist 1.15 s, this shape 0.88 s)."""
+    return bounded_persist(
+        docs.select(
+            F.col(id_col).alias("id"),
+            *[F.col(b) for b in blocking],
+            F.array_distinct(tokens(text_col)).alias("toks"),
+        )
+        .distinct()
+        .withColumn("n", F.size("toks"))
+    )
+
+
+def _verified(
+    cand: DataFrame, sets: DataFrame, blocking: list[str], threshold: float
+) -> DataFrame:
+    """Certify ``(doc_a, doc_b)`` candidates exactly: join both sides to
+    the token-set frame, require equal blocking keys, and keep
+    ``round(|A∩B| / (n_a + n_b - |A∩B|), 6) >= threshold``. The one
+    verify join behind the prefix and lsh tiers."""
+
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col("id").alias(f"doc_{s}"),
+            *[F.col(b).alias(f"__{s}_{b}") for b in blocking],
+            F.col("toks").alias(f"toks_{s}"),
+            F.col("n").alias(f"n_{s}"),
+        )
+
+    out = cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
+    for b in blocking:
+        out = out.filter(F.col(f"__a_{b}") == F.col(f"__b_{b}"))
+    inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    jac = inter.cast("double") / (
+        F.col("n_a") + F.col("n_b") - inter
+    ).cast("double")
+    return (
+        out.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def jaccard_pairs_postings(
     docs: DataFrame,
     blocking: list[str],
     threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    df_cap: int | None = None,
-    stats: dict | None = None,
-    token_sets: DataFrame | None = None,
 ) -> DataFrame:
     """Exact token-set Jaccard via an inverted index — same result as
     ``jaccard_pairs``, different (scalable) dataflow.
@@ -120,92 +187,20 @@ def jaccard_pairs_postings(
     Shape: explode docs into (token, id) postings; self-join postings on
     token (+ blocking keys) so a candidate pair appears once per SHARED
     token; count rows per pair = |A∩B|; then
-    ``|A∪B| = |A| + |B| - |A∩B|`` needs no second pass over tokens.
-    Pairs sharing zero tokens never materialize, so the pair space is
-    sum-over-tokens df(t)² within blocks instead of block² — the
-    standard exact-similarity-join shape (cf. prefix-filtering
-    literature). Hazard at 100 TB: Zipfian df(t)² blowup on stopword
-    tokens. Defenses: AQE skew split (always on) and the OPT-IN
-    ``df_cap`` pre-filter below.
+    ``|A∪B| = |A| + |B| - |A∩B|`` needs no second pass over tokens and
+    no verify join. Pairs sharing zero tokens never materialize, so the
+    pair space is sum-over-tokens df(t)² within blocks instead of
+    block² — the standard exact-similarity-join shape. Hazard at
+    100 TB: Zipfian df(t)² blowup on stopword tokens; AQE skew split is
+    the always-on defense, and ``auto_neardup`` routes a candidate space
+    past its budget to the prefix tier."""
+    return _postings(
+        _token_set_frame(docs, blocking, id_col, text_col), blocking, threshold
+    )
 
-    ``df_cap``: drop tokens with block-scoped document frequency
-    ``df > df_cap`` from CANDIDATE GENERATION, then verify the distinct
-    surviving pairs exactly on the full token sets (``array_intersect``,
-    as in ``jaccard_pairs_prefix``). This collapses the df² blowup —
-    a stopword shared by every doc in a block generates |block|² pair
-    rows yet certifies nothing — and it is provably LOSSLESS under a
-    per-block guard, the capped-postings theorem:
 
-      For a pair A, B with Jaccard ≥ t and n = max(|A|, |B|), the
-      overlap i = |A∩B| satisfies i ≥ t·|A∪B| ≥ t·n, so i ≥ ⌈t·n⌉.
-      If the larger doc carries h < ⌈t·n⌉ heavy tokens (df > df_cap),
-      then fewer than i of the shared tokens can be heavy — at least
-      one shared token is light, and light tokens survive the filter
-      on BOTH sides (df is block-scoped), so the pair is generated.
-
-    The final filter accepts ``round(jaccard, 6) >= t``, which a pair
-    with true J as low as ``t − 5e-7`` can satisfy (half-away rounding
-    at 6dp), so the guard's t is the EFFECTIVE acceptance threshold
-    ``t − 5e-7`` — the theorem then covers every pair the rounded
-    filter can admit, making the losslessness law literally universal
-    rather than universal-up-to-rounding.
-
-    The guard is enforced per block: the filter applies only in blocks
-    where EVERY member doc has ``h < ⌈t_eff·n⌉`` (computed with the
-    same ``ceil(x − 1e-9)`` under-approximation as the prefix form,
-    which can only tighten the guard — never admit an unsafe drop;
-    smaller alpha makes ``h < alpha`` HARDER, i.e. fewer blocks
-    capped, which is the safe direction). Blocks
-    with any violating doc keep all their postings, so capped and
-    uncapped results are identical for ANY (df_cap, threshold) —
-    pytest-asserted as a law, alongside a non-vacuity test that the
-    filter actually drops stopword postings on a crafted corpus.
-    Default ``df_cap=None`` preserves the original single-pass
-    count-based dataflow byte-for-byte (no verify join).
-
-    ``stats`` (opt-in, runs two small eager counts): records
-    ``postings_total``, ``postings_dropped``, ``blocks_capped``.
-    """
-    # replay law (see jaccard_pairs): duplicate rows collapse at
-    # ingress — in THIS form they are not just a multiplicity wart but
-    # a correctness one: replicated (id, tok) postings multiply the
-    # per-pair intersection count while n_a/n_b stay per-row, so
-    # |A∪B| = n_a + n_b - inter can reach 0 (division by zero).
-    # ``token_sets`` (r13): a caller that already built AND PERSISTED
-    # the replay-collapsed (id, *blocking, toks) frame — auto_neardup's
-    # stats pass — hands it in so the corpus is tokenized once per
-    # auto-routed run instead of once for stats plus once here
-    # (ADVICE r12 second half; f2b A/B numbers in OPTIMIZATION_r13.md).
-    if token_sets is None:
-        # persisted: every downstream form references the frame at
-        # least twice (the self-join's two sides; the capped form's
-        # df filter + verify) — without persist the scan+tokenize+
-        # distinct runs twice (r13 A/B: none 1.32 s vs 0.88 s at
-        # sf0.1). The persist point is the COMPACT pre-explode frame
-        # (one row per doc, token array), not the exploded postings:
-        # caching post-explode materializes |tokens| rows where |docs|
-        # rows carry the same information, and each side re-reads that
-        # larger cache while losing the fused explode→join codegen
-        # (r13 A/B: post-explode persist 1.15 s vs pre-explode
-        # 0.88 s). Each join side now fuses its own explode on top of
-        # the small cache scan. MEMORY_AND_DISK degrades to local-disk
-        # reads when the frame outgrows memory; at 100 TB this is the
-        # materialized doc→token-set table every exact-similarity
-        # system builds anyway (cf. jaccard_pairs_prefix, which
-        # persists nothing but scans twice — pick per corpus regime).
-        token_sets = bounded_persist(
-            docs.select(
-                F.col(id_col).alias("id"),
-                *[F.col(b) for b in blocking],
-                F.array_distinct(tokens(text_col)).alias("toks"),
-            ).distinct()
-        )
-    d = token_sets.withColumn("n", F.size("toks"))
-    if df_cap is not None:
-        return _jaccard_pairs_postings_capped(
-            d, blocking, threshold, df_cap, stats
-        )
-    post = d.select("id", "n", *blocking, F.explode("toks").alias("tok"))
+def _postings(sets: DataFrame, blocking: list[str], threshold: float) -> DataFrame:
+    post = sets.select("id", "n", *blocking, F.explode("toks").alias("tok"))
     a, b = post.alias("a"), post.alias("b")
     cond = [F.col("a.tok") == F.col("b.tok")]
     cond += [F.col(f"a.{k}") == F.col(f"b.{k}") for k in blocking]
@@ -230,83 +225,6 @@ def jaccard_pairs_postings(
     )
 
 
-def _jaccard_pairs_postings_capped(
-    d: DataFrame,
-    blocking: list[str],
-    threshold: float,
-    df_cap: int,
-    stats: dict | None,
-) -> DataFrame:
-    """df-capped candidate generation + exact verify — see the
-    ``df_cap`` contract and theorem in ``jaccard_pairs_postings``.
-    ``d`` is the (id, *blocking, toks, n) frame built there."""
-    post = d.select("id", "n", *blocking, F.explode("toks").alias("tok"))
-    dft = post.groupBy(*blocking, "tok").agg(F.count(F.lit(1)).alias("df"))
-    enriched = post.join(dft, [*blocking, "tok"]).withColumn(
-        "heavy", F.col("df") > df_cap
-    )
-    # per-doc guard: h (heavy-token count) vs the minimum overlap any
-    # qualifying pair must share with this doc as its larger side.
-    # alpha derives from the EFFECTIVE acceptance threshold t - 5e-7
-    # (the final filter passes round(J,6) >= t, which true J down to
-    # t - 5e-7 can reach) and is under-approximated like the prefix
-    # form's ε-guard — both can only TIGHTEN the guard, never admit an
-    # unsafe drop.
-    eff = threshold - 5e-7
-    doc_guard = enriched.groupBy("id", *blocking).agg(
-        F.sum(F.col("heavy").cast("int")).alias("h"),
-        F.first("n").alias("n"),
-    ).withColumn(
-        "alpha", F.greatest(F.lit(1), F.ceil(F.col("n") * eff - 1e-9))
-    )
-    block_ok = doc_guard.groupBy(*blocking).agg(
-        F.min((F.col("h") < F.col("alpha")).cast("int")).alias("blk_capped")
-    )
-    kept = enriched.join(block_ok, blocking).filter(
-        ~(F.col("heavy") & (F.col("blk_capped") == 1))
-    )
-    # persisted for the same reason as the uncapped form: both sides of
-    # the candidate self-join read it.
-    kept = bounded_persist(kept.select("id", *blocking, "tok"))
-    if stats is not None:
-        total = post.count()
-        remaining = kept.count()
-        stats["postings_total"] = total
-        stats["postings_dropped"] = total - remaining
-        stats["blocks_capped"] = (
-            block_ok.filter(F.col("blk_capped") == 1).count()
-        )
-    a, b = kept.alias("a"), kept.alias("b")
-    cond = [F.col("a.tok") == F.col("b.tok")]
-    cond += [F.col(f"a.{k}") == F.col(f"b.{k}") for k in blocking]
-    cond.append(F.col("a.id") < F.col("b.id"))
-    cand = (
-        a.join(b, cond)
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
-    )
-    da = d.select(
-        F.col("id").alias("doc_a"),
-        F.col("toks").alias("toks_a"),
-        F.col("n").alias("n_a"),
-    )
-    db = d.select(
-        F.col("id").alias("doc_b"),
-        F.col("toks").alias("toks_b"),
-        F.col("n").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = inter.cast("double") / (
-        F.col("n_a") + F.col("n_b") - inter
-    ).cast("double")
-    return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def jaccard_pairs_prefix(
     docs: DataFrame,
     blocking: list[str],
@@ -327,7 +245,7 @@ def jaccard_pairs_prefix(
     frequency (rarest first — the order is a pruning heuristic, the
     theorem only needs consistency), join only PREFIX postings,
     length-filter (``t·n_a ≤ n_b ≤ n_a/t``), then verify the distinct
-    candidate pairs exactly with ``array_intersect``.
+    candidate pairs exactly (``_verified``).
 
     When to choose which (both are pytest-equality-checked):
       - postings join: candidate work Σ_t df(t)² over ALL tokens; best
@@ -348,14 +266,17 @@ def jaccard_pairs_prefix(
     ``⌈t_eff·n⌉`` is computed as ``ceil(t_eff·n − 1e-9)`` — both
     conventions can only UNDER-prune (more candidates, never missed
     pairs)."""
+    sets = _token_set_frame(docs, blocking, id_col, text_col)
+    return _verified(
+        _prefix_candidates(sets, blocking, threshold), sets, blocking, threshold
+    )
+
+
+def _prefix_candidates(
+    sets: DataFrame, blocking: list[str], threshold: float
+) -> DataFrame:
     eff = threshold - 5e-7
-    # replay law (see jaccard_pairs): duplicate rows collapse at ingress
-    d = docs.select(
-        F.col(id_col).alias("id"),
-        *[F.col(b) for b in blocking],
-        F.array_distinct(tokens(text_col)).alias("toks"),
-    ).distinct().withColumn("n", F.size("toks"))
-    post = d.select("id", "n", *blocking, F.explode("toks").alias("tok"))
+    post = sets.select("id", "n", *blocking, F.explode("toks").alias("tok"))
     dft = post.groupBy(*blocking, "tok").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("id").orderBy("df", "tok")
     pref = (
@@ -374,30 +295,10 @@ def jaccard_pairs_prefix(
         F.col("b.n") >= F.col("a.n") * eff - 1e-9,
         F.col("a.n") >= F.col("b.n") * eff - 1e-9,
     ]
-    cand = (
+    return (
         a.join(b, cond)
         .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
         .distinct()
-    )
-    da = d.select(
-        F.col("id").alias("doc_a"),
-        F.col("toks").alias("toks_a"),
-        F.col("n").alias("n_a"),
-    )
-    db = d.select(
-        F.col("id").alias("doc_b"),
-        F.col("toks").alias("toks_b"),
-        F.col("n").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = inter.cast("double") / (
-        F.col("n_a") + F.col("n_b") - inter
-    ).cast("double")
-    return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -744,10 +645,11 @@ def minhash_signatures_wide(
     shingle count fits ``vocab_broadcast_budget``, hash the DISTINCT
     vocabulary once and broadcast-join it back onto the postings
     (values bit-identical — same md5 per (seed, shingle); equality
-    probed over the full sf0.1 signature set). The budget check is a
-    real count on the (persisted) distinct frame, so the decision is
-    runtime-adaptive, not a local[32] constant: a 100-TB vocabulary
-    blows the budget and takes the inline path unchanged.
+    probed over the full sf0.1 signature set). The budget check counts
+    the (persisted) distinct frame up to ``budget + 1`` rows, so the
+    decision is runtime-adaptive, not a local[32] constant, and a
+    100-TB vocabulary that blows the budget stops counting at the
+    bound before taking the inline path unchanged.
     Interleaved A/B at sf0.1: inline 4.09 s vs vocab-broadcast
     1.87 s for the signature build."""
     toks = (
@@ -764,7 +666,8 @@ def minhash_signatures_wide(
         # working set moves on (a plain persist would leak across a
         # long session's many minhash calls)
         vocab = bounded_persist(toks.select("tk").distinct())
-        if vocab.count() <= vocab_broadcast_budget:
+        n_vocab = vocab.limit(vocab_broadcast_budget + 1).count()
+        if n_vocab <= vocab_broadcast_budget:
             hashed = toks.join(
                 F.broadcast(vocab.select("tk", *hash_cols())), "tk"
             ).select(id_col, *[f"h{j}" for j in range(n_hashes)])
@@ -925,9 +828,6 @@ def lsh_verified_pairs(
     threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_hashes: int = 16,
-    band_rows: int | None = None,
-    k_shingle: int = 1,
 ) -> DataFrame:
     """Pinned-hash LSH candidates rescored to the SAME verified-pairs
     contract as ``jaccard_pairs_postings`` / ``jaccard_pairs_prefix``:
@@ -936,61 +836,32 @@ def lsh_verified_pairs(
     tier of the near-dup ladder (``auto_neardup``): candidate work is
     ∝ Σ band-bucket² (never corpus², never Σ df² — the exact tiers'
     floor), at the cost of recall < 1 per the banding S-curve
-    (pytest floor vs the exact tier).
+    (pytest floor vs the exact tier)."""
+    return _verified(
+        _lsh_candidates(docs, threshold, id_col, text_col),
+        _token_set_frame(docs, blocking, id_col, text_col),
+        blocking,
+        threshold,
+    )
 
-    Two deliberate defaults keep the tier CONSISTENT with what it
-    verifies: ``k_shingle=1`` — banding measures the same UNIGRAM
-    token sets the rescore certifies (3-shingle banding, right for
-    f24's sequence-sensitive dedup, is near-blind to same-tokens-
-    different-positions pairs the unigram contract accepts); and
-    ``band_rows=None`` — derived from the threshold via
-    ``lsh_band_rows_for_threshold``, because a band height whose
-    S-curve midpoint sits above the acceptance threshold silently
-    collapses recall. Explicit values are respected."""
-    if band_rows is None:
-        band_rows = lsh_band_rows_for_threshold(threshold, n_hashes)
-    cand = minhash_band_candidates(
-        docs, n_hashes=n_hashes, band_rows=band_rows,
-        id_col=id_col, text_col=text_col, k_shingle=k_shingle,
-    )
-    d = docs.select(
-        F.col(id_col).alias("id"),
-        *[F.col(b) for b in blocking],
-        F.array_distinct(tokens(text_col)).alias("toks"),
-    ).distinct()
-    da = d.select(
-        F.col("id").alias("doc_a"),
-        *[F.col(b).alias(f"__a_{b}") for b in blocking],
-        F.col("toks").alias("toks_a"),
-    )
-    db = d.select(
-        F.col("id").alias("doc_b"),
-        *[F.col(b).alias(f"__b_{b}") for b in blocking],
-        F.col("toks").alias("toks_b"),
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size(F.array_union("toks_a", "toks_b"))
-    jac = inter.cast("double") / union.cast("double")
-    out = cand.join(da, "doc_a").join(db, "doc_b")
-    for b in blocking:
-        out = out.filter(F.col(f"__a_{b}") == F.col(f"__b_{b}"))
-    return (
-        out.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+
+def _lsh_candidates(
+    docs: DataFrame, threshold: float, id_col: str, text_col: str
+) -> DataFrame:
+    """Band candidates over 16 pinned min-hashes of UNIGRAM shingles —
+    banding measures the same token sets the verify certifies (3-shingle
+    banding, right for f24's sequence-sensitive dedup, is near-blind to
+    same-tokens-different-positions pairs the unigram contract accepts)
+    — with the band height derived from the threshold, because a band
+    whose S-curve midpoint sits above it silently collapses recall
+    (``lsh_band_rows_for_threshold``)."""
+    return minhash_band_candidates(
+        docs, n_hashes=16, band_rows=lsh_band_rows_for_threshold(threshold, 16),
+        id_col=id_col, text_col=text_col, k_shingle=1,
+    ).select("doc_a", "doc_b")
 
 
 # -- application-layer near-dup tier selection (the f4d idiom) --------------
-
-#: The near-dup ladder, exact-cheapest first. Values take
-#: (docs, blocking, threshold, id_col, text_col) and return verified
-#: (doc_a, doc_b, jaccard >= threshold) pairs; names map to the
-#: registry QueryIDs that exercise each dataflow.
-NEARDUP_TIERS = {
-    "postings": jaccard_pairs_postings,   # f2
-    "prefix": jaccard_pairs_prefix,       # f43-family SSJoin shape
-    "lsh": lsh_verified_pairs,            # f24 candidates + exact rescore
-}
 
 #: Documented candidate-pair budget: ~50M pair rows is tens of seconds
 #: of join work on local[32] and a comfortable per-stage shuffle on a
@@ -998,80 +869,40 @@ NEARDUP_TIERS = {
 #: bottleneck, not the verify.
 NEARDUP_PAIR_BUDGET = 50_000_000
 
+#: Tokens with a block-scoped document frequency above this are heavy
+#: (stopword-like): their collisions are what rare-first prefix
+#: ordering prunes.
+_HEAVY_DF = 64
 
-def neardup_corpus_stats(
-    docs: DataFrame,
-    blocking: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    heavy_df: int = 64,
-    token_sets: DataFrame | None = None,
-) -> dict:
-    """Corpus stats for ``choose_neardup_tier`` — one linear tokenize
-    pass cached across the two stats jobs (the pair-space aggregate and
-    the doc count share the persisted tokenized frame, so tokenization
-    runs once here; ``token_sets`` lets the caller hand in an
-    already-persisted frame — auto_neardup does, and passes the same
-    frame to the routed exact tier, so an auto-routed run tokenizes the
-    corpus exactly ONCE end-to-end — r13, ADVICE r12 second half; the
-    near-dup analogue of f4d's count+dim probe):
 
-      n_docs        distinct (replay-collapsed) docs;
+def _neardup_stats(sets: DataFrame, blocking: list[str]) -> dict:
+    """Routing stats for ``choose_neardup_tier``, one aggregate over the
+    token-set frame:
+
       cand_pairs    Σ over (block, token) of df·(df−1)/2 — the EXACT
                     candidate-pair space the postings join generates;
-      light_pairs   the same sum restricted to tokens with
-                    df <= heavy_df — the floor no df-based pruning
-                    (df_cap, prefix ordering) can remove, because those
-                    collisions come from rare-token structure, not
-                    stopwords;
-      heavy_share   1 − light/cand — the Zipfian fraction of the
-                    candidate work, i.e. how much a prefix/df_cap
-                    filter can collapse.
+      light_pairs   the same sum over tokens with df <= ``_HEAVY_DF`` —
+                    the floor prefix ordering cannot prune, because
+                    those collisions come from rare-token structure,
+                    not stopwords.
 
     Sums are computed in DOUBLE: they are routing estimates, and at
-    1e9+ docs Σ df² exceeds int64 by construction.
-    """
-    # Cached: both stats jobs (the aggregate collect below and the
-    # n_docs count) consume this frame — without the persist each job
-    # would re-scan and re-tokenize the corpus (ADVICE r12). A caller-
-    # provided frame is the caller's to persist/unpersist.
-    own = token_sets is None
-    d = token_sets
-    if own:
-        d = bounded_persist(
-            docs.select(
-                F.col(id_col).alias("id"),
-                *[F.col(b) for b in blocking],
-                F.array_distinct(tokens(text_col)).alias("toks"),
-            ).distinct()
-        )
-    post = d.select(*blocking, F.explode("toks").alias("tok"))
-    pairs_expr = (
-        F.col("df").cast("double") * (F.col("df") - 1).cast("double") / 2.0
-    )
+    1e9+ docs Σ df² exceeds int64 by construction."""
+    pairs = F.col("df").cast("double") * (F.col("df") - 1).cast("double") / 2.0
     row = (
-        post.groupBy(*blocking, "tok")
+        sets.select(*blocking, F.explode("toks").alias("tok"))
+        .groupBy(*blocking, "tok")
         .agg(F.count(F.lit(1)).alias("df"))
         .select(
-            F.coalesce(F.sum(pairs_expr), F.lit(0.0)).alias("cand"),
+            F.coalesce(F.sum(pairs), F.lit(0.0)).alias("cand"),
             F.coalesce(
-                F.sum(F.when(F.col("df") <= heavy_df, pairs_expr)
-                      .otherwise(F.lit(0.0))),
+                F.sum(F.when(F.col("df") <= _HEAVY_DF, pairs).otherwise(0.0)),
                 F.lit(0.0),
             ).alias("light"),
         )
         .collect()[0]
     )
-    n_docs = d.count()
-    if own:
-        d.unpersist(blocking=False)
-    cand, light = float(row.cand), float(row.light)
-    return {
-        "n_docs": n_docs,
-        "cand_pairs": cand,
-        "light_pairs": light,
-        "heavy_share": 0.0 if cand == 0 else 1.0 - light / cand,
-    }
+    return {"cand_pairs": float(row.cand), "light_pairs": float(row.light)}
 
 
 #: Below this many candidate pair rows the single-pass postings join
@@ -1079,14 +910,14 @@ def neardup_corpus_stats(
 #: extra passes (df join, window, verify join) to prune candidates,
 #: and pruning only pays when the pruned volume is large in absolute
 #: terms. Calibrated to the measured A/B on the sf0.1 fixture corpus
-#: (2.86M candidates, heavy_share 0.64 — the profile heuristic said
-#: prefix, the measurement says postings is ~2x FASTER there); 20M
-#: pair rows ≈ 640 MB of shuffle, still comfortably one-pass.
+#: (2.86M candidates, 64 % of them from heavy tokens — the profile
+#: heuristic said prefix, the measurement says postings is ~2x FASTER
+#: there); 20M pair rows ≈ 640 MB of shuffle, still comfortably
+#: one-pass.
 POSTINGS_PAIR_BUDGET = 20_000_000
 
 
 def choose_neardup_tier(
-    n_docs: int,
     cand_pairs: float,
     light_pairs: float,
     exact_required: bool = False,
@@ -1100,15 +931,15 @@ def choose_neardup_tier(
     the lsh tier trades recall, which no relational optimizer may
     silently spend).
 
-    Decision table (returns a key of ``NEARDUP_TIERS``):
+    Decision table (returns "postings", "prefix" or "lsh"):
 
       1. cand_pairs <= postings_pair_budget
            -> "postings": the whole candidate space is small enough
               that one shuffle pass over it beats prefix's 3 extra
               passes (df join, window, verify join) REGARDLESS of the
               df profile. This boundary is MEASURED, not assumed: the
-              sf0.1 fixture corpus (2.86M candidates, heavy_share
-              0.64) runs ~2x faster through postings even though its
+              sf0.1 fixture corpus (2.86M candidates, 64 % from heavy
+              tokens) runs ~2x faster through postings even though its
               profile is stopword-heavy — absolute pruned volume, not
               profile shape, is what pays for prefix's fixed cost.
       2. light_pairs <= pair_budget (but 1 failed)
@@ -1129,10 +960,10 @@ def choose_neardup_tier(
     ladder's): growing ``cand_pairs`` moves postings → prefix at the
     postings budget; growing ``light_pairs`` moves prefix → lsh at the
     pair budget; no growth direction ever routes back up. (An earlier
-    draft routed the postings↔prefix split on heavy_share — the real
-    sf0.1 corpus proved that a misroute, see rule 1.)
+    draft routed the postings↔prefix split on the heavy-token share —
+    the real sf0.1 corpus proved that a misroute, see rule 1.)
     """
-    if n_docs < 0 or cand_pairs < 0 or light_pairs < 0:
+    if cand_pairs < 0 or light_pairs < 0:
         raise ValueError("stats must be non-negative")
     if light_pairs > cand_pairs:
         raise ValueError("light_pairs cannot exceed cand_pairs")
@@ -1160,9 +991,7 @@ def auto_neardup(
     exact_required: bool = False,
     pair_budget: float = NEARDUP_PAIR_BUDGET,
     postings_pair_budget: float = POSTINGS_PAIR_BUDGET,
-    heavy_df: int = 64,
     chosen: dict | None = None,
-    **tier_kwargs,
 ) -> DataFrame:
     """Dispatch verified near-dup pair generation through
     ``choose_neardup_tier`` (the f4d idiom for dedup: corpus stats →
@@ -1170,44 +999,24 @@ def auto_neardup(
     contract — ``(doc_a, doc_b, jaccard)`` with token-set Jaccard >=
     threshold within the blocking keys — so the route changes the
     DATAFLOW (and, for lsh only, the recall), never the meaning of a
-    pair. ``chosen`` (opt-in) records the decision and the stats that
-    drove it; ``tier_kwargs`` pass through to the tier operator (e.g.
-    ``df_cap`` for postings, ``n_hashes``/``band_rows`` for lsh)."""
-    # One tokenize pass end-to-end (r13, ADVICE r12 second half): build
-    # and persist the replay-collapsed token-set frame ONCE, feed it to
-    # the stats jobs AND to the routed postings tier. Before this the
-    # stats pass tokenized once and the tier tokenized again from raw
-    # input — the docstring called that "the honest price"; sharing the
-    # persisted frame removes it without changing any tier's dataflow
-    # (the frame is exactly what the postings tier would have built).
-    sets = bounded_persist(
-        docs.select(
-            F.col(id_col).alias("id"),
-            *[F.col(b) for b in blocking],
-            F.array_distinct(tokens(text_col)).alias("toks"),
-        ).distinct()
-    )
-    stats = neardup_corpus_stats(
-        docs, blocking, id_col=id_col, text_col=text_col, heavy_df=heavy_df,
-        token_sets=sets,
-    )
+    pair. The token-set frame is built and persisted once and feeds the
+    stats aggregate, the routed tier and its verify join, so a routed
+    run tokenizes the corpus once for the exact tiers (the lsh tier's
+    band signatures shingle the text separately). ``chosen`` (opt-in)
+    records the decision and the stats that drove it."""
+    sets = _token_set_frame(docs, blocking, id_col, text_col)
+    stats = _neardup_stats(sets, blocking)
     tier = choose_neardup_tier(
-        stats["n_docs"], stats["cand_pairs"], stats["light_pairs"],
+        stats["cand_pairs"], stats["light_pairs"],
         exact_required=exact_required, pair_budget=pair_budget,
         postings_pair_budget=postings_pair_budget,
     )
     if chosen is not None:
         chosen.update({"tier": tier, **stats})
     if tier == "postings":
-        return NEARDUP_TIERS[tier](
-            docs, blocking, threshold, id_col=id_col, text_col=text_col,
-            token_sets=sets, **tier_kwargs,
-        )
-    # prefix/lsh tiers build different internal shapes (df-ordered
-    # prefixes / shingle signatures) from the raw input; they do not
-    # consume the token-set frame, so release it promptly.
-    sets.unpersist(blocking=False)
-    return NEARDUP_TIERS[tier](
-        docs, blocking, threshold, id_col=id_col, text_col=text_col,
-        **tier_kwargs,
-    )
+        return _postings(sets, blocking, threshold)
+    if tier == "prefix":
+        cand = _prefix_candidates(sets, blocking, threshold)
+    else:
+        cand = _lsh_candidates(docs, threshold, id_col, text_col)
+    return _verified(cand, sets, blocking, threshold)

@@ -163,89 +163,6 @@ def test_jaccard_postings_equals_crossjoin(spark):
     assert hi_post == hi_pref and hi_pref
 
 
-def test_jaccard_postings_df_cap_law(spark):
-    """The opt-in df_cap pre-filter must be invisible in the results for
-    ANY (cap, threshold): blocks where a doc violates the capped-postings
-    theorem's guard (h < ceil(t*n)) keep all their postings, and the
-    surviving candidates are re-verified on full token sets. Caps span
-    aggressive (2), moderate (25), and no-op (1e6) regimes."""
-    docs = load_table(spark, SF_T2, "documents")
-    for thr in (0.6, 0.7):
-        base = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.jaccard_pairs_postings(
-                docs, ["lang", "source"], thr
-            ).collect()
-        }
-        assert base
-        for cap in (2, 25, 10**6):
-            capped = {
-                (r.doc_a, r.doc_b, r.jaccard)
-                for r in dd.jaccard_pairs_postings(
-                    docs, ["lang", "source"], thr, df_cap=cap
-                ).collect()
-            }
-            assert capped == base, (thr, cap)
-
-
-def test_jaccard_postings_df_cap_drops_stopwords(spark):
-    """Non-vacuity: on a corpus where one stopword rides every doc but
-    each doc has plenty of distinctive tokens, the cap must actually
-    drop the stopword postings (the df² hazard it exists for) while the
-    pair results stay identical."""
-    rows = [
-        # 12 docs, all contain 'the'; doc i shares its other 9 tokens
-        # with doc i+1 only when i is even (pairs 0-1, 2-3, ...).
-        (i, "en", "web",
-         "the " + " ".join(f"w{(i // 2)}_{j}" for j in range(9)))
-        for i in range(12)
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id bigint, lang string, source string, text string"
-    )
-    base = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dd.jaccard_pairs_postings(docs, ["lang", "source"], 0.6).collect()
-    }
-    assert base == {(2 * k, 2 * k + 1, 1.0) for k in range(6)}
-    stats: dict = {}
-    capped = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dd.jaccard_pairs_postings(
-            docs, ["lang", "source"], 0.6, df_cap=3, stats=stats
-        ).collect()
-    }
-    assert capped == base
-    # every doc: n=10, h=1 ('the', df=12 > 3), guard 1 < ceil(6) holds
-    # -> block capped, the 12 'the' postings dropped.
-    assert stats["blocks_capped"] == 1 and stats["postings_dropped"] == 12
-
-
-def test_jaccard_postings_df_cap_guard_blocks_unsafe_drop(spark):
-    """Adversarial guard case: identical one-token docs. Every token is
-    heavy under df_cap=1 and ALSO the doc's entire overlap budget
-    (h = 1 = ceil(t*n)), so the guard must refuse to cap the block —
-    dropping 'x' would silently lose the J=1.0 pairs."""
-    rows = [(i, "en", "web", "x") for i in range(5)]
-    docs = spark.createDataFrame(
-        rows, "doc_id bigint, lang string, source string, text string"
-    )
-    base = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dd.jaccard_pairs_postings(docs, ["lang", "source"], 0.6).collect()
-    }
-    assert len(base) == 10  # C(5,2) identical pairs
-    stats: dict = {}
-    capped = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dd.jaccard_pairs_postings(
-            docs, ["lang", "source"], 0.6, df_cap=1, stats=stats
-        ).collect()
-    }
-    assert capped == base
-    assert stats["blocks_capped"] == 0 and stats["postings_dropped"] == 0
-
-
 def test_ivf_recall_and_probe_monotonicity(spark):
     """f5b (IVF) recall vs the exact f4 truth. Random gaussian vectors
     are IVF's worst case (no real cluster structure), so the bound is
@@ -1025,8 +942,13 @@ def test_hof_let_binds_value_once_and_nests(spark):
 def test_jaccard_three_forms_on_adversarial_shapes(spark):
     """The three exact-Jaccard implementations must agree on shapes the
     fixture corpus doesn't exercise: identical docs, strict token
-    subsets, single-token docs, disjoint docs, and a token shared by
-    every doc in a block (stopword df spike). Seeded, deterministic."""
+    subsets, single-token docs, disjoint docs, a token shared by every
+    doc in a block (stopword df spike), a replayed row, NULL and empty
+    text, and identical docs whose blocking key is NULL. The lsh tier
+    must return a subset of their pairs, ``auto_neardup`` exactly their
+    pairs, and every form nothing on an empty corpus. Pairs are
+    compared as sorted lists, so a replayed row that multiplied a pair
+    would show. Seeded, deterministic."""
     rows = [
         (1, "en", "web", "a b c d"),
         (2, "en", "web", "a b c d"),        # identical to 1
@@ -1038,26 +960,38 @@ def test_jaccard_three_forms_on_adversarial_shapes(spark):
         (8, "fr", "web", "a b c d"),        # other block again
         (9, "en", "web", "b c d a"),        # same set as 1, other order
         (10, "en", "web", "a a b b c c d"), # dup tokens collapse distinct
+        (1, "en", "web", "a b c d"),        # replayed row: collapses
+        (11, "en", "web", None),            # NULL text: no tokens
+        (12, "en", "web", ""),              # empty text: one empty token
+        (13, None, "web", "m n o"),         # NULL blocking key: never a
+        (14, None, "web", "m n o"),         # pair, even when identical
     ]
     docs = spark.createDataFrame(
         rows, "doc_id bigint, lang string, source string, text string"
     )
+    blocking = ["lang", "source"]
+
+    def pairs(df):
+        return sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
+
     for thr in (0.3, 0.6, 1.0):
-        forms = [
-            dd.jaccard_pairs(docs, ["lang", "source"], thr),
-            dd.jaccard_pairs_postings(docs, ["lang", "source"], thr),
-            dd.jaccard_pairs_prefix(docs, ["lang", "source"], thr),
-        ]
-        sets = [
-            {(r.doc_a, r.doc_b, r.jaccard) for r in f.collect()} for f in forms
-        ]
-        assert sets[0] == sets[1] == sets[2], (thr, sets)
+        want = pairs(dd.jaccard_pairs(docs, blocking, thr))
+        assert want == pairs(dd.jaccard_pairs_postings(docs, blocking, thr))
+        assert want == pairs(dd.jaccard_pairs_prefix(docs, blocking, thr))
+        assert set(pairs(dd.lsh_verified_pairs(docs, blocking, thr))) <= set(want)
+        assert want == pairs(dd.auto_neardup(docs, blocking, thr)), thr
     # sanity at thr=1.0: exactly the identical-set pairs within block
     exact = {
         (r.doc_a, r.doc_b)
-        for r in dd.jaccard_pairs_prefix(docs, ["lang", "source"], 1.0).collect()
+        for r in dd.jaccard_pairs_prefix(docs, blocking, 1.0).collect()
     }
     assert exact == {(1, 2), (1, 9), (2, 9), (1, 10), (2, 10), (9, 10)}, exact
+    empty = docs.limit(0)
+    for form in (
+        dd.jaccard_pairs, dd.jaccard_pairs_postings, dd.jaccard_pairs_prefix,
+        dd.lsh_verified_pairs, dd.auto_neardup,
+    ):
+        assert form(empty, blocking, 0.6).collect() == [], form.__name__
 
 
 def test_content_fingerprint_tracks_source_mutation(tmp_path):
@@ -2529,22 +2463,21 @@ def test_neardup_tier_selector_table_and_monotonicity():
     B, PB = 1000.0, 300.0  # pair budget / postings budget for the table
     kw = dict(pair_budget=B, postings_pair_budget=PB)
     # 1. small candidate space -> postings REGARDLESS of profile
-    #    (measured law: the sf0.1 corpus at heavy_share 0.64 runs ~2x
-    #    faster through postings — absolute volume decides, not shape)
-    assert choose_neardup_tier(100, 250.0, 240.0, **kw) == "postings"
-    assert choose_neardup_tier(100, 250.0, 10.0, **kw) == "postings"
+    #    (measured law: the sf0.1 corpus, 64 % of its candidates from
+    #    heavy tokens, runs ~2x faster through postings — absolute
+    #    volume decides, not shape)
+    assert choose_neardup_tier(250.0, 240.0, **kw) == "postings"
+    assert choose_neardup_tier(250.0, 10.0, **kw) == "postings"
     # 2. large candidate space, prunable excess -> prefix
-    assert choose_neardup_tier(100, 50_000.0, 800.0, **kw) == "prefix"
-    assert choose_neardup_tier(100, 500.0, 100.0, **kw) == "prefix"
+    assert choose_neardup_tier(50_000.0, 800.0, **kw) == "prefix"
+    assert choose_neardup_tier(500.0, 100.0, **kw) == "prefix"
     # 3. even the rare-token floor exceeds the budget -> lsh
-    assert choose_neardup_tier(100, 50_000.0, 20_000.0, **kw) == "lsh"
+    assert choose_neardup_tier(50_000.0, 20_000.0, **kw) == "lsh"
     # misroute-raises: recall is a contract the selector never spends
     with pytest.raises(ValueError, match="recall"):
-        choose_neardup_tier(
-            100, 50_000.0, 20_000.0, exact_required=True, **kw
-        )
+        choose_neardup_tier(50_000.0, 20_000.0, exact_required=True, **kw)
     with pytest.raises(ValueError):
-        choose_neardup_tier(100, 500.0, 600.0)  # light > cand: invalid
+        choose_neardup_tier(500.0, 600.0)  # light > cand: invalid
 
     # FULLY monotone ladder: growing cand_pairs and/or light_pairs
     # never routes back toward a cheaper-assumption tier.
@@ -2552,10 +2485,10 @@ def test_neardup_tier_selector_table_and_monotonicity():
     grid = [0.0, 100.0, 250.0, 350.0, 900.0, 1100.0, 40_000.0]
     pts = [(c, l) for c in grid for l in grid if l <= c]
     for cand, light in pts:
-        here = rank[choose_neardup_tier(10, cand, light, **kw)]
+        here = rank[choose_neardup_tier(cand, light, **kw)]
         for cand2, light2 in pts:
             if cand2 >= cand and light2 >= light:
-                there = rank[choose_neardup_tier(10, cand2, light2, **kw)]
+                there = rank[choose_neardup_tier(cand2, light2, **kw)]
                 assert there >= here, (cand, light, cand2, light2)
 
 

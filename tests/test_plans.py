@@ -107,16 +107,25 @@ def test_jaccard_postings_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_jaccard_postings_df_cap_no_cartesian(spark):
-    """The df_cap branch adds a df join, the per-block guard, and the
-    exact verify join — none of which may degrade to a product join."""
+def test_auto_neardup_prefix_route_reads_persisted_sets(spark):
+    """Forced onto the prefix tier, auto_neardup must build its
+    candidates and verify join from the token-set frame its stats pass
+    persisted (an InMemoryTableScan), not re-tokenize the corpus — and
+    neither the df join, the prefix self-join nor the verify join may
+    degrade to a product join."""
     from cassandra_migrate_keyspace_from_cluster_spark.operators import dedup as dd
     from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents")
+    chosen: dict = {}
     plan = physical_plan(
-        dd.jaccard_pairs_postings(docs, ["lang", "source"], 0.6, df_cap=25)
+        dd.auto_neardup(
+            docs, ["lang", "source"], 0.6, postings_pair_budget=10.0,
+            chosen=chosen,
+        )
     )
+    assert chosen["tier"] == "prefix", chosen
+    assert "InMemoryTableScan" in plan, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -270,37 +270,31 @@ docs_st = st.lists(
 )
 
 
-@given(
-    docs=docs_st,
-    thr=st.sampled_from([0.34, 0.5, 0.67, 0.9]),
-    cap=st.integers(min_value=1, max_value=4),
-)
+@given(docs=docs_st, thr=st.sampled_from([0.34, 0.5, 0.67, 0.9]))
 @settings(**SETTINGS)
-def test_df_cap_lossless_property(spark, docs, thr, cap):
-    """The capped-postings theorem as a PROPERTY: for ANY corpus over a
-    tiny vocabulary (maximal stopword pressure — every token is heavy
-    under small caps), any threshold, and any cap, the df_cap path must
-    return exactly the uncapped pairs and scores. The per-block guard
-    carries the whole burden here: most sampled corpora violate
-    h < ceil(t*n) for some doc, so the filter must refuse precisely
-    there, and apply only where the theorem licenses it."""
+def test_exact_jaccard_forms_agree_property(spark, docs, thr):
+    """The prefix-filtering theorem as a PROPERTY: for ANY corpus over a
+    tiny vocabulary (maximal stopword pressure, so rare-first ordering
+    and the length filter prune hard) and any threshold, the postings
+    and prefix tiers return exactly the blocked cross join's pairs and
+    scores — pruning never loses a pair, the verify join never admits
+    one."""
     rows = [
         (i, "en", src, " ".join(toks)) for i, (src, toks) in enumerate(docs)
     ]
     df = spark.createDataFrame(
         rows, "doc_id bigint, lang string, source string, text string"
     )
-    base = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dd.jaccard_pairs_postings(df, ["lang", "source"], thr).collect()
-    }
-    capped = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dd.jaccard_pairs_postings(
-            df, ["lang", "source"], thr, df_cap=cap
-        ).collect()
-    }
-    assert capped == base, (thr, cap, sorted(rows))
+    forms = [
+        {
+            (r.doc_a, r.doc_b, r.jaccard)
+            for r in form(df, ["lang", "source"], thr).collect()
+        }
+        for form in (
+            dd.jaccard_pairs, dd.jaccard_pairs_postings, dd.jaccard_pairs_prefix
+        )
+    ]
+    assert forms[0] == forms[1] == forms[2], (thr, sorted(rows))
 
 
 @given(
