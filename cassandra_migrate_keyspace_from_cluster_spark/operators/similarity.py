@@ -1,15 +1,16 @@
 """Similarity search over embedding columns (SURVEY.md §2 f4-f6).
 
-Tiers:
-  - cosine_topk: exact brute-force top-k, pure column expressions
-    (zip_with/aggregate — stays in codegen, no UDF). O(n²·d): the
-    verifiable baseline and fine to ~10⁴ vectors; at 100 TB this is
-    the per-LSH-bucket inner loop, not the global algorithm.
-  - brp_lsh_neighbors: BucketedRandomProjectionLSH (MLlib) — the scale
-    path: random-projection buckets turn the cross join into a
-    bucket-join. Engine-specific hashes → rows-only + recall-tested.
-  - centroid_classify: nearest label-centroid per vector (IVF-style
-    coarse quantization is this exact shape: centroids = coarse index).
+Top-k cosine search is a four-tier ladder, cheapest-exact first;
+``auto_cosine_topk`` routes a corpus by size (``choose_similarity_tier``):
+  - ``cosine_topk`` (f4): exact, corpus staged once and cached per worker;
+  - ``cosine_topk_chunked`` (f4c): exact, one pass per corpus chunk;
+  - ``ivf_cosine_topk`` (f5b): approximate, KMeans cells, n_probe probed;
+  - ``pq_topk`` (f33): approximate, product-quantized codes (ADC scan).
+Each is a local top-k per block merged globally, and the local top-k is
+one kernel, ``_topk_block``. Layouts are written by ``_stage`` and read
+back per worker by ``_load_sorted``. Beside the ladder: SRP-LSH near-dup
+pairs, MLlib BRP-LSH neighbors, int8 quantization, label centroids and
+the SemDeDup tiers.
 
 Determinism law: ranking always on ROUNDED cosine (6dp) + vec_id
 tie-break so float noise in the last ulp can't flip cross-engine order.
@@ -24,6 +25,14 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import cosine, dot, l2_norm, to_double_array
 from ..util import bounded_persist, content_fingerprint, evict_stale_tags, scratch_dir
+
+# Fixed tuning; the docstring of the operator that reads each one
+# carries the law behind its value.
+_SRP_BANDS, _SRP_BAND_BITS, _SRP_SEED = 64, 16, 42  # srp_candidate_pairs
+_PQ_SAMPLE_N = 16384  # pq_topk's codebook-training sample
+_BROADCAST_FRACTION, _IVF_SPILL_MULTIPLE = 0.25, 64  # choose_similarity_tier
+
+_TOPK_SCHEMA = "query_id bigint, neighbor_id bigint, cos_sim double, rank bigint"
 
 
 def valid_vector(col: str = "embedding"):
@@ -110,34 +119,106 @@ def _worker_load(path: str, build):
     return hit
 
 
-def _load_normalized_corpus(path: str):
-    """(ids, row-normalized float64 matrix) from a staged parquet layout."""
+def _unit_rows(vectors):
+    """A column of equal-length vectors as a row-normalized float64
+    matrix."""
+    import numpy as np
+
+    mat = np.vstack(vectors).astype(np.float64)
+    return mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+
+def _load_sorted(path: str, col: str, prep):
+    """(ids, ``prep(col values)``) from a staged parquet layout, in id-
+    ascending order, cached per worker (``_worker_load``).
+
+    Id order is what ``_topk_block`` needs: it packs the row POSITION
+    (not the raw id) into the low bits of its sort key, so position
+    order must be id order — valid for ARBITRARY int64 ids (snowflake
+    ids >= 2^32, negative ids), where raw-id packing would overflow
+    (idspace probe)."""
     import numpy as np
     import pyarrow.parquet as pq
 
     def build(p):
-        t = pq.read_table(p, columns=["id", "embedding"])
+        t = pq.read_table(p, columns=["id", col])
         ids = t.column("id").to_numpy().astype(np.int64)
         if len(ids) == 0:  # empty corpus staging (vstack needs >=1 row)
-            return ids, np.zeros((0, 1), dtype=np.float64)
-        mat = np.vstack(t.column("embedding").to_numpy(zero_copy_only=False))
-        mat = mat.astype(np.float64)
-        # id-ascending order: the top-k kernels pack the row POSITION
-        # (not the raw id) into the low bits of their composite sort
-        # key, so position order must be id order — this makes the
-        # packing valid for ARBITRARY int64 ids (snowflake ids >= 2^32,
-        # negative ids), where raw-id packing would overflow (idspace
-        # probe). Positions are < n <= 2^32 for any executor-resident
-        # corpus by construction.
+            return ids, np.zeros((0, 1))
         order = np.argsort(ids, kind="stable")
-        return ids[order], (mat / np.linalg.norm(mat, axis=1, keepdims=True))[
-            order
-        ]
+        return ids[order], prep(t.column(col).to_numpy(zero_copy_only=False)[order])
 
     return _worker_load(path, build)
 
 
-def _stage(df: DataFrame, label: str, content_key: str | None = None) -> str:
+def _load_normalized_corpus(path: str):
+    """(ids, row-normalized float64 matrix) from a staged parquet layout."""
+    return _load_sorted(path, "embedding", _unit_rows)
+
+
+def _topk_block(
+    q_ids, scores, c_ids, k: int, score_col: str, descending: bool = True
+):
+    """The local top-k of every tier: for each query row of ``scores``
+    (queries × corpus, ``c_ids`` ascending), the ``k`` best corpus
+    entries other than the query itself by (6dp-rounded score, id ASC),
+    as a pandas (query_id, neighbor_id, <score_col>, rank) frame.
+
+    key = ±score·1e6·2^32 + corpus position is a tie-free int64 for that
+    order (|score·1e6| < 2^31, positions < 2^32): one argpartition plus
+    a sort of the k survivors. Self matches get the int64-max sentinel,
+    which sorts last and is dropped after the sort, so ranks stay
+    consecutive when the corpus has fewer than k+1 entries."""
+    import numpy as np
+    import pandas as pd
+
+    kk = min(k, len(c_ids))
+    if kk <= 0 or len(q_ids) == 0:
+        no = np.empty(0, np.int64)
+        return pd.DataFrame(
+            {"query_id": no, "neighbor_id": no, score_col: np.empty(0), "rank": no}
+        )
+    assert len(c_ids) < (1 << 32)
+    scores = np.round(scores, 6)
+    score_int = np.rint(scores * 1e6).astype(np.int64)
+    pos = np.arange(len(c_ids), dtype=np.int64)
+    key = (-score_int if descending else score_int) * (1 << 32) + pos
+    sentinel = np.iinfo(np.int64).max
+    key[c_ids[None, :] == q_ids[:, None]] = sentinel
+    part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
+    sel = np.take_along_axis(key, part, axis=1)
+    srt = np.argsort(sel, axis=1)
+    cols = np.take_along_axis(part, srt, axis=1)
+    keep = (np.take_along_axis(sel, srt, axis=1) != sentinel).reshape(-1)
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(q_ids, kk),
+            "neighbor_id": c_ids[cols].reshape(-1),
+            score_col: np.take_along_axis(scores, cols, axis=1).reshape(-1),
+            "rank": np.tile(np.arange(1, kk + 1, dtype=np.int64), len(q_ids)),
+        }
+    )[keep]
+
+
+def _exact_topk(corpus_path: str, k: int):
+    """mapInPandas body of the exact tiers: each (id, embedding) query
+    batch against the staged corpus at ``corpus_path``."""
+
+    def topk(batches):
+        ids_c, nmat_c = _load_normalized_corpus(corpus_path)
+        for pdf in filter(len, batches):
+            sims = _unit_rows(pdf["embedding"]) @ nmat_c.T
+            yield _topk_block(pdf["id"].to_numpy("int64"), sims, ids_c, k, "cos_sim")
+
+    return topk
+
+
+def _stage(
+    df: DataFrame,
+    label: str,
+    content_key: str | None = None,
+    partition_by: str | None = None,
+) -> str:
     """Write ``df`` to a dir under the session scratch root, dropping any
     earlier staging of the same label (one live layout per label).
 
@@ -151,7 +232,8 @@ def _stage(df: DataFrame, label: str, content_key: str | None = None) -> str:
     one corpus write. Callers that derive the key from a data path must
     pass it through ``content_fingerprint`` so regenerated source data
     can never alias a stale staging. A few recent sibling tags are kept
-    (``evict_stale_tags``) so alternating corpora stay warm."""
+    (``evict_stale_tags``) so alternating corpora stay warm.
+    ``partition_by`` writes one directory per value of that column."""
     import hashlib
     import uuid
 
@@ -163,7 +245,10 @@ def _stage(df: DataFrame, label: str, content_key: str | None = None) -> str:
     else:
         path = os.path.join(base, uuid.uuid4().hex[:12])
     evict_stale_tags(base, keep=path)
-    df.write.mode("overwrite").parquet(path)
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
     return path
 
 
@@ -252,56 +337,7 @@ def cosine_topk(
     top-k (``cosine_topk_chunked``), or switch to the LSH/IVF/PQ tiers
     whose bucket structure prunes the pair space.
     """
-    import numpy as np
-    import pandas as pd
-
     corpus_path = prestage_cosine_corpus(embeddings, id_col, corpus_key)
-
-    def topk(batches):
-        ids_c, nmat_c = _load_normalized_corpus(corpus_path)
-        if len(ids_c) == 0:  # empty corpus → no neighbors for anyone
-            return
-        # composite int64 sort key: 6dp-rounded sims are exact integers
-        # after *1e6 (|.| <= 1e6 < 2^21) and the corpus POSITION (the
-        # loader sorts by id, so position order IS id order and
-        # positions always fit 32 bits — valid for arbitrary int64
-        # ids, unlike raw-id packing) fills the low bits, so
-        # key = -sim_int * 2^32 + pos orders by (sim DESC, id ASC)
-        # with NO possible ties — the same total order the lexsort
-        # produced, but selected with one vectorized argpartition per
-        # batch instead of a python loop of per-query lexsorts.
-        assert len(ids_c) < (1 << 32)
-        pos_c = np.arange(len(ids_c), dtype=np.int64)
-        # kk: a corpus smaller than k has fewer than k neighbors to
-        # give (argpartition's kth must stay in bounds); the self
-        # sentinel (int64 max — strictly above every real composite
-        # key) then sorts LAST, so prefix-masking it after the sort
-        # drops self matches without disturbing rank numbering.
-        kk = min(k, len(ids_c))
-        sentinel = np.iinfo(np.int64).max
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            q_ids = pdf["id"].to_numpy(dtype=np.int64)
-            q_mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-            sims = np.round(q_norm @ nmat_c.T, 6)
-            key = (-np.rint(sims * 1e6).astype(np.int64)) * (1 << 32) + pos_c
-            key[ids_c[None, :] == q_ids[:, None]] = sentinel
-            part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            sel = np.take_along_axis(key, part, axis=1)
-            srt = np.argsort(sel, axis=1)
-            cols = np.take_along_axis(part, srt, axis=1)
-            keep = (np.take_along_axis(sel, srt, axis=1) != sentinel).reshape(-1)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, kk),
-                    "neighbor_id": ids_c[cols].reshape(-1),
-                    "cos_sim": np.take_along_axis(sims, cols, axis=1).reshape(-1),
-                    "rank": np.tile(np.arange(1, kk + 1, dtype=np.int64), len(q_ids)),
-                }
-            )[keep]
-
     # explicit schema: keeps a 0-row staging readable (no files to
     # infer from) and pins the exact staged column types. Same
     # projection ``prestage_cosine_corpus`` stages (its filter and
@@ -310,9 +346,7 @@ def cosine_topk(
         F.col(id_col).alias("id"), "embedding"
     ).schema
     queries = embeddings.sparkSession.read.schema(staged_schema).parquet(corpus_path)
-    return queries.mapInPandas(
-        topk, "query_id bigint, neighbor_id bigint, cos_sim double, rank bigint"
-    )
+    return queries.mapInPandas(_exact_topk(corpus_path, k), _TOPK_SCHEMA)
 
 
 def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
@@ -333,7 +367,6 @@ def cosine_topk_chunked(
     k: int = 5,
     chunk_size: int = 100_000,
     id_col: str = "vec_id",
-    work_dir: str | None = None,
     corpus_key: str | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors when the corpus outgrows ONE
@@ -359,21 +392,16 @@ def cosine_topk_chunked(
     Global top-k ⊆ union of per-chunk top-k, so the result is EXACT;
     identical ranking law as f4 (6dp-rounded score, neighbor-id
     tie-break) — hash-equality with f4 is pytest-asserted across chunk
-    sizes. ``work_dir`` is the staging root (a real pipeline passes a
-    job-scoped path on shared storage; defaults to the session scratch
-    root, removed at interpreter exit). ``corpus_key`` (e.g. the
-    sf_dir) enables content-addressed reuse of the chunked layout —
-    the same within-process idempotence as f4/f33's ``_stage``: a
-    completed staging of the same (key, n, n_chunks) is read, not
-    rewritten.
+    sizes. The chunk layout is staged through ``_stage`` under the
+    session scratch root. ``corpus_key`` (e.g. the sf_dir) enables
+    content-addressed reuse of it — the same within-process idempotence
+    as f4/f33: a completed staging of the same (key, n, n_chunks) is
+    read, not rewritten.
     """
-    import hashlib
+    import glob
     import math
 
-    import numpy as np
-    import pandas as pd
-
-    from ..util import scratch_dir, scratch_dir_unique
+    from ..util import scratch_dir_unique
 
     # The query side is scanned once per pass; cache it (MEMORY_AND_DISK
     # — degrades to local-disk reads when the corpus outgrows memory, so
@@ -406,103 +434,49 @@ def cosine_topk_chunked(
         pass_src = src.repartition(target)
     else:
         pass_src = src.coalesce(target)
-    staged = False
-    if work_dir is None and corpus_key is not None:
-        base = scratch_dir("f4c_corpus")
+    # written from the coalesced layout: ≤ n_parts files per chunk dir
+    # instead of shuffle.partitions near-empty ones — fewer footer
+    # reads for every _load_normalized_corpus call below
+    corpus_path = _stage(
+        pass_src.withColumn(
+            "chunk", F.pmod(F.xxhash64("id"), F.lit(n_chunks)).cast("int")
+        ),
+        "f4c_corpus",
         # content_fingerprint folds the source files' (size, mtime) into
         # the tag — in-place fixture regeneration with an unchanged row
-        # count can no longer alias a stale _SUCCESS-marked staging
-        tag = hashlib.md5(
-            # "kdist2" versions the staged semantics (replay-law
-            # distinct) — a pre-law staging can never be reused
-            f"kdist2:{content_fingerprint(corpus_key)}|n={n}|chunks={n_chunks}".encode()
-        ).hexdigest()[:12]
-        corpus_path = os.path.join(base, tag)
-        evict_stale_tags(base, keep=corpus_path)
-        staged = os.path.exists(os.path.join(corpus_path, "_SUCCESS"))
-        cand_path = f"{scratch_dir_unique('f4c_cand')}/cand"
-    else:
-        root = work_dir or scratch_dir_unique("f4c")
-        corpus_path = f"{root}/corpus"
-        cand_path = f"{root}/cand"
-    if not staged:
-        # written from the coalesced layout: ≤ n_parts files per chunk
-        # dir instead of shuffle.partitions near-empty ones — fewer
-        # footer reads for every _load_normalized_corpus call below
-        (
-            pass_src.withColumn(
-                "chunk", F.pmod(F.xxhash64("id"), F.lit(n_chunks)).cast("int")
-            )
-            .write.partitionBy("chunk")
-            .mode("overwrite")
-            .parquet(corpus_path)
-        )
-    out_schema = "query_id bigint, neighbor_id bigint, cos_sim double"
+        # count can no longer alias a stale _SUCCESS-marked staging;
+        # "kdist2" versions the staged semantics (replay-law distinct)
+        content_key=(
+            f"kdist2:{content_fingerprint(corpus_key)}|n={n}|chunks={n_chunks}"
+            if corpus_key is not None
+            else None
+        ),
+        partition_by="chunk",
+    )
+    cand_path = scratch_dir_unique("f4c_cand")
 
     # chunk directories present on disk (hash-chunking can leave gaps);
     # a shared-FS listing at cluster scale — O(n_chunks) names either way
-    chunk_dirs = sorted(
-        f"{corpus_path}/{d}"
-        for d in os.listdir(corpus_path)
-        if d.startswith("chunk=")
-    )
-    first = True
-    for chunk_dir in chunk_dirs:
-
-        def chunk_topk(batches, _path=chunk_dir):
-            ids_c, nmat_c = _load_normalized_corpus(_path)
-            # same composite-key vectorized top-k as f4's kernel; the
-            # max-key sentinel (self match) is filtered AFTER selection
-            # because a small chunk can have fewer than k+1 candidates
-            big = np.iinfo(np.int64).max
-            # position packing, not raw-id packing: chunk-local
-            # positions are id-ordered WITHIN the chunk (loader sorts),
-            # which is all the per-chunk top-k needs — the cross-chunk
-            # merge (_rank_topk) re-sorts on (sim, neighbor_id) anyway
-            assert len(ids_c) < (1 << 32)
-            pos_c = np.arange(len(ids_c), dtype=np.int64)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                q_ids = pdf["id"].to_numpy(dtype=np.int64)
-                q_mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-                q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-                sims = np.round(q_norm @ nmat_c.T, 6)
-                kk = min(k, len(ids_c))
-                key = (-np.rint(sims * 1e6).astype(np.int64)) * (1 << 32) + pos_c
-                key[ids_c[None, :] == q_ids[:, None]] = big
-                part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-                pkeys = np.take_along_axis(key, part, axis=1)
-                srt = np.argsort(pkeys, axis=1)
-                cols = np.take_along_axis(part, srt, axis=1)
-                valid = np.take_along_axis(pkeys, srt, axis=1) != big
-                flat_valid = valid.reshape(-1)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(q_ids, kk)[flat_valid],
-                        "neighbor_id": ids_c[cols].reshape(-1)[flat_valid],
-                        "cos_sim": np.take_along_axis(sims, cols, axis=1)
-                        .reshape(-1)[flat_valid],
-                    }
-                )
-
-        # the write is the pass barrier: workers drop the cached chunk
-        # when the next pass hands them a new path (_worker_load keeps
-        # one entry), so per-worker memory stays O(chunk)
+    for chunk_dir in sorted(glob.glob(f"{corpus_path}/chunk=*")):
+        # chunk-local positions are id-ordered within the chunk, which
+        # is all the per-chunk top-k needs — the cross-chunk merge
+        # (_rank_topk) re-ranks on (sim, neighbor_id). The write is the
+        # pass barrier: workers drop the cached chunk when the next pass
+        # hands them a new path (_worker_load keeps one entry), so
+        # per-worker memory stays O(chunk)
         (
-            pass_src.mapInPandas(chunk_topk, out_schema)
-            .write.mode("overwrite" if first else "append")
+            pass_src.mapInPandas(_exact_topk(chunk_dir, k), _TOPK_SCHEMA)
+            .drop("rank")
+            .write.mode("append")
             .parquet(cand_path)
         )
-        first = False
 
     src.unpersist()  # every pass is materialized; the result reads cand_path
-    if chunk_dirs:
-        cand = embeddings.sparkSession.read.parquet(cand_path)
-    else:
-        # empty corpus: the partitionBy write emitted no chunk dirs, so
-        # no pass ever wrote cand_path — same contract, zero candidates
-        cand = embeddings.sparkSession.createDataFrame([], out_schema)
+    # explicit schema: an empty corpus has no chunk dirs, so no pass
+    # wrote a file — the read is then the zero-candidate frame
+    cand = embeddings.sparkSession.read.schema(
+        "query_id bigint, neighbor_id bigint, cos_sim double"
+    ).parquet(cand_path)
     return _rank_topk(cand, k)
 
 
@@ -512,7 +486,6 @@ def ivf_cosine_topk(
     n_cells: int = 16,
     n_probe: int = 4,
     id_col: str = "vec_id",
-    work_dir: str | None = None,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via IVF (inverted-file) coarse
     quantization — the other scale path next to LSH.
@@ -529,9 +502,9 @@ def ivf_cosine_topk(
     the driver (round 2 collected corpus + assignments; fixed):
       1. KMeans fit (MLlib, distributed); only the n_cells centroids
          come back to the driver and ride the one broadcast.
-      2. The corpus is written to the CELL-PARTITIONED layout that
-         tests/test_plans.py proves partition-prunes (one directory
-         per inverted list).
+      2. The corpus is staged (``_stage``, under the session scratch
+         root) to the CELL-PARTITIONED layout that tests/test_plans.py
+         proves partition-prunes (one directory per inverted list).
       3. Queries compute their n_probe nearest cells scan-side against
          the broadcast centroids and explode to (cell, query) probe
          rows.
@@ -539,17 +512,16 @@ def ivf_cosine_topk(
          prune the layout read to exactly the probed inverted lists.
       5. A cogroup on cell (bounded cardinality, big frames — the g9
          law) scores each cell's queries × vectors as one BLAS matmul
-         and keeps k per query per cell; a query_id-partitioned window
-         merges per-cell winners into the global top-k (top-k ⊆ union
-         of per-cell top-k, so pruning loses nothing beyond the probe
-         approximation itself).
+         and keeps k per query per cell (``_topk_block``); a
+         query_id-partitioned window merges per-cell winners into the
+         global top-k (top-k ⊆ union of per-cell top-k, so pruning
+         loses nothing beyond the probe approximation itself — with
+         every cell probed the result IS the exact top-k, pytest-
+         asserted).
     Rows-only for t2 (KMeans cell boundaries are engine-specific);
     recall + probe monotonicity vs the exact f4 truth are pytest-
-    asserted. ``work_dir`` = staging root (job-scoped path in a real
-    pipeline; mkdtemp for tests).
+    asserted.
     """
-    import tempfile
-
     import numpy as np
     import pandas as pd
     from pyspark.ml.clustering import KMeans
@@ -570,10 +542,10 @@ def ivf_cosine_topk(
     )
     cand_schema = "query_id bigint, neighbor_id bigint, cos_sim double"
     n_corpus = d.count()
-    if n_corpus == 0:
-        # KMeans cannot fit 0 rows; an empty corpus has no neighbors —
-        # feed the shared merge tail an empty candidate set (identical
-        # result schema to the populated path)
+    if n_corpus <= 1:
+        # KMeans cannot fit 0 rows nor take k=1; a corpus of at most one
+        # vector has no neighbors — feed the shared merge tail an empty
+        # candidate set (identical result schema to the populated path)
         return _rank_topk(spark.createDataFrame([], cand_schema), k)
     # a corpus smaller than the cell count cannot seed n_cells distinct
     # centroids (MLlib fit throws) — the tiny-shard boundary collapses
@@ -594,19 +566,14 @@ def ivf_cosine_topk(
         featuresCol="features",
     ).fit(d)
 
-    root = work_dir or tempfile.mkdtemp(prefix="spark_graft_f5b_")
-    layout = f"{root}/corpus_by_cell"
-    (
-        model.transform(d)
-        .select("id", "embedding", F.col("prediction").cast("int").alias("cell"))
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(layout)
+    layout = _stage(
+        model.transform(d).select(
+            "id", "embedding", F.col("prediction").cast("int").alias("cell")
+        ),
+        "f5b_cells",
+        partition_by="cell",
     )
-
-    cents = np.asarray(model.clusterCenters(), dtype=np.float64)
-    cents_norm = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast(cents_norm)
+    bc = spark.sparkContext.broadcast(_unit_rows(model.clusterCenters()))
 
     def probe(batches):
         cn = bc.value
@@ -614,19 +581,13 @@ def ivf_cosine_topk(
             if len(pdf) == 0:
                 continue
             q_ids = pdf["id"].to_numpy(dtype=np.int64)
-            q_mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-            cell_sims = q_norm @ cn.T
+            cell_sims = _unit_rows(pdf["embedding"]) @ cn.T
             probed = np.argsort(-cell_sims, axis=1)[:, :n_probe]
             yield pd.DataFrame(
                 {
                     "cell": probed.reshape(-1).astype(np.int32),
                     "qid": np.repeat(q_ids, n_probe),
-                    "qemb": [
-                        pdf["embedding"].iloc[i]
-                        for i in range(len(q_ids))
-                        for _ in range(n_probe)
-                    ],
+                    "qemb": np.repeat(pdf["embedding"].to_numpy(), n_probe),
                 }
             )
 
@@ -641,34 +602,15 @@ def ivf_cosine_topk(
     )
 
     def score_cell(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "cos_sim": []}
-        ).astype({"query_id": np.int64, "neighbor_id": np.int64, "cos_sim": float})
-        if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return empty
+        c_pdf = c_pdf.sort_values("id", kind="stable")  # _topk_block order
         q_ids = q_pdf["qid"].to_numpy(dtype=np.int64)
-        q_mat = np.vstack(q_pdf["qemb"].to_numpy()).astype(np.float64)
-        q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
         c_ids = c_pdf["id"].to_numpy(dtype=np.int64)
-        c_mat = np.vstack(c_pdf["embedding"].to_numpy()).astype(np.float64)
-        c_norm = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-        sims = np.round(q_norm @ c_norm.T, 6)
-        kk = min(k, len(c_ids))
-        rows = []
-        for i in range(len(q_ids)):
-            row = np.where(c_ids == q_ids[i], -np.inf, sims[i])
-            order = np.lexsort((c_ids, -row))[:kk]
-            keep = order[np.isfinite(row[order])]
-            rows.append(
-                pd.DataFrame(
-                    {
-                        "query_id": q_ids[i],
-                        "neighbor_id": c_ids[keep],
-                        "cos_sim": row[keep],
-                    }
-                )
-            )
-        return pd.concat(rows, ignore_index=True) if rows else empty
+        sims = (
+            _unit_rows(q_pdf["qemb"]) @ _unit_rows(c_pdf["embedding"]).T
+            if len(q_ids) and len(c_ids)
+            else None  # _topk_block returns the empty frame unread
+        )
+        return _topk_block(q_ids, sims, c_ids, k, "cos_sim").drop(columns="rank")
 
     cand = (
         probes.groupBy("cell")
@@ -678,29 +620,24 @@ def ivf_cosine_topk(
     return _rank_topk(cand, k)
 
 
-def srp_candidate_pairs(
-    embeddings: DataFrame,
-    n_bands: int = 64,
-    band_bits: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-) -> DataFrame:
+def srp_candidate_pairs(embeddings: DataFrame, id_col: str = "vec_id") -> DataFrame:
     """Candidate near-dup pairs via sign-random-projection (SRP) LSH —
     the cosine-native banding scheme (Charikar's SimHash for angles).
 
-    Each vector gets ``n_bands`` band keys, every key packing
-    ``band_bits`` sign bits of fixed random projections (deterministic
-    seed → stable across runs/executors, no fitted model to ship).
+    Each vector gets ``n_bands = _SRP_BANDS`` band keys, every key
+    packing ``b = _SRP_BAND_BITS`` sign bits of fixed random projections
+    (deterministic seed → stable across runs/executors, no fitted model
+    to ship).
     A pair is a candidate iff it collides on at least one (band, key) —
     a plain equi self-join on the exploded (band, key) postings, so the
     pair space is Σ bucket², never n².
 
     Tuning law (θ = angle of a true pair): P(bit match) = 1 − θ/π,
-    P(band match) = p^band_bits, recall = 1 − (1 − p^b)^n_bands.
-    Defaults (64 bands × 16 bits) give recall ≈ 1 − 3e−6 at cos 0.95,
+    P(band match) = p^b, recall = 1 − (1 − p^b)^n_bands.
+    64 bands × 16 bits give recall ≈ 1 − 3e−6 at cos 0.95,
     ≈ 0.9997 at cos 0.9, degrading toward the 0.8 threshold boundary —
     the standard LSH contract (same as f3/f5), recall-tested on planted
-    near-dups in tests/test_operators.py. At 100 TB: raise band_bits as
+    near-dups in tests/test_operators.py. At 100 TB: raise b as
     n grows (keyspace 2^b bounds bucket sizes; uncorrelated collisions
     ≈ n_bands·2^−b·n²/2) and raise n_bands to buy recall back; band
     keys are 16 small ints per row, stored scan-side — no model state.
@@ -710,21 +647,21 @@ def srp_candidate_pairs(
 
     def hash_bands(batches):
         proj = None
-        weights = 1 << np.arange(band_bits, dtype=np.int64)
+        weights = 1 << np.arange(_SRP_BAND_BITS, dtype=np.int64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             q = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             if proj is None:
-                rng = np.random.default_rng(seed)
-                proj = rng.standard_normal((q.shape[1], n_bands * band_bits))
+                rng = np.random.default_rng(_SRP_SEED)
+                proj = rng.standard_normal((q.shape[1], _SRP_BANDS * _SRP_BAND_BITS))
             bits = ((q @ proj) > 0).astype(np.int64)
-            keys = bits.reshape(len(q), n_bands, band_bits) @ weights
+            keys = bits.reshape(len(q), _SRP_BANDS, _SRP_BAND_BITS) @ weights
             ids = pdf["id"].to_numpy(dtype=np.int64)
             yield pd.DataFrame(
                 {
-                    "id": np.repeat(ids, n_bands),
-                    "band": np.tile(np.arange(n_bands, dtype=np.int32), len(q)),
+                    "id": np.repeat(ids, _SRP_BANDS),
+                    "band": np.tile(np.arange(_SRP_BANDS, dtype=np.int32), len(q)),
                     "key": keys.reshape(-1),
                 }
             )
@@ -755,8 +692,6 @@ def cosine_neardup_pairs(
     embeddings: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
-    n_bands: int = 64,
-    band_bits: int = 16,
 ) -> DataFrame:
     """Near-duplicate pairs by cosine ≥ threshold: SRP-LSH candidate
     generation + exact rescore — the scalable form of the all-pairs
@@ -767,9 +702,7 @@ def cosine_neardup_pairs(
     keys); each candidate is then EXACTLY rescored on the original
     vectors (rounded-6dp cosine, same determinism law as f4), so
     precision is exact and recall follows the documented SRP law."""
-    cand = srp_candidate_pairs(
-        embeddings, n_bands=n_bands, band_bits=band_bits, id_col=id_col
-    )
+    cand = srp_candidate_pairs(embeddings, id_col=id_col)
     # replay law (see cosine_topk): the rescore side joins per id —
     # replicated rows would multiply pair multiplicity 4x
     e = (
@@ -813,19 +746,18 @@ def brp_lsh_neighbors(
     embeddings: DataFrame,
     distance_threshold: float,
     id_col: str = "vec_id",
-    bucket_length: float = 0.25,
-    num_hash_tables: int = 4,
 ) -> DataFrame:
     """Approximate neighbor pairs under Euclidean distance via MLlib
     BucketedRandomProjectionLSH (random projections → bucket join).
 
     Parameter geometry matters (r2 fix): for unit-norm vectors a random
-    projection has std ||x||/sqrt(d) ≈ 0.125 here, so bucket_length
-    must be O(that) — the old 2.0 put EVERY vector in one bucket (no
-    pruning), and a distance_threshold above the distance distribution
-    (old 6.0 vs median 1.414) made the "neighbor" set 93% of all pairs.
-    With threshold at the ~p0.1 tail (1.12) and 2-std buckets the same
-    join runs 7x faster and returns an actual neighbor set."""
+    projection has std ||x||/sqrt(d) ≈ 0.125 here, so the bucket
+    length must be O(that) — the old 2.0 put EVERY vector in one bucket
+    (no pruning), and a distance_threshold above the distance
+    distribution (old 6.0 vs median 1.414) made the "neighbor" set 93%
+    of all pairs. With threshold at the ~p0.1 tail (1.12) and 2-std
+    buckets (0.25, over 4 hash tables) the same join runs 7x faster and
+    returns an actual neighbor set."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
@@ -846,8 +778,8 @@ def brp_lsh_neighbors(
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="buckets",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
+        bucketLength=0.25,
+        numHashTables=4,
         seed=42,
     )
     model = lsh.fit(d)
@@ -1024,10 +956,11 @@ def semantic_dedup_kmeans(
     # (r13; A/B in OPTIMIZATION_r13.md).
     d = bounded_persist(e.withColumn("features", array_to_vector("emb")))
     n_corpus = d.count()
-    if n_corpus == 0:
-        # KMeans cannot fit 0 rows; the dup-flag stage is closed over an
-        # empty assignment (literal cluster id keeps the schema) — 0 rows
-        # out, populated-identical columns
+    if n_corpus <= 1:
+        # KMeans cannot fit 0 rows nor take k=1; the dup-flag stage runs
+        # over a literal one-cluster assignment (which keeps the schema):
+        # 0 rows out for an empty corpus, and a lone vector is its own
+        # non-duplicate cluster
         assigned = e.select(
             "vec_id", "emb", F.lit(0).cast("bigint").alias("cluster_id")
         )
@@ -1125,7 +1058,6 @@ def pq_topk(
     m: int = 8,
     n_codes: int = 32,
     id_col: str = "vec_id",
-    sample_n: int = 16384,
     corpus_key: str | None = None,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via PRODUCT QUANTIZATION with
@@ -1149,7 +1081,7 @@ def pq_topk(
     Distributed shape (round 2 collected the FULL float corpus to the
     driver for both training and encoding; fixed):
       - codebook TRAINING uses a bounded deterministic sample
-        (md5-of-id order, ``TakeOrderedAndProject`` — ``sample_n`` rows
+        (md5-of-id order, ``TakeOrderedAndProject`` — ``_PQ_SAMPLE_N`` rows
         reach the driver, never the corpus; sample-based training is
         how every PQ system works, FAISS included);
       - ENCODE is a distributed ``mapInPandas`` scan against the
@@ -1172,7 +1104,7 @@ def pq_topk(
 
     sample_pdf = (
         queries.orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
-        .limit(sample_n)
+        .limit(_PQ_SAMPLE_N)
         .toPandas()
         .sort_values("id")  # scan-order independent Lloyd init
         .reset_index(drop=True)
@@ -1183,8 +1115,7 @@ def pq_topk(
         return spark.createDataFrame(
             [], "query_id bigint, neighbor_id bigint, approx_dist double"
         )
-    mat = np.vstack(sample_pdf["embedding"].to_numpy()).astype(np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    mat = _unit_rows(sample_pdf["embedding"])
     n_s, d = mat.shape
     assert d % m == 0, (d, m)
     sub_d = d // m
@@ -1216,8 +1147,7 @@ def pq_topk(
             if len(pdf) == 0:
                 continue
             v_ids = pdf["id"].to_numpy(dtype=np.int64)
-            v = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            v = v / np.linalg.norm(v, axis=1, keepdims=True)
+            v = _unit_rows(pdf["embedding"])
             cs = np.empty((len(v_ids), m), dtype=np.int32)
             for j in range(m):
                 sub = v[:, j * sub_d : (j + 1) * sub_d]
@@ -1239,68 +1169,40 @@ def pq_topk(
         # codebook training is deterministic given (data, params), so a
         # completed encode for the same corpus identity can be reused
         content_key=(
-            f"kdist2:{content_fingerprint(corpus_key)}|m={m}|codes={n_codes}|sample={sample_n}"
+            f"kdist2:{content_fingerprint(corpus_key)}|m={m}|codes={n_codes}"
+            f"|sample={_PQ_SAMPLE_N}"
             if corpus_key is not None
             else None
         ),
     )
 
-    def _load_codes(path):
-        import pyarrow.parquet as pq
-
-        def build(p):
-            t = pq.read_table(p, columns=["id", "codes"])
-            c_ids = t.column("id").to_numpy().astype(np.int64)
-            cs = np.vstack(t.column("codes").to_numpy(zero_copy_only=False))
-            # id-ascending for position packing (see _load_normalized_corpus)
-            order = np.argsort(c_ids, kind="stable")
-            return c_ids[order], cs.astype(np.int32)[order]
-
-        return _worker_load(path, build)
-
     def adc_topk(batches):
-        c_ids, c_codes = _load_codes(codes_path)
+        c_ids, c_codes = _load_sorted(
+            codes_path, "codes", lambda v: np.vstack(v).astype(np.int32)
+        )
         books = bc_books.value
         # fully batched ADC: distance tables for ALL queries at once
         # ((Q, m, n_codes) via one broadcasted subtraction per call),
-        # then the (Q, corpus) approx matrix is m fancy-indexed lookups
-        # — and top-k selection uses the same composite-key
-        # argpartition as the exact kernels (dist ASC, id ASC).
-        big = np.iinfo(np.int64).max
-        # position packing — valid for arbitrary int64 ids (loader
-        # sorts by id, so position order is id order)
-        assert len(c_ids) < (1 << 32)
-        c_pos = np.arange(len(c_ids), dtype=np.int64)
+        # then the (Q, corpus) approx matrix is m fancy-indexed lookups,
+        # selected by the shared kernel (dist ASC, id ASC).
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            q_ids = pdf["id"].to_numpy(dtype=np.int64)
-            q = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            q = q / np.linalg.norm(q, axis=1, keepdims=True)
-            q_sub = q.reshape(len(q_ids), m, sub_d)
+            q_sub = _unit_rows(pdf["embedding"]).reshape(len(pdf), m, sub_d)
             # tables[qi, j, c] = ||books[j, c] - q_sub[qi, j]||²
             tables = ((books[None, :, :, :] - q_sub[:, :, None, :]) ** 2).sum(
                 axis=3
             )
             # approx[qi, ci] = Σ_j tables[qi, j, c_codes[ci, j]]
             approx = tables[:, np.arange(m)[:, None], c_codes.T].sum(axis=1)
-            approx = np.round(approx, 6)
-            kk = min(k, len(c_ids))
-            key = np.rint(approx * 1e6).astype(np.int64) * (1 << 32) + c_pos
-            key[c_ids[None, :] == q_ids[:, None]] = big
-            part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            pkeys = np.take_along_axis(key, part, axis=1)
-            srt = np.argsort(pkeys, axis=1)
-            cols = np.take_along_axis(part, srt, axis=1)
-            valid = (np.take_along_axis(pkeys, srt, axis=1) != big).reshape(-1)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, kk)[valid],
-                    "neighbor_id": c_ids[cols].reshape(-1)[valid],
-                    "approx_dist": np.take_along_axis(approx, cols, axis=1)
-                    .reshape(-1)[valid],
-                }
-            )
+            yield _topk_block(
+                pdf["id"].to_numpy(dtype=np.int64),
+                approx,
+                c_ids,
+                k,
+                "approx_dist",
+                descending=False,
+            ).drop(columns="rank")
 
     return queries.mapInPandas(
         adc_topk, "query_id bigint, neighbor_id bigint, approx_dist double"
@@ -1325,8 +1227,6 @@ def choose_similarity_tier(
     dim: int,
     executor_mem_bytes: int,
     exact_required: bool = False,
-    broadcast_fraction: float = 0.25,
-    ivf_spill_multiple: int = 64,
 ) -> str:
     """Pick the similarity-search tier from corpus stats — the SURVEY §4
     deferred auto-selector, as a documented application-layer helper
@@ -1340,7 +1240,7 @@ def choose_similarity_tier(
         normalized matrix each worker caches — the same quantity
         ``_load_normalized_corpus`` materializes per process)
 
-      1. footprint <= broadcast_fraction * executor_mem
+      1. footprint <= _BROADCAST_FRACTION * executor_mem
            -> "exact_broadcast" (f4): shuffle-free BLAS matmul, the
               fastest AND exact — always preferred when it fits. The
               default fraction (0.25) mirrors broadcast-join
@@ -1350,7 +1250,7 @@ def choose_similarity_tier(
            -> "exact_chunked" (f4c): exact at any scale; pays
               ceil(footprint / chunk_bytes) corpus passes, so it is
               the right answer only when recall must be 1.0.
-      3. approximate allowed, footprint <= ivf_spill_multiple * mem
+      3. approximate allowed, footprint <= _IVF_SPILL_MULTIPLE * mem
            -> "ivf" (f5b): per-query work touches only n_probe/n_cells
               of the corpus and the worker cache holds PROBED CELLS,
               not the corpus — viable until even hot-cell gathers
@@ -1369,11 +1269,11 @@ def choose_similarity_tier(
     if n_rows <= 0 or dim <= 0 or executor_mem_bytes <= 0:
         raise ValueError("n_rows, dim, executor_mem_bytes must be positive")
     footprint = n_rows * dim * 8
-    if footprint <= broadcast_fraction * executor_mem_bytes:
+    if footprint <= _BROADCAST_FRACTION * executor_mem_bytes:
         return "exact_broadcast"
     if exact_required:
         return "exact_chunked"
-    if footprint <= ivf_spill_multiple * executor_mem_bytes:
+    if footprint <= _IVF_SPILL_MULTIPLE * executor_mem_bytes:
         return "ivf"
     return "pq"
 

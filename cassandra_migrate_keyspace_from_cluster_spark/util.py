@@ -15,8 +15,7 @@ interpreter exit:
     under the auto-cleaned root.
 
 On a real cluster the root would be a job-scoped path on shared storage
-(HDFS/S3) supplied by the orchestrator; every operator that stages data
-takes a ``work_dir`` override for exactly that reason.
+(HDFS/S3) supplied by the orchestrator.
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ from cassandra_migrate_keyspace_from_cluster_spark.operators import (
 from cassandra_migrate_keyspace_from_cluster_spark.registry import specs
 from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
 
-from .conftest import SF_T2
+from .conftest import SF_SMOKE, SF_T2
 
 ALL = specs()
 
@@ -166,11 +166,19 @@ def test_jaccard_postings_equals_crossjoin(spark):
 def test_ivf_recall_and_probe_monotonicity(spark):
     """f5b (IVF) recall vs the exact f4 truth. Random gaussian vectors
     are IVF's worst case (no real cluster structure), so the bound is
-    modest; recall must also improve as more cells are probed."""
+    modest; recall must also improve as more cells are probed. The
+    cell layout lives under the session scratch root: the calls leave
+    no ``spark_graft_f5b_*`` directory behind in the system temp dir."""
+    import glob
+    import os
+    import tempfile
+
     from cassandra_migrate_keyspace_from_cluster_spark.sources import (
         load_table as lt,
     )
 
+    leak_glob = os.path.join(tempfile.gettempdir(), "spark_graft_f5b_*")
+    before = set(glob.glob(leak_glob))
     exact = _pair_set(
         ALL["f4_cosine_topk"].fn(spark, SF_T2), "query_id", "neighbor_id"
     )
@@ -183,6 +191,7 @@ def test_ivf_recall_and_probe_monotonicity(spark):
             "neighbor_id",
         )
         r[n_probe] = len(exact & approx) / len(exact)
+    assert set(glob.glob(leak_glob)) <= before, "IVF leaked a temp dir"
     assert r[4] >= 0.5, f"IVF n_probe=4 recall {r[4]:.3f} < 0.5"
     assert r[8] >= 0.75, f"IVF n_probe=8 recall {r[8]:.3f} < 0.75"
     assert r[8] > r[4], f"recall not monotone in n_probe: {r}"
@@ -453,7 +462,8 @@ def test_star_cc_logarithmic_rounds_on_path_graph(spark):
 def test_chunked_cosine_equals_single_broadcast(spark):
     """The chunked exact tier must be value-identical to f4's single
     broadcast across chunk sizes: many chunks, uneven last chunk, and
-    one degenerate covers-everything chunk."""
+    one degenerate covers-everything chunk. IVF with every cell probed
+    is exact too, and must select through the same ordering."""
     emb = load_table(spark, SF_T2, "embeddings")
     want = {
         (r.query_id, r.neighbor_id, r.cos_sim, r.rank)
@@ -465,6 +475,11 @@ def test_chunked_cosine_equals_single_broadcast(spark):
             for r in sim.cosine_topk_chunked(emb, k=5, chunk_size=chunk).collect()
         }
         assert got == want, f"chunk_size={chunk} diverges from f4"
+    got = {
+        (r.query_id, r.neighbor_id, r.cos_sim, r.rank)
+        for r in sim.ivf_cosine_topk(emb, k=5, n_cells=2, n_probe=2).collect()
+    }
+    assert got == want, "fully probed IVF diverges from f4"
 
 
 def test_wav_codec_roundtrip():
@@ -1335,6 +1350,27 @@ def test_auto_cosine_topk_empty_corpus_degrades_gracefully(spark):
     ]
 
 
+def test_one_vector_corpus(spark):
+    """A lone vector has no neighbor: every top-k tier returns 0 rows
+    (KMeans cannot take k=1, so IVF must not fit one). Both SemDeDup
+    tiers keep it as its own non-duplicate cluster."""
+    emb = load_table(spark, SF_SMOKE, "embeddings").filter(F.col("vec_id") == 0)
+    assert emb.count() == 1
+    for name, out in [
+        ("cosine_topk", sim.cosine_topk(emb, k=5)),
+        ("cosine_topk_chunked", sim.cosine_topk_chunked(emb, k=5)),
+        ("ivf_cosine_topk", sim.ivf_cosine_topk(emb, k=5)),
+        ("pq_topk", sim.pq_topk(emb, k=5)),
+    ]:
+        assert out.count() == 0, name
+    for name, out in [
+        ("semantic_dedup", sim.semantic_dedup(emb)),
+        ("semantic_dedup_kmeans", sim.semantic_dedup_kmeans(emb)),
+    ]:
+        got = [(r.vec_id, r.n_dup_partners, r.is_dup) for r in out.collect()]
+        assert got == [(0, 0, 0)], name
+
+
 def test_auto_cosine_topk_null_leading_vectors(spark):
     """Corpus stats must be computed over the VALID vectors: with a
     NULL embedding in row 0, a raw first(size(embedding)) returns
@@ -1854,6 +1890,11 @@ def test_cosine_topk_id_isomorphism(spark):
         for r in sim.cosine_topk_chunked(shifted, k=5, chunk_size=16).collect()
     }
     assert got_chunked == want
+    got_ivf = {
+        (r.query_id, r.neighbor_id, r.cos_sim, r.rank)
+        for r in sim.ivf_cosine_topk(shifted, k=5, n_cells=2, n_probe=2).collect()
+    }
+    assert got_ivf == want
 
 
 def test_idspace_engine_int64_laws(spark):
