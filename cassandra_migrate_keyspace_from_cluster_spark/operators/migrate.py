@@ -23,22 +23,23 @@ Scale notes (100-TB design point):
     the explicit DataFrame form here uses an ntile window for the
     *testable* math. At scale you'd use ``df.repartitionByRange(n, key)``
     which samples range boundaries instead of globally sorting.
-  - Validation (A7/A8) is one pass per table, aggregation-only — the
-    checksum is an order-insensitive reduction, so it needs no sort and
-    shuffles only the tiny partial-agg state.
+  - Row counts (A7, and the copy report) are parquet footer metadata:
+    no Spark job. The content checksum (A8) is one pass per table,
+    aggregation-only — an order-insensitive reduction, so it needs no
+    sort and shuffles only the tiny partial-agg state.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import TABLES, load_table
+from ..sources.parquet_keyspace import footer_rows, table_path
 
 # Canonical cross-engine type vocabulary: Spark simpleString → canonical.
 # The DuckDB oracle maps information_schema data_type strings into the
@@ -75,8 +76,8 @@ def schema_manifest(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFram
 
     The Cassandra analogue reads ``system_schema.{tables,columns}``; here
     the parquet footers are the schema registry. This is a driver-side
-    catalog operation (footer reads only, no data scan) — exactly how a
-    migrator plans its copy before moving a single row.
+    catalog operation (footer reads only, no data scan, no Spark job) —
+    exactly how a migrator plans its copy before moving a single row.
     """
     rows = []
     for name in tables:
@@ -85,7 +86,18 @@ def schema_manifest(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFram
                 field.dataType.simpleString(), field.dataType.simpleString()
             )
             rows.append((name, field.name, i + 1, canonical))
-    return spark.createDataFrame(rows, _MANIFEST_SCHEMA)
+    return _local_frame(spark, rows, _MANIFEST_SCHEMA)
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A small driver-side result as a DataFrame that submits no Spark job.
+
+    Built from pandas, Spark turns it into an Arrow ``LocalRelation``; a
+    list of tuples would go through a Python RDD, one job with a task per
+    core on Python workers."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 
 def _options(fmt: str) -> dict:
@@ -289,20 +301,25 @@ def copy_table_resumable(
     return _read_back(spark, table_dir, src.schema).select(*src.columns)
 
 
+_COUNTS_SCHEMA = T.StructType(
+    [
+        T.StructField("table_name", T.StringType(), False),
+        T.StructField("n_rows", T.LongType(), False),
+    ]
+)
+
+
 def table_counts(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFrame:
     """Row-count validation (A7): one row per table with its count.
 
     Post-copy ``count(source) == count(target)`` is the migrator's
-    cheapest invariant; parquet count() is metadata-only (row-group
-    stats), so this is near-free even at 100 TB.
+    cheapest invariant. The counts are parquet footer row counts
+    (``footer_rows``) and the result is a local frame, so this submits no
+    Spark job. Scale note: ``footer_rows`` reads one footer per part file
+    on the driver — metadata only, but proportional to the file count.
     """
-    counts = [
-        load_table(spark, sf_dir, name).agg(
-            F.lit(name).alias("table_name"), F.count(F.lit(1)).alias("n_rows")
-        )
-        for name in tables
-    ]
-    return reduce(lambda a, b: a.unionByName(b), counts)
+    rows = [(name, footer_rows(table_path(sf_dir, name))) for name in tables]
+    return _local_frame(spark, rows, _COUNTS_SCHEMA)
 
 
 def content_checksum(df: DataFrame, table_name: str) -> DataFrame:
@@ -395,13 +412,23 @@ def snapshot_diff(
     )
 
 
+_REPORT_SCHEMA = T.StructType(
+    [
+        T.StructField("table_name", T.StringType()),
+        T.StructField("n_rows_src", T.LongType()),
+        T.StructField("n_rows_dst", T.LongType()),
+        T.StructField("counts_match", T.BooleanType()),
+    ]
+)
+
+
 def migrate_keyspace(
     spark: SparkSession, src_dir: str, dst_dir: str, tables=TABLES
 ) -> DataFrame:
     """The reference's WHOLE JOB as one operator: copy every table of
     the keyspace to the target, then emit the per-table validation
-    report (source count, target re-read count, match flag) — A4 + A7
-    composed over the full keyspace.
+    report (source count, target count, match flag) — A4 + A7 composed
+    over the full keyspace.
 
     Each table's copy is the shuffle-free scan→write pass of
     ``copy_table``, coalesced to ~1M-row output files so the target
@@ -411,32 +438,31 @@ def migrate_keyspace(
     jobs are SUBMITTED CONCURRENTLY from a thread pool — the standard
     Spark pattern for fleets of small independent jobs (the scheduler
     interleaves them across executors; per-job fixed overhead stops
-    serializing). Counts on the parquet target are metadata-only. The
-    report rows are collected driver-side per TABLE NAME (10 scalars,
-    never data) and emitted as one frame in ``tables`` order; no tables
-    is an empty report.
+    serializing). The report is emitted as one local frame in
+    ``tables`` order; no tables is an empty report.
 
-    The write goes through the copy core (``_write``); the target count
-    re-reads the files with their own footer schema, so it checks what
-    a fresh reader of the target sees, independent of the writer."""
+    The write is the ONLY Spark job per table. Opening the source reads
+    its footer schema (``load_table``), and both counts are parquet
+    footer row counts (``footer_rows``): the source count sizes the
+    coalesce, and the target count is taken from the written files'
+    footers — what a fresh reader of the target sees, independent of
+    the writer. Scale note: ``footer_rows`` reads one footer per part
+    file on the driver, for the source and again for the target."""
     from concurrent.futures import ThreadPoolExecutor
 
     def copy_one(name: str):
         src = load_table(spark, src_dir, name)
         dst = os.path.join(dst_dir, f"{name}.parquet")
-        n_src = src.count()
+        n_src = footer_rows(table_path(src_dir, name))
         _write(src.coalesce(max(1, -(-n_src // 1_000_000))), dst)
-        n_dst = spark.read.parquet(dst).count()
+        n_dst = footer_rows(dst)
         return (name, n_src, n_dst, n_src == n_dst)
 
     rows = []
     if tables:
         with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:
             rows = list(ex.map(copy_one, tables))  # preserves tables order
-    return spark.createDataFrame(
-        rows,
-        "table_name string, n_rows_src bigint, n_rows_dst bigint, counts_match boolean",
-    )
+    return _local_frame(spark, rows, _REPORT_SCHEMA)
 
 
 def expectations_report(

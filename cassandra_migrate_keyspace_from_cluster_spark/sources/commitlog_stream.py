@@ -52,17 +52,12 @@ class CommitLogStreamReader(DataSourceStreamReader):
         self.path = options["path"]
         self.n_slices = int(options.get("n_slices", "4"))
         self.batch_rows = int(options.get("batch_rows", "0"))
-        import pyarrow.parquet as pq
-
-        from .parquet_keyspace import list_part_files
+        from .parquet_keyspace import footer_rows
 
         # metadata-only: the log's current end position. A real
         # commitlog IS segment files — a directory reads as the
         # segments concatenated in sorted name order (multifile probe)
-        self.total = sum(
-            pq.ParquetFile(p).metadata.num_rows
-            for p in list_part_files(self.path)
-        )
+        self.total = footer_rows(self.path)
         self._cap = 0
 
     def initialOffset(self):

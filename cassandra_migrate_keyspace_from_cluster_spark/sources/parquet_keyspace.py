@@ -7,13 +7,23 @@ Cassandra Connector (see ``sources/cassandra.py`` for the design); the
 query layer is source-agnostic because everything downstream is plain
 DataFrame ops.
 
+Opening a table is metadata only. ``load_table`` builds the Spark schema
+from the parquet footer of the table's first part file and hands it to
+the reader, so Spark submits no schema-inference job; ``footer_rows``
+counts a table from its footers. Neither reads a data page.
+
 Scale notes:
-  - ``spark.read.parquet`` gives Catalyst full pushdown: predicate →
-    parquet row-group skip, projection → column pruning. Queries select
-    the minimal column set so a 100-TB scan reads only what it needs.
-  - At scale the per-table files would be directories partitioned on a
-    high-cardinality key (e.g. ``o_orderdate`` month); the loader is
-    path-based so that change is transparent to the query layer.
+  - The scan is still Spark's parquet scan, so Catalyst keeps full
+    pushdown: predicate → parquet row-group skip, projection → column
+    pruning. Queries select the minimal column set so a 100-TB scan
+    reads only what it needs.
+  - Both footer helpers run on the driver: the schema costs one footer
+    read per table, a count one per part file.
+  - A table is one file or a flat directory of part files. Partitioned
+    on a high-cardinality key (e.g. ``o_orderdate`` month), it would be
+    a tree of directories; ``list_part_files`` and the footer schema
+    (which would gain the partition columns) are the two places that
+    change would touch.
 """
 
 from __future__ import annotations
@@ -21,6 +31,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -57,56 +69,84 @@ def list_part_files(path: str) -> list[str]:
         if not parts:
             raise FileNotFoundError(f"no *.parquet part files under {path}")
         return parts
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"no parquet table at {path}")
     return [path]
 
 
+def footer_rows(path: str) -> int:
+    """Row count of a parquet table from its footers: the sum of
+    ``num_rows`` over ``list_part_files(path)``. This is the engine's one
+    way to count a parquet table — no Spark job, one footer read per part
+    file on the driver (at 100 TB that is one small ranged read per
+    writer file, the same metadata a connector's size estimates use)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in list_part_files(path))
+
+
+def _spark_type(at) -> T.DataType:
+    """The Spark type parquet schema inference gives an arrow footer
+    type: ``from_arrow_type``, except that TIMESTAMP(NANOS) is ``bigint``
+    (``spark.sql.legacy.parquet.nanosAsLong``) and every field, array
+    element and map value is nullable."""
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pat.is_struct(at):
+        return T.StructType([T.StructField(f.name, _spark_type(f.type)) for f in at])
+    if pat.is_list(at) or pat.is_large_list(at) or pat.is_fixed_size_list(at):
+        return T.ArrayType(_spark_type(at.value_type))
+    if pat.is_map(at):
+        return T.MapType(_spark_type(at.key_type), _spark_type(at.item_type))
+    if pat.is_timestamp(at) and at.unit == "ns":
+        return T.LongType()
+    return from_arrow_type(at)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one keyspace table as a DataFrame (schema from parquet footer).
+    """Load one keyspace table as a DataFrame, with its schema built from
+    the footer of the first part file (all parts of one table share a
+    schema) and passed to the reader — so opening a table submits no
+    Spark job: no schema-inference job, no data read until an action.
+
+    A missing table path raises ``FileNotFoundError`` naming the path.
 
     Timestamp normalization (the generated fixtures have drifted across
     driver rounds; the query layer always sees plain ``TimestampType``):
 
     - parquet TIMESTAMP(NANOS) (r1/r2 fixtures): no native Spark type;
-      with ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as
-      nanos-since-epoch and is converted to µs TimestampType (lossless:
-      generated values are µs-resolution).
-    - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) (r3 fixtures):
-      Spark 4 infers TIMESTAMP_NTZ, which LTZ-only expressions
+      it is read as nanos-since-epoch ``bigint`` (as
+      ``spark.sql.legacy.parquet.nanosAsLong`` reads it) and converted
+      to µs TimestampType (lossless: generated values are µs-resolution).
+      Spark's INT96 timestamps are not nanosecond columns: the footer is
+      read with INT96 coerced to µs.
+    - parquet TIMESTAMP(MICROS/MILLIS, isAdjustedToUTC=false) (r3
+      fixtures): the explicit ``TimestampType`` reads the stored value
+      as the epoch, as ``spark.sql.parquet.inferTimestampNTZ.enabled=false``
+      does; it never becomes TIMESTAMP_NTZ, which LTZ-only expressions
       (``unix_micros``, ``to_utc_timestamp``) reject at analysis.
-      Cast to ``timestamp``: the NTZ wall-clock is interpreted in the
-      session zone and rendered back in the session zone, so collected
-      values round-trip to the same wall-clock on any session tz —
-      matching DuckDB's naive read of the same file.
+      ``stabilize_wallclock`` then keeps the rendered wall-clock equal to
+      DuckDB's naive read under any session zone.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    import pyarrow.parquet as pq
+    import pyarrow.types as pat
+
     path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
-    dtypes = dict(df.dtypes)
-    # NANOS detection is footer-driven, not column-name-driven: ANY
-    # column Spark read as bigint whose parquet logical type is a
-    # nanosecond timestamp came through the nanosAsLong legacy path
-    # (r1/r2 fixtures did this for events.ts; a future regen could do
-    # it to any table).
-    bigint_cols = [c for c, dt in dtypes.items() if dt == "bigint"]
-    if bigint_cols:
-        import pyarrow.parquet as pq
-        import pyarrow.types as pat
-
-        # directory-aware: sniff the FIRST part file's footer (all
-        # parts of one table share a schema; multifile probe)
-        footer = pq.read_schema(list_part_files(path)[0])
-        for col in bigint_cols:
-            if col in footer.names and pat.is_timestamp(footer.field(col).type):
-                from pyspark.sql import functions as F
-
-                assert footer.field(col).type.unit == "ns", footer.field(col)
-                df = df.withColumn(
-                    col, F.timestamp_micros(F.expr(f"`{col}` div 1000"))
-                )
-    for col, dt in dtypes.items():
-        if dt == "timestamp_ntz":
-            df = df.withColumn(col, df[col].cast("timestamp"))
+    footer = pq.ParquetFile(
+        list_part_files(path)[0], coerce_int96_timestamp_unit="us"
+    ).schema_arrow
+    schema = T.StructType(
+        [T.StructField(f.name, _spark_type(f.type)) for f in footer]
+    )
+    df = spark.read.schema(schema).parquet(path)
+    for f in footer:
+        if pat.is_timestamp(f.type) and f.type.unit == "ns":
+            df = df.withColumn(
+                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
+            )
     return stabilize_wallclock(df)
 
 
@@ -152,8 +192,6 @@ def stabilize_wallclock(df: DataFrame) -> DataFrame:
     tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC") or "UTC"
     if tz in _UTC_EQUIVALENT:
         return df
-    from pyspark.sql import functions as F
-
     for col, dt in df.dtypes:
         if dt == "timestamp":
             df = df.withColumn(col, F.to_utc_timestamp(F.col(col), tz))

@@ -3,6 +3,8 @@ Cassandra-path design helpers that are string/config-only here)."""
 
 from __future__ import annotations
 
+import os
+import re
 import tempfile
 
 import pytest
@@ -382,11 +384,13 @@ def test_load_table_normalizes_timestamp_encodings(spark):
     (r1/r2 NANOS → r3 MICROS-NTZ); load_table must deliver plain
     TimestampType with identical wall-clock values for every plausible
     parquet encoding of the same data, so a future regen cannot break
-    the query layer again."""
+    the query layer again. A ``list<float>`` column beside each encoding
+    reads as ``array<float>`` with nullable elements, its values intact."""
     import datetime
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
     from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
         load_table,
@@ -411,19 +415,21 @@ def test_load_table_normalizes_timestamp_encodings(spark):
             {
                 "event_id": pa.array([0, 1], pa.int64()),
                 "ts": pa.array(vals, typ),
+                "vec": pa.array([[0.5, None], []], pa.list_(pa.float32())),
             }
         )
         d = scratch_dir_unique(f"ts_enc_{label}")
         pq.write_table(tbl, f"{d}/events.parquet")
         got = load_table(spark, d, "events")
         assert dict(got.dtypes)["ts"] == "timestamp", (label, got.dtypes)
+        assert got.schema["vec"].dataType == T.ArrayType(T.FloatType(), True), label
         rows = {
-            (r.event_id, r.ts.strftime("%Y-%m-%d %H:%M:%S.%f")[:23])
+            (r.event_id, r.ts.strftime("%Y-%m-%d %H:%M:%S.%f")[:23], tuple(r.vec))
             for r in got.collect()
         }
         expect = {
-            (i, v.strftime("%Y-%m-%d %H:%M:%S.%f")[:23])
-            for i, v in enumerate(vals)
+            (i, v.strftime("%Y-%m-%d %H:%M:%S.%f")[:23], vec)
+            for i, (v, vec) in enumerate(zip(vals, [(0.5, None), ()]))
         }
         assert rows == expect, (label, rows, expect)
 
@@ -476,6 +482,31 @@ def test_wallclock_stable_under_session_timezone(spark):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _split_events(tmp_path):
+    """sf0.001's events table rewritten as ``<tmp_path>/events.parquet``,
+    a directory of three part files with heterogeneous writer profiles
+    (zstd / dict-off / tiny row groups). Returns (directory, rows)."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(f"{SMOKE_SF}/events.parquet")
+    d = tmp_path / "events.parquet"
+    d.mkdir()
+    n = tbl.num_rows
+    profiles = [
+        dict(version="2.6", data_page_version="2.0", compression="zstd"),
+        dict(use_dictionary=False, compression="snappy"),
+        dict(compression="gzip", row_group_size=7),
+    ]
+    bounds = [0, n // 3, 2 * n // 3, n]
+    for i in range(3):
+        pq.write_table(
+            tbl.slice(bounds[i], bounds[i + 1] - bounds[i]),
+            str(d / f"part-{i:02d}.parquet"),
+            **profiles[i],
+        )
+    return d, n
+
+
 def test_sources_read_directory_shaped_tables(spark, tmp_path):
     """Multifile law (the physical truth at 100 TB: a table is a
     DIRECTORY of many writers' part files, a commitlog is segment
@@ -496,23 +527,7 @@ def test_sources_read_directory_shaped_tables(spark, tmp_path):
         list_part_files,
     )
 
-    src = "/root/testdata/sf0.001/events.parquet"
-    tbl = pq.read_table(src)
-    d = tmp_path / "events.parquet"
-    d.mkdir()
-    n = tbl.num_rows
-    profiles = [
-        dict(version="2.6", data_page_version="2.0", compression="zstd"),
-        dict(use_dictionary=False, compression="snappy"),
-        dict(compression="gzip", row_group_size=7),
-    ]
-    bounds = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        pq.write_table(
-            tbl.slice(bounds[i], bounds[i + 1] - bounds[i]),
-            str(d / f"part-{i:02d}.parquet"),
-            **profiles[i],
-        )
+    d, n = _split_events(tmp_path)
     assert len(list_part_files(str(d))) == 3
 
     # load_table path: footer sniff must not crash on a directory, and
@@ -544,3 +559,122 @@ def test_sources_read_directory_shaped_tables(spark, tmp_path):
     replayed = spark.read.parquet(str(out_dir))
     assert replayed.count() == n
     assert replayed.select("event_id").exceptAll(want.select("event_id")).count() == 0
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """Spark jobs submitted while ``fn()`` runs, from any thread.
+
+    Job ids are sequential per SparkContext, so this is the growth of the
+    newest job id; the newest job is always among the
+    ``spark.ui.retainedJobs`` the status tracker keeps. The calling
+    thread's job group is cleared, so its jobs are counted together with
+    the ungrouped ones of the engine's thread pools."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def newest() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    before = newest()
+    fn()
+    return newest() - before
+
+
+def test_footer_metadata_paths_submit_no_spark_jobs(spark, tmp_path):
+    """Job-count law: opening, counting and describing parquet tables
+    reads footers only. load_table (a single file and a 3-part
+    directory), table_counts and schema_manifest (results collected)
+    submit no Spark job, and migrate_keyspace submits exactly one job
+    per table: its write."""
+    _split_events(tmp_path)
+    calls = {
+        "load_table file": lambda: load_table(spark, SMOKE_SF, "orders"),
+        "load_table dir": lambda: load_table(spark, str(tmp_path), "events"),
+        "table_counts": lambda: mig.table_counts(spark, SMOKE_SF).collect(),
+        "schema_manifest": lambda: mig.schema_manifest(spark, SMOKE_SF).collect(),
+    }
+    for label, call in calls.items():
+        assert _jobs_submitted(spark, call) == 0, label
+    tables = ["nation", "orders", "events"]
+    migrate = lambda: mig.migrate_keyspace(  # noqa: E731
+        spark, SMOKE_SF, str(tmp_path / "dst"), tables
+    ).collect()
+    assert _jobs_submitted(spark, migrate) == len(tables)
+
+
+def _inferred_schema(spark, path: str):
+    """The schema Spark infers for a parquet table, after load_table's
+    own conversion of nanosecond timestamps (inferred as bigint under
+    ``spark.sql.legacy.parquet.nanosAsLong``) to TimestampType."""
+    import pyarrow.parquet as pq
+    import pyarrow.types as pat
+    from pyspark.sql import types as T
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        list_part_files,
+    )
+
+    footer = pq.read_schema(list_part_files(path)[0])
+    return T.StructType(
+        [
+            T.StructField(f.name, T.TimestampType(), f.nullable)
+            if f.dataType == T.LongType() and pat.is_timestamp(footer.field(f.name).type)
+            else f
+            for f in spark.read.parquet(path).schema
+        ]
+    )
+
+
+def test_load_table_schema_equals_spark_inference(spark, tmp_path):
+    """load_table's footer-built schema is the schema Spark's own
+    inference gives, field for field (names, types, nullability), for
+    every fixture table at every scale factor and for a Spark-written
+    migrate_keyspace target (INT96 timestamps, Spark's schema metadata,
+    a directory of part files)."""
+    from cassandra_migrate_keyspace_from_cluster_spark.sources import TABLES
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        table_path,
+    )
+
+    dst = str(tmp_path / "dst")
+    mig.migrate_keyspace(spark, SMOKE_SF, dst).collect()
+    for sf_dir in (SMOKE_SF, "/root/testdata/sf0.01", "/root/testdata/sf0.1", dst):
+        for name in TABLES:
+            want = _inferred_schema(spark, table_path(sf_dir, name))
+            assert load_table(spark, sf_dir, name).schema == want, (sf_dir, name)
+
+
+def test_footer_counts_empty_parts_and_missing_tables(spark, tmp_path):
+    """Edge cases of the footer paths. A Spark-written directory whose
+    part file holds 0 rows counts 0 rows and reads back as an empty
+    table with the source schema. A missing table path raises
+    FileNotFoundError naming the path, before any Spark read."""
+    import pyarrow.parquet as pq
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        list_part_files,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    empty = pq.read_table(f"{SMOKE_SF}/orders.parquet").slice(0, 0)
+    pq.write_table(empty, str(src / "orders.parquet"))
+    dst = tmp_path / "dst"
+    report = mig.migrate_keyspace(spark, str(src), str(dst), ["orders"]).collect()
+    assert [tuple(r) for r in report] == [("orders", 0, 0, True)]
+    parts = list_part_files(str(dst / "orders.parquet"))
+    assert parts and all(pq.ParquetFile(p).metadata.num_rows == 0 for p in parts)
+    assert [tuple(r) for r in mig.table_counts(spark, str(dst), ["orders"]).collect()] == [
+        ("orders", 0)
+    ]
+    copied = load_table(spark, str(dst), "orders")
+    assert copied.schema == load_table(spark, SMOKE_SF, "orders").schema
+    assert copied.count() == 0
+
+    missing = str(tmp_path / "nowhere")
+    path = re.escape(os.path.join(missing, "orders.parquet"))
+    with pytest.raises(FileNotFoundError, match=path):
+        load_table(spark, missing, "orders")
+    with pytest.raises(FileNotFoundError, match=path):
+        mig.table_counts(spark, missing, ["orders"])
