@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 
 from ..sources import TABLES, load_table
 from ..sources.parquet_keyspace import footer_rows, table_path
+from ..util import local_frame
 
 # Canonical cross-engine type vocabulary: Spark simpleString → canonical.
 # The DuckDB oracle maps information_schema data_type strings into the
@@ -86,18 +87,7 @@ def schema_manifest(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFram
                 field.dataType.simpleString(), field.dataType.simpleString()
             )
             rows.append((name, field.name, i + 1, canonical))
-    return _local_frame(spark, rows, _MANIFEST_SCHEMA)
-
-
-def _local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
-    """A small driver-side result as a DataFrame that submits no Spark job.
-
-    Built from pandas, Spark turns it into an Arrow ``LocalRelation``; a
-    list of tuples would go through a Python RDD, one job with a task per
-    core on Python workers."""
-    import pandas as pd
-
-    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+    return local_frame(spark, rows, _MANIFEST_SCHEMA)
 
 
 def _options(fmt: str) -> dict:
@@ -319,7 +309,7 @@ def table_counts(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFrame:
     on the driver — metadata only, but proportional to the file count.
     """
     rows = [(name, footer_rows(table_path(sf_dir, name))) for name in tables]
-    return _local_frame(spark, rows, _COUNTS_SCHEMA)
+    return local_frame(spark, rows, _COUNTS_SCHEMA)
 
 
 def content_checksum(df: DataFrame, table_name: str) -> DataFrame:
@@ -462,7 +452,7 @@ def migrate_keyspace(
     if tables:
         with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:
             rows = list(ex.map(copy_one, tables))  # preserves tables order
-    return _local_frame(spark, rows, _REPORT_SCHEMA)
+    return local_frame(spark, rows, _REPORT_SCHEMA)
 
 
 def expectations_report(

@@ -1075,9 +1075,9 @@ def f20_stratified_sample(spark, sf_dir):
 def f21_neardup_clusters(spark, sf_dir):
     """Near-dup CLUSTERING: connected components over the exact-Jaccard
     pair graph (f2's pairs) — every doc labeled with its transitive
-    group's smallest doc id. The iterative Spark fixpoint hash-matches
-    DuckDB's recursive-CTE reachability — the strongest cross-engine
-    check of an iterative distributed algorithm in this suite."""
+    group's smallest doc id. ``neardup_clusters`` routes by graph size
+    (driver union-find under its edge budget, the star loop past it);
+    the labels hash-match DuckDB's recursive-CTE reachability."""
     docs = t(spark, sf_dir, "documents")
     pairs = dd.jaccard_pairs_postings(
         docs, blocking=["lang", "source"], threshold=0.6
@@ -1112,10 +1112,10 @@ def f21_neardup_clusters(spark, sf_dir):
 )
 def f21b_neardup_clusters_star(spark, sf_dir):
     """f21's connected components via alternating small-star/large-star
-    (O(log n) rounds — the true 100-TB CC shape) instead of min-label
-    propagation (O(diameter) rounds). Identical labels, same oracle;
-    round-count bound and equality with the propagation loop are
-    pytest-asserted (tests/test_operators.py)."""
+    (O(log n) rounds — the true 100-TB CC shape), called directly rather
+    than through f21's size routing. Identical labels, same oracle;
+    round-count bound and equality with the driver route are
+    pytest-asserted (tests/test_operators.py, tests/test_properties.py)."""
     docs = t(spark, sf_dir, "documents")
     pairs = dd.jaccard_pairs_postings(
         docs, blocking=["lang", "source"], threshold=0.6

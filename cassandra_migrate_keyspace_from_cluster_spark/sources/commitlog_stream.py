@@ -38,7 +38,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .cluster_source import _ddl_schema
+from .cluster_source import _source_schema
 
 
 class RowSlice(InputPartition):
@@ -136,7 +136,7 @@ class CommitLogStreamDataSource(DataSource):
         return "keyspace_commitlog"
 
     def schema(self):
-        return _ddl_schema(self.options["path"])
+        return _source_schema(self.options["path"])
 
     def streamReader(self, schema):
         return CommitLogStreamReader(self.options)

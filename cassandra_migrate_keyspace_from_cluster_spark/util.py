@@ -157,3 +157,14 @@ def drain_persisted() -> None:
             df.unpersist(blocking=False)
         except Exception:
             pass
+
+
+def local_frame(spark, rows: list[tuple], schema):
+    """A small driver-side result as a DataFrame that submits no Spark job.
+
+    Built from pandas, Spark turns it into an Arrow ``LocalRelation``; a
+    list of tuples would go through a Python RDD, one job with a task per
+    core on Python workers."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)

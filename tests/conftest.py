@@ -40,6 +40,26 @@ SF_T2 = "/root/testdata/sf0.01"
 PARITY_SF = os.environ.get("PARITY_SF", SF_T2)
 
 
+def jobs_submitted(spark, fn) -> int:
+    """Spark jobs submitted while ``fn()`` runs, from any thread.
+
+    Job ids are sequential per SparkContext, so this is the growth of the
+    newest job id; the newest job is always among the
+    ``spark.ui.retainedJobs`` the status tracker keeps. The calling
+    thread's job group is cleared, so its jobs are counted together with
+    the ungrouped ones of the engine's thread pools."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def newest() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    before = newest()
+    fn()
+    return newest() - before
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = build_session(app_name="tests", shuffle_partitions=8)

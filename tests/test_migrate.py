@@ -14,7 +14,7 @@ from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as m
 from cassandra_migrate_keyspace_from_cluster_spark.sources import cassandra as cass
 from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
 
-from .conftest import SF_SMOKE as SMOKE_SF
+from .conftest import SF_SMOKE as SMOKE_SF, jobs_submitted
 
 
 # (copy_table keyword arguments, derived columns the layout adds)
@@ -222,6 +222,33 @@ def test_cluster_source_token_ranges(spark):
     assert max(sizes) <= 2 * (sum(sizes) / len(sizes))
     # determinism: the same key always lands in the same range
     assert token_of(42) == token_of(42)
+
+
+def test_cluster_source_reads_list_columns(spark):
+    """The A1 cluster source declares load_table's footer types, so a
+    list column scans: embeddings (an array<float> column) read over 4
+    token ranges is exactly load_table's rows, and orders and events
+    keep the schema load_table gives them."""
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        read_keyspace_table,
+    )
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        table_path,
+    )
+
+    def scan(name, key, n_ranges=8):
+        return read_keyspace_table(spark, table_path(SMOKE_SF, name), key, n_ranges)
+
+    emb, want = scan("embeddings", "vec_id", 4), load_table(spark, SMOKE_SF, "embeddings")
+    assert emb.schema == want.schema
+    assert emb.rdd.getNumPartitions() == 4
+
+    def rows(df):
+        return sorted((r.vec_id, tuple(r.embedding), r.label) for r in df.collect())
+
+    assert rows(emb) == rows(want)
+    for name, key in [("orders", "o_orderkey"), ("events", "event_id")]:
+        assert scan(name, key).schema == load_table(spark, SMOKE_SF, name).schema, name
 
 
 def test_compacted_copy_file_count_and_values(spark):
@@ -561,26 +588,6 @@ def test_sources_read_directory_shaped_tables(spark, tmp_path):
     assert replayed.select("event_id").exceptAll(want.select("event_id")).count() == 0
 
 
-def _jobs_submitted(spark, fn) -> int:
-    """Spark jobs submitted while ``fn()`` runs, from any thread.
-
-    Job ids are sequential per SparkContext, so this is the growth of the
-    newest job id; the newest job is always among the
-    ``spark.ui.retainedJobs`` the status tracker keeps. The calling
-    thread's job group is cleared, so its jobs are counted together with
-    the ungrouped ones of the engine's thread pools."""
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", None)
-
-    def newest() -> int:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
-
-    before = newest()
-    fn()
-    return newest() - before
-
-
 def test_footer_metadata_paths_submit_no_spark_jobs(spark, tmp_path):
     """Job-count law: opening, counting and describing parquet tables
     reads footers only. load_table (a single file and a 3-part
@@ -595,12 +602,12 @@ def test_footer_metadata_paths_submit_no_spark_jobs(spark, tmp_path):
         "schema_manifest": lambda: mig.schema_manifest(spark, SMOKE_SF).collect(),
     }
     for label, call in calls.items():
-        assert _jobs_submitted(spark, call) == 0, label
+        assert jobs_submitted(spark, call) == 0, label
     tables = ["nation", "orders", "events"]
     migrate = lambda: mig.migrate_keyspace(  # noqa: E731
         spark, SMOKE_SF, str(tmp_path / "dst"), tables
     ).collect()
-    assert _jobs_submitted(spark, migrate) == len(tables)
+    assert jobs_submitted(spark, migrate) == len(tables)
 
 
 def _inferred_schema(spark, path: str):

@@ -14,7 +14,7 @@ from cassandra_migrate_keyspace_from_cluster_spark.operators import (
 from cassandra_migrate_keyspace_from_cluster_spark.registry import specs
 from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
 
-from .conftest import SF_SMOKE, SF_T2
+from .conftest import SF_SMOKE, SF_T2, jobs_submitted
 
 ALL = specs()
 
@@ -426,9 +426,10 @@ def test_srp_neardup_recall_on_planted_dups(spark):
     assert got == want, f"missed: {sorted(want - got)[:5]} extra: {sorted(got - want)[:5]}"
 
 
-def test_star_cc_equals_propagation(spark):
+def test_star_cc_equals_driver_route(spark):
     """Small-star/large-star CC must produce the identical labeling as
-    the min-label propagation loop on the real sf0.01 pair graph."""
+    neardup_clusters' driver union-find route on the real sf0.01 pair
+    graph."""
     docs = load_table(spark, SF_T2, "documents")
     pairs = dd.jaccard_pairs_postings(docs, ["lang", "source"], 0.6)
     a = {(r.doc_id, r.cluster_id) for r in dd.neardup_clusters(docs, pairs).collect()}
@@ -457,6 +458,26 @@ def test_star_cc_logarithmic_rounds_on_path_graph(spark):
     assert got == {(i, 0) for i in range(n)}
     bound = 2 * int(math.log2(n)) + 4
     assert stats["rounds"] <= bound, f"{stats['rounds']} rounds > {bound}"
+
+
+def test_neardup_clusters_submits_no_propagation_rounds(spark):
+    """Job-count law: on a 128-node path graph (127 rounds of min-label
+    propagation), neardup_clusters fetches the edges and labels them on
+    the driver, so building the labelled frame submits at most 3 jobs
+    (the edge fetch's incremental limit scan); the caller's action reads
+    off the single full-path component."""
+    n = 128
+    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id bigint")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a bigint, doc_b bigint"
+    )
+    out = {}
+    jobs = jobs_submitted(
+        spark, lambda: out.setdefault("labels", dd.neardup_clusters(docs, pairs))
+    )
+    assert jobs <= 3, jobs
+    got = {(r.doc_id, r.cluster_id) for r in out["labels"].collect()}
+    assert got == {(i, 0) for i in range(n)}
 
 
 def test_chunked_cosine_equals_single_broadcast(spark):

@@ -4,6 +4,8 @@ Spark jobs, so the budget goes to law diversity, not example count."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -295,6 +297,51 @@ def test_exact_jaccard_forms_agree_property(spark, docs, thr):
         )
     ]
     assert forms[0] == forms[1] == forms[2], (thr, sorted(rows))
+
+
+# Random small pair graphs: doc ids 0..11 with replays (a repeated id is
+# one node), docs left unpaired (isolated nodes), pairs naming ids that
+# are not docs, self-pairs, duplicate pairs and both (a, b) and (b, a).
+# The pinned example adds NULL ids on both sides.
+cc_docs_st = st.lists(st.integers(min_value=0, max_value=11), max_size=16)
+cc_pairs_st = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=13), st.integers(min_value=0, max_value=13)
+    ),
+    max_size=14,
+)
+_CC_EXAMPLE = dict(
+    ids=[0, 1, 1, 2, 3, 5, 9, 9, None],
+    edges=[(1, 0), (0, 1), (0, 1), (2, 2), (3, 5), (5, 12), (13, 9), (None, 3), (None, None)],
+)
+
+
+def _cc_routes_agree(spark, ids, edges):
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+    pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+    got = Counter(map(tuple, dd.neardup_clusters(docs, pairs).collect()))
+    want = Counter(map(tuple, dd.neardup_clusters_star(docs, pairs).collect()))
+    assert got == want, (ids, edges)
+
+
+@given(ids=cc_docs_st, edges=cc_pairs_st)
+@example(**_CC_EXAMPLE)
+@settings(**SETTINGS)
+def test_neardup_clusters_equals_star_property(spark, ids, edges):
+    """neardup_clusters (driver union-find under its edge budget) labels
+    every random small pair graph exactly as the star loop does: one row
+    per distinct doc, cluster_id the component's smallest id."""
+    _cc_routes_agree(spark, ids, edges)
+
+
+@given(ids=cc_docs_st, edges=cc_pairs_st)
+@example(**_CC_EXAMPLE)
+@settings(**SETTINGS)
+def test_neardup_clusters_star_route_property(spark, ids, edges, monkeypatch):
+    """The same law with the driver budget at 2 edges, so graphs with
+    more edges take neardup_clusters' star route."""
+    monkeypatch.setattr(dd, "_DRIVER_CC_EDGES", 2)
+    _cc_routes_agree(spark, ids, edges)
 
 
 @given(
