@@ -19,10 +19,10 @@ Scale notes (100-TB design point):
   - Bulk copy is pure ``read → write``: no shuffle at all. Parallelism
     comes from source splits (parquet file splits / connector token
     ranges), so it scales linearly with executors.
-  - Range splitting (A5) is what the connector does with token ranges;
-    the explicit DataFrame form here uses an ntile window for the
-    *testable* math. At scale you'd use ``df.repartitionByRange(n, key)``
-    which samples range boundaries instead of globally sorting.
+  - Range splitting is the connector's: the resumable copy (A9/A10)
+    plans the A1 scan's token ranges (``ring_ranges``: no data read, no
+    Spark job). A5's ntile over a distributed rank is an exact per-range
+    row-count report, not a copy plan.
   - Row counts (A7, and the copy report) are parquet footer metadata:
     no Spark job. The content checksum (A8) is one pass per table,
     aggregation-only — an order-insensitive reduction, so it needs no
@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import TABLES, load_table
+# the resumable copy's plan is the A1 scan's token ranges, pure ring math
+from ..sources.cluster_source import ring_ranges as plan_key_ranges, token_in_range
 from ..sources.parquet_keyspace import footer_rows, table_path
 from ..util import local_frame
 
@@ -151,18 +153,16 @@ def copy_table(
 def range_split_counts(df: DataFrame, key: str, n_splits: int = 16) -> DataFrame:
     """Token-range split math (A5): rows per contiguous key range.
 
-    The testable form of the connector's token-range planning: rows are
-    ordered by key into n contiguous, near-equal ranges; each range
-    reports its row count and key bounds — the exact manifest a
-    resumable migrator persists (A9). The bucket assignment is SQL
+    Rows are ordered by key into n contiguous, near-equal ranges; each
+    range reports its exact row count and key bounds (the a5 report; the
+    copy plans token ranges instead). The bucket assignment is SQL
     ``ntile`` semantics, computed WITHOUT a global single-reducer
     window: the two-phase distributed rank (``repartitionByRange`` →
     partition-local numbering → broadcast prefix offsets,
     ``operators/rank.py``) yields the exact global row number, and
-    ntile is closed-form over (row_number, N). A5 is the op whose whole
-    point is scale-out planning, so its own plan must scale too.
-    Deterministic whenever ``key`` is totally ordered (duplicate keys
-    make any engine's ntile bucket-boundary assignment arbitrary).
+    ntile is closed-form over (row_number, N). Deterministic whenever
+    ``key`` is totally ordered (duplicate keys make any engine's ntile
+    bucket-boundary assignment arbitrary).
     """
     from .rank import ntile_from_rn, with_global_row_number
 
@@ -188,20 +188,6 @@ def range_split_counts(df: DataFrame, key: str, n_splits: int = 16) -> DataFrame
         )
         .select(F.col("bucket").cast("bigint").alias("bucket"), "n_rows", "min_key", "max_key")
     )
-
-
-def plan_key_ranges(df: DataFrame, key: str, n_splits: int) -> list[tuple]:
-    """Compute ``n_splits`` contiguous ``(lo, hi, n_rows)`` key ranges
-    covering the table (inclusive bounds, exact row counts) — the
-    migration plan A5 produces and A9 persists. One small aggregation
-    job; bounds come from the same ntile math as ``range_split_counts``."""
-    rows = (
-        range_split_counts(df, key, n_splits)
-        .orderBy("bucket")
-        .select("min_key", "max_key", "n_rows")
-        .collect()
-    )
-    return [tuple(r) for r in rows]
 
 
 class SimulatedFailure(RuntimeError):
@@ -231,32 +217,30 @@ def copy_table_resumable(
     fail_after: int | None = None,
 ) -> DataFrame:
     """Resumable, optionally throttled bulk copy (A9/A10): the table is
-    copied one key range at a time; each completed range writes its data
-    then a done-marker, and a restarted run skips every marked range.
+    copied one token range at a time; each completed range writes its
+    data then a done-marker, and a restarted run skips every marked range.
 
     This is the reference's core control loop (per-token-range copy with
     persisted progress — SURVEY.md §3.1) expressed over Spark jobs: each
-    range copy is a distributed filtered write whose predicate pushes
-    down to the scan, so a resume re-reads only unfinished ranges.
+    range copy is one Spark job, a filtered write of ``range=i``.
     Idempotence: re-running a range overwrites the same subdirectory, so
     at-least-once execution is safe — no coordination needed beyond the
     marker (written only after the range's data is durable).
 
-    Range predicates are HALF-OPEN: range i copies
-    ``key >= lo_i AND key < lo_{i+1}`` (the last range is inclusive of
-    its hi). The planned (lo, hi) bucket bounds come from ntile min/max,
-    so with duplicate key values spanning a bucket boundary the inclusive
-    bounds of adjacent ranges would overlap and copy those rows twice;
-    deriving each upper bound from the NEXT range's lo makes the ranges
-    a partition of the key space for any key distribution — no
-    unique-key precondition.
+    Range i copies the rows whose key token lies in ``[lo_i, hi_i)`` of
+    ``plan_key_ranges(n_splits)``. The plan depends on ``n_splits`` alone
+    and tiles the ring, so a resume re-plans what the crashed run planned
+    and every row (repeated keys, keys outside the old min and max) is
+    copied by exactly one range; rows that changed under a range copied
+    earlier are left to a ``snapshot_diff`` repair. A marker records its
+    range's ``lo..hi``, and one from another plan raises ``ValueError``.
 
     ``rows_per_second`` paces the loop to a rows/second budget so the
     migration never overruns the source cluster's serving capacity:
     before submitting a range it waits until ``start + rows_copied /
-    rows_per_second``, where ``rows_copied`` counts the exact planned
-    rows of the ranges this run has copied — so a resumed run re-paces
-    only the ranges it still copies. ``clock`` (``now``/``sleep``) is
+    rows_per_second``, where ``rows_copied`` counts the rows this run
+    has written (footer metadata) — so a resumed run re-paces only the
+    ranges it still copies. ``clock`` (``now``/``sleep``) is
     injectable so tests assert the sleep schedule exactly; the default
     is the real monotonic clock. This driver-side pacing bounds SOURCE
     read pressure; executor-side write throttling maps to the
@@ -269,11 +253,13 @@ def copy_table_resumable(
     src = load_table(spark, src_dir, name)
     table_dir = os.path.join(dst_dir, f"{name}.parquet")
     os.makedirs(table_dir, exist_ok=True)
-    ranges = plan_key_ranges(src, key, n_splits)
     start, copied, done = clock.now(), 0, 0
-    for i, (lo, hi, n_rows) in enumerate(ranges):
+    for i, (lo, hi) in enumerate(plan_key_ranges(n_splits)):
         marker = os.path.join(dst_dir, f"_{name}_range_{i}.done")
         if os.path.exists(marker):
+            with open(marker) as fh:
+                if fh.read().strip() != f"{lo}..{hi}":
+                    raise ValueError(f"{marker} is not {lo}..{hi}, range {i} of {n_splits}")
             continue
         if fail_after is not None and done >= fail_after:
             raise SimulatedFailure(f"injected failure before range {i}")
@@ -281,11 +267,11 @@ def copy_table_resumable(
             delay = start + copied / rows_per_second - clock.now()
             if delay > 0:
                 clock.sleep(delay)
-        below = F.col(key) < ranges[i + 1][0] if i + 1 < len(ranges) else F.col(key) <= hi
-        _write(src.filter((F.col(key) >= lo) & below), os.path.join(table_dir, f"range={i}"))
+        part = os.path.join(table_dir, f"range={i}")
+        _write(src.filter(token_in_range(F.col(key), lo, hi)), part)
         with open(marker, "w") as fh:
             fh.write(f"{lo}..{hi}\n")
-        copied += n_rows
+        copied += footer_rows(part)
         done += 1
     # the range=i directories read back as a partition column: dropped
     return _read_back(spark, table_dir, src.schema).select(*src.columns)
@@ -320,7 +306,8 @@ def content_checksum(df: DataFrame, table_name: str) -> DataFrame:
     (n_rows, n_distinct, min, max) on source and target proves the copy
     preserved values without sorting either side. Restricted to
     exact-typed columns (int/string) by callers — float formatting is not
-    cross-engine stable (SURVEY.md §5.4).
+    cross-engine stable (SURVEY.md §5.4). Blind spot: ``concat_ws`` skips
+    NULLs, so ``(1, NULL, 'x')`` and ``(1, 'x', NULL)`` hash identical.
     """
     row_hash = F.md5(
         F.concat_ws("|", *[F.col(c).cast("string") for c in df.columns])

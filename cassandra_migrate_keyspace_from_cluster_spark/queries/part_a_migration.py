@@ -184,10 +184,10 @@ def a6_writetime_copy(spark, sf_dir):
 
 @register("a9_resumable_copy", oracle="SELECT * FROM orders")
 def a9_resumable_copy(spark, sf_dir):
-    """Resumable range-by-range copy: 8 contiguous o_orderkey ranges,
-    each a filtered pushdown write + done-marker (restart skips marked
-    ranges — interruption path tested in tests/test_migrate.py). The
-    hash-match proves the range union reassembles the table exactly."""
+    """Resumable range-by-range copy: 8 token ranges of o_orderkey, each
+    a filtered write + done-marker (restart skips marked ranges —
+    interruption path tested in tests/test_migrate.py). The hash-match
+    proves the range union reassembles the table exactly."""
     dst = scratch_dir_unique("a9")
     return mig.copy_table_resumable(
         spark, sf_dir, dst, "orders", "o_orderkey", n_splits=8

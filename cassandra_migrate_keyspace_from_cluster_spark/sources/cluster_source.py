@@ -13,9 +13,9 @@ Spark Cassandra Connector with server-side token predicates
 (``token(pk) > ? AND token(pk) <= ?``) instead of the local filter —
 see ``sources/cassandra.py`` for the production connector config.
 
-Token model: unsigned 64-bit ring, token(key) = xxhash64-style mix of
-the key's string bytes (md5-based here: standardized, deterministic
-across runs/executors, uniform). ``n_ranges`` splits the ring evenly —
+Token model: unsigned 64-bit ring, token(key) = first 8 bytes of the md5
+of the key's string form (``token_of``; ``token_in_range`` is the same
+test as a Spark expression). ``n_ranges`` splits the ring evenly —
 exactly how a connector derives its default splits from the ring.
 
 Scale notes: range planning is O(n_ranges) driver work with NO data
@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import hashlib
 
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 RING_BITS = 64
@@ -40,9 +41,20 @@ _RING = 1 << RING_BITS
 def token_of(key) -> int:
     """Ring position of a partition key: first 8 bytes of md5 of the
     key's utf-8 string form, as unsigned 64-bit. Standardized hash →
-    identical on every executor/engine, uniform on the ring."""
+    identical on every executor/engine, uniform on the ring. NULL is 0."""
+    if key is None:
+        return 0
     h = hashlib.md5(str(key).encode("utf-8")).digest()
     return int.from_bytes(h[:8], "big")
+
+
+def token_in_range(col, lo: int, hi: int):
+    """Spark predicate ``lo <= token_of(col) < hi`` for integer and string
+    keys: fixed-width lowercase hex compares in numeric order, and an md5
+    compares with a 16-digit bound as its first 16 digits (the token) do."""
+    h = F.coalesce(F.md5(col.cast("string")), F.lit("0" * 16))
+    above = h >= F.lit(f"{lo:016x}")
+    return above if hi == _RING else above & (h < F.lit(f"{hi:016x}"))
 
 
 def ring_ranges(n_ranges: int) -> list[tuple[int, int]]:

@@ -69,22 +69,28 @@ def test_range_split_covers_all_rows(spark):
 def test_resumable_copy_skips_completed_ranges(spark):
     """A9: an interrupted copy resumes where it stopped — completed
     ranges are skipped (markers untouched) and the final content equals
-    the source."""
+    the source. Planning submits no Spark job: each run submits exactly
+    one job per range it copies, 3 before the crash and 5 on resume."""
     import os
 
     src = load_table(spark, SMOKE_SF, "orders")
     dst = tempfile.mkdtemp(prefix="mig_resume_")
-    with pytest.raises(mig.SimulatedFailure):
-        mig.copy_table_resumable(
-            spark, SMOKE_SF, dst, "orders", "o_orderkey", n_splits=8, fail_after=3
-        )
+    args = (spark, SMOKE_SF, dst, "orders", "o_orderkey")
+
+    def crash():
+        with pytest.raises(mig.SimulatedFailure):
+            mig.copy_table_resumable(*args, n_splits=8, fail_after=3)
+
+    assert jobs_submitted(spark, crash) == 3
     markers = sorted(f for f in os.listdir(dst) if f.endswith(".done"))
     assert len(markers) == 3
     stamps = {m: os.path.getmtime(os.path.join(dst, m)) for m in markers}
 
-    copied = mig.copy_table_resumable(
-        spark, SMOKE_SF, dst, "orders", "o_orderkey", n_splits=8
-    )
+    resumed = []
+    assert jobs_submitted(
+        spark, lambda: resumed.append(mig.copy_table_resumable(*args, n_splits=8))
+    ) == 5
+    copied = resumed[0]
     # all 8 ranges now done; the first 3 markers were not rewritten
     assert len([f for f in os.listdir(dst) if f.endswith(".done")]) == 8
     for m, ts in stamps.items():
@@ -114,6 +120,101 @@ def test_cluster_config_conf_shape():
     assert opts["ttl.v"] == "v_ttl"
 
 
+def _range_rows(dst, n_ranges: int) -> list[int]:
+    """Rows the resumable copy wrote to each ``range=i`` directory of
+    ``<dst>/orders.parquet``, from the parquet footers."""
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        footer_rows,
+    )
+
+    return [
+        footer_rows(os.path.join(dst, "orders.parquet", f"range={i}"))
+        for i in range(n_ranges)
+    ]
+
+
+def _publish(src_dir, keys) -> None:
+    """Write (or replace) an ``orders`` table under ``src_dir`` whose
+    columns are a bigint key ``k`` (NULLs allowed) and a value ``v``
+    derived from it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"k": pa.array(keys, pa.int64()), "v": [f"v{k}" for k in keys]}),
+        os.path.join(src_dir, "orders.parquet"),
+    )
+
+
+def test_resume_after_source_change_copies_each_key_once(spark, tmp_path):
+    """ROADMAP item 1's repro: copy 1,000 keys over 4 ranges, crash after
+    2, replace the source with 2,000 keys (1,000 below the old minimum)
+    and resume. The target holds no key twice, and the only drift left
+    for a repair pass is the new keys whose token lies in the two ranges
+    copied before the crash."""
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        ring_ranges,
+        token_of,
+    )
+
+    src_dir, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    os.makedirs(src_dir)
+    args = (spark, src_dir, dst, "orders", "k")
+    _publish(src_dir, list(range(1000, 2000)))
+    with pytest.raises(mig.SimulatedFailure):
+        mig.copy_table_resumable(*args, n_splits=4, fail_after=2)
+    _publish(src_dir, list(range(2000)))
+    out = mig.copy_table_resumable(*args, n_splits=4)
+
+    assert out.count() == out.select("k").distinct().count()
+    copied_first = ring_ranges(4)[:2]
+    missed = sorted(
+        k for k in range(1000) if any(lo <= token_of(k) < hi for lo, hi in copied_first)
+    )
+    assert 0 < len(missed) < 1000
+    diff = mig.snapshot_diff(load_table(spark, src_dir, "orders"), out, "k", ("v",))
+    assert sorted((r.k, r.status) for r in diff.collect()) == [
+        (k, "missing_in_target") for k in missed
+    ]
+
+
+def test_resume_trusts_only_markers_of_its_own_plan(spark, tmp_path):
+    """A range whose data was written but whose marker was not (a crash
+    between the two) is copied again, and the target equals the source
+    exactly. A resume under another plan (a different ``n_splits``) is
+    refused with a ValueError naming the first mismatched marker rather
+    than mixing two plans' overlapping ranges."""
+    dst = str(tmp_path)
+    args = (spark, SMOKE_SF, dst, "orders", "o_orderkey")
+    src = load_table(spark, SMOKE_SF, "orders")
+    mig.copy_table_resumable(*args, n_splits=4)
+    os.remove(os.path.join(dst, "_orders_range_2.done"))
+    out = mig.copy_table_resumable(*args, n_splits=4)
+    assert out.count() == src.count()
+    assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
+    with pytest.raises(ValueError, match=re.escape("_orders_range_0.done")):
+        mig.copy_table_resumable(*args, n_splits=8)
+
+
+@pytest.mark.parametrize(
+    "keys", [[], [5, 5, -3, None, 7, None, 5] * 30], ids=["empty", "repeated_keys"]
+)
+def test_resumable_copy_is_exact_on_edge_sources(spark, tmp_path, keys):
+    """An empty source copies to a 0-row target with the source schema;
+    repeated key values, NULL keys among them, are copied with exact
+    multiplicity."""
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    _publish(src_dir, keys)
+    src = load_table(spark, src_dir, "orders")
+    out = mig.copy_table_resumable(
+        spark, src_dir, str(tmp_path / "dst"), "orders", "k", n_splits=3
+    )
+    assert out.schema == src.schema
+    assert out.count() == len(keys)
+    assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
+
+
 def test_throttled_copy_pacing_schedule(spark, tmp_path):
     """A10: with a fake clock, the pacing schedule is exact — before
     range i starts, virtual time >= rows_copied_before_i / rate; with
@@ -132,7 +233,7 @@ def test_throttled_copy_pacing_schedule(spark, tmp_path):
     src = spark.read.parquet(f"{sf}/orders.parquet")
     assert out.count() == src.count()
     assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
-    counts = [n for _, _, n in mig.plan_key_ranges(src, "o_orderkey", 4)]
+    counts = _range_rows(tmp_path / "thr", 4)
     # ranges run sequentially: cumulative virtual time when the LAST
     # range starts must be >= everything-before / rate (clock only
     # advances via sleep, so the schedule is exact, not approximate)
@@ -152,7 +253,7 @@ def test_paced_copy_resumes_and_repaces_remaining_ranges(spark, tmp_path):
     """A9 + A10 in one loop: a paced copy interrupted after two of four
     ranges keeps its markers; the resumed run skips those ranges, paces
     only the ranges it copies itself (a fresh clock sleeps for every
-    range but the last, at the planned row counts), and completes the
+    range but the last, at the written row counts), and completes the
     table exactly."""
     import os
 
@@ -169,8 +270,7 @@ def test_paced_copy_resumes_and_repaces_remaining_ranges(spark, tmp_path):
             *args, n_splits=4, rows_per_second=rate, clock=first, fail_after=2
         )
     src = load_table(spark, SMOKE_SF, "orders")
-    counts = [n for _, _, n in mig.plan_key_ranges(src, "o_orderkey", 4)]
-    assert abs(first.t - counts[0] / rate) < 1e-6
+    assert abs(first.t - _range_rows(dst, 2)[0] / rate) < 1e-6
     markers = sorted(f for f in os.listdir(dst) if f.endswith(".done"))
     assert len(markers) == 2
     stamps = {m: os.stat(os.path.join(dst, m)).st_mtime_ns for m in markers}
@@ -182,6 +282,7 @@ def test_paced_copy_resumes_and_repaces_remaining_ranges(spark, tmp_path):
     assert len([f for f in os.listdir(dst) if f.endswith(".done")]) == 4
     for m, ns in stamps.items():
         assert os.stat(os.path.join(dst, m)).st_mtime_ns == ns
+    counts = _range_rows(dst, 4)
     assert abs(sum(second.slept) - sum(counts[2:-1]) / rate) < 1e-6
     assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
 
@@ -196,10 +297,13 @@ def test_migrate_keyspace_without_tables_reports_nothing(spark, tmp_path):
 
 def test_cluster_source_token_ranges(spark):
     """A1 connector simulation: one task per token range, ranges tile
-    the table exactly, and uniform-hash tokens keep splits balanced."""
+    the table exactly, and uniform-hash tokens keep splits balanced. The
+    Spark predicate ``token_in_range`` puts every key in the range
+    ``token_of`` puts it in, and in that range only."""
     from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
         read_keyspace_table,
         ring_ranges,
+        token_in_range,
         token_of,
     )
 
@@ -222,6 +326,19 @@ def test_cluster_source_token_ranges(spark):
     assert max(sizes) <= 2 * (sum(sizes) / len(sizes))
     # determinism: the same key always lands in the same range
     assert token_of(42) == token_of(42)
+    # the Spark predicate agrees with token_of on bigint keys (negatives
+    # and both extremes), string keys (non-ASCII too) and NULL
+    bigints = list(range(-10_250, 10_250)) + [-(1 << 63), (1 << 63) - 1, None]
+    strings = [f"k{i}" for i in range(20_500)] + ["", "é", "日本", "a|b", None]
+    for keys, ddl in [(bigints, "k bigint"), (strings, "k string")]:
+        keyed = spark.createDataFrame([(k,) for k in keys], ddl)
+        for n in (1, 3, 8):
+            rng = ring_ranges(n)
+            flags = [token_in_range(F.col("k"), lo, hi) for lo, hi in rng]
+            for row in keyed.select("k", F.array(*flags).alias("in")).collect():
+                want = [i for i, (lo, hi) in enumerate(rng) if lo <= token_of(row.k) < hi]
+                assert len(want) == 1
+                assert [i for i, hit in enumerate(row["in"]) if hit] == want, (row.k, n)
 
 
 def test_cluster_source_reads_list_columns(spark):
