@@ -196,14 +196,15 @@ def a9_resumable_copy(spark, sf_dir):
 
 @register("a1_cluster_scan", oracle="SELECT * FROM orders")
 def a1_cluster_scan(spark, sf_dir):
-    """Cluster connect + token-range scan (A1), EXECUTED: the
-    ``keyspace_cluster`` Python DataSource plans one InputPartition per
-    token range (ring math only, no data scan) and each Spark task
-    reads exactly its range's rows — the connector dataflow the
-    reference is built on, running for real against the simulated
-    cluster. Hash-match proves the ranges tile the table: no row lost,
-    none duplicated. Range balance + task count are pytest-asserted
-    (tests/test_migrate.py)."""
+    """Cluster connect + token-range scan (A1), EXECUTED: the ring is
+    split into 8 token ranges (ring math only, no data scan) and each
+    range is one filtered parquet scan coalesced to one partition, so
+    each Spark task reads exactly its range's rows, with no shuffle and
+    no Python worker — the connector dataflow the reference is built
+    on, running for real against the simulated cluster. Hash-match
+    proves the ranges tile the table: no row lost, none duplicated.
+    Range membership, balance and task count are pytest-asserted
+    (tests/test_migrate.py), the plan's shape in tests/test_plans.py."""
     from ..sources.cluster_source import read_keyspace_table
 
     return read_keyspace_table(

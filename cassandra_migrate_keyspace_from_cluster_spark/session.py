@@ -5,7 +5,9 @@ Every query in the registry assumes:
     oracle treats them as UTC — SURVEY.md §5.4),
   - AQE enabled (runtime join-strategy + partition coalescing; this is
     the main 100-TB-scale lever we rely on instead of hand-tuning),
-  - Arrow enabled (Part G pandas UDFs).
+  - Arrow enabled (Part G pandas UDFs),
+  - ``spark.sql.unionOutputPartitioning`` off (the A1 token-range scan
+    keeps one partition per range).
 
 Scale note: ``shuffle_partitions`` defaults to the local core count; on
 a real 1000-executor cluster you would set it to ~2-3x total cores (or
@@ -76,6 +78,9 @@ def build_session(
         # r3 fixtures: naive TIMESTAMP(MICROS) must read as TimestampType
         # (see configure_existing) — LTZ-only expressions reject NTZ.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # A1 token-range scan: keep a union of coalesce(1) ranges one
+        # partition per range (see configure_existing).
+        .config("spark.sql.unionOutputPartitioning", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -99,4 +104,10 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     # the UTC session zone (load_table also normalizes defensively for
     # sessions that bypass this config).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # The A1 scan (sources/cluster_source.py) is a union of one
+    # coalesce(1) scan per token range. With this on (Spark 4.1's
+    # default), a union whose children all have one partition is zipped
+    # into one partition; off (Spark 4.0's behaviour) it keeps one
+    # partition per range.
+    spark.conf.set("spark.sql.unionOutputPartitioning", "false")
     return spark

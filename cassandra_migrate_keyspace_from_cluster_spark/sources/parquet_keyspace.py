@@ -7,10 +7,11 @@ Cassandra Connector (see ``sources/cassandra.py`` for the design); the
 query layer is source-agnostic because everything downstream is plain
 DataFrame ops.
 
-Opening a table is metadata only. ``load_table`` builds the Spark schema
-from the parquet footer of the table's first part file and hands it to
-the reader, so Spark submits no schema-inference job; ``footer_rows``
-counts a table from its footers. Neither reads a data page.
+Opening a table is metadata only. ``load_table`` (``load_path`` for a
+path) builds the Spark schema from the parquet footer of the table's
+first part file and hands it to the reader, so Spark submits no
+schema-inference job; ``footer_rows`` counts a table from its footers.
+Neither reads a data page.
 
 Scale notes:
   - The scan is still Spark's parquet scan, so Catalyst keeps full
@@ -105,10 +106,19 @@ def _spark_type(at) -> T.DataType:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one keyspace table as a DataFrame, with its schema built from
-    the footer of the first part file (all parts of one table share a
-    schema) and passed to the reader — so opening a table submits no
-    Spark job: no schema-inference job, no data read until an action.
+    """Load one keyspace table as a DataFrame (``load_path`` of its
+    path); an unknown table name raises ``KeyError``."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    return load_path(spark, table_path(sf_dir, name))
+
+
+def load_path(spark: SparkSession, path: str) -> DataFrame:
+    """Load the parquet table at ``path`` (a file or a directory of part
+    files) as a DataFrame, with its schema built from the footer of the
+    first part file (all parts of one table share a schema) and passed
+    to the reader — so opening a table submits no Spark job: no
+    schema-inference job, no data read until an action.
 
     A missing table path raises ``FileNotFoundError`` naming the path.
 
@@ -129,12 +139,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       ``stabilize_wallclock`` then keeps the rendered wall-clock equal to
       DuckDB's naive read under any session zone.
     """
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     import pyarrow.parquet as pq
     import pyarrow.types as pat
 
-    path = table_path(sf_dir, name)
     footer = pq.ParquetFile(
         list_part_files(path)[0], coerce_int96_timestamp_unit="us"
     ).schema_arrow

@@ -295,19 +295,45 @@ def test_migrate_keyspace_without_tables_reports_nothing(spark, tmp_path):
     assert report.count() == 0
 
 
-def test_cluster_source_token_ranges(spark):
+def test_cluster_source_token_ranges(spark, tmp_path):
     """A1 connector simulation: one task per token range, ranges tile
-    the table exactly, and uniform-hash tokens keep splits balanced. The
-    Spark predicate ``token_in_range`` puts every key in the range
-    ``token_of`` puts it in, and in that range only."""
+    the table exactly, and uniform-hash tokens keep splits balanced.
+    Partition i holds only rows whose key token is in range i, for a
+    single file, a directory of parts and a table with NULL keys (kept,
+    all in partition 0: NULL is token 0). The Spark predicate
+    ``token_in_range`` puts every key in the range ``token_of`` puts it
+    in, and in that range only."""
     from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
         read_keyspace_table,
         ring_ranges,
         token_in_range,
         token_of,
     )
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        footer_rows,
+    )
 
     path = "/root/testdata/sf0.001/orders.parquet"
+    events_dir, n_events = _split_events(tmp_path)
+    null_dir = str(tmp_path / "nulls")
+    os.makedirs(null_dir)
+    null_keys = [None, 3, None, -7] * 5 + list(range(40))
+    _publish(null_dir, null_keys)
+    tables = [  # (path, key, rows, NULL keys)
+        (path, "o_orderkey", footer_rows(path), 0),
+        (str(events_dir), "event_id", n_events, 0),
+        (os.path.join(null_dir, "orders.parquet"), "k", len(null_keys), null_keys.count(None)),
+    ]
+    for table, key, n_rows, n_nulls in tables:
+        for n in (1, 3, 8):
+            rng = ring_ranges(n)
+            scan = read_keyspace_table(spark, table, key, n_ranges=n)
+            assert scan.rdd.getNumPartitions() == n, (table, n)
+            rows = scan.select(F.spark_partition_id().alias("p"), F.col(key).alias("k")).collect()
+            assert len(rows) == n_rows, (table, n)
+            bad = [(r.p, r.k) for r in rows if not rng[r.p][0] <= token_of(r.k) < rng[r.p][1]]
+            assert not bad, (table, n, bad[:5])
+            assert [r.p for r in rows if r.k is None] == [0] * n_nulls, (table, n)
     df = read_keyspace_table(spark, path, "o_orderkey", n_ranges=8)
     assert df.rdd.getNumPartitions() == 8
     plain = spark.read.parquet(path)
@@ -339,6 +365,27 @@ def test_cluster_source_token_ranges(spark):
                 want = [i for i, (lo, hi) in enumerate(rng) if lo <= token_of(row.k) < hi]
                 assert len(want) == 1
                 assert [i for i, hit in enumerate(row["in"]) if hit] == want, (row.k, n)
+
+
+def test_non_positive_range_count_is_refused(spark, tmp_path):
+    """A token-range plan needs at least one range: the scan and the
+    resumable copy (both planned by ``ring_ranges``) raise ValueError
+    naming the count instead of returning an empty plan, so a bad count
+    never copies nothing silently."""
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        read_keyspace_table,
+        ring_ranges,
+    )
+
+    for n in (0, -1):
+        with pytest.raises(ValueError, match=f"got {n}$"):
+            ring_ranges(n)
+    with pytest.raises(ValueError, match="got 0$"):
+        read_keyspace_table(spark, f"{SMOKE_SF}/orders.parquet", "o_orderkey", n_ranges=0)
+    dst = tmp_path / "dst"
+    with pytest.raises(ValueError, match="got -1$"):
+        mig.copy_table_resumable(spark, SMOKE_SF, str(dst), "orders", "o_orderkey", n_splits=-1)
+    assert not [f for f in dst.rglob("*") if f.is_file()]
 
 
 def test_cluster_source_reads_list_columns(spark):

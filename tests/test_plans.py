@@ -18,7 +18,7 @@ from cassandra_migrate_keyspace_from_cluster_spark.plans.explain import (
 )
 from cassandra_migrate_keyspace_from_cluster_spark.registry import specs
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, jobs_submitted
 
 ALL_SPECS = specs()
 
@@ -537,3 +537,48 @@ def test_keyset_pagination_seeks_and_pushes_down(spark):
     assert pushed and "o_totalprice" in pushed[0], (
         f"seek predicate not pushed to the scan:\n{plan}"
     )
+
+
+def test_cluster_scan_is_jvm_only_and_shuffle_free(spark):
+    """The A1 token-range scan is one filtered parquet scan per range:
+    building it submits no Spark job, its executed plan has no Python
+    node and no Exchange, and a per-range row count prunes every range's
+    scan to the key column."""
+    from pyspark.sql import functions as F
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        read_keyspace_table,
+    )
+
+    built = []
+    path = f"{SF_SMOKE}/orders.parquet"
+    assert jobs_submitted(
+        spark, lambda: built.append(read_keyspace_table(spark, path, "o_orderkey", 8))
+    ) == 0
+    scan = built[0]
+    scan.collect()
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "Exchange" not in plan, plan
+    counts = physical_plan(scan.groupBy(F.spark_partition_id()).count())
+    read = [ln.split("ReadSchema: ")[1] for ln in counts.splitlines() if "ReadSchema" in ln]
+    assert read == ["struct<o_orderkey:bigint>"] * 8, counts
+
+
+def test_configure_existing_keeps_one_partition_per_range(spark):
+    """A session the engine did not build (the driver harness's, through
+    ``configure_existing``) gets ``spark.sql.unionOutputPartitioning``
+    off, so the A1 scan still has one partition per token range there;
+    with it on, Spark 4.1 zips the union of one-partition range scans."""
+    from cassandra_migrate_keyspace_from_cluster_spark.session import configure_existing
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        read_keyspace_table,
+    )
+
+    spark.conf.set("spark.sql.unionOutputPartitioning", "true")
+    try:
+        configure_existing(spark)
+        assert spark.conf.get("spark.sql.unionOutputPartitioning") == "false"
+        scan = read_keyspace_table(spark, f"{SF_SMOKE}/orders.parquet", "o_orderkey", 8)
+        assert scan.rdd.getNumPartitions() == 8
+    finally:
+        spark.conf.set("spark.sql.unionOutputPartitioning", "false")
