@@ -23,6 +23,13 @@ Scale notes (100-TB design point):
     plans the A1 scan's token ranges (``ring_ranges``: no data read, no
     Spark job). A5's ntile over a distributed rank is an exact per-range
     row-count report, not a copy plan.
+  - Copy jobs are small and independent (one per table, one per token
+    range), so both copy paths submit them from a thread pool of
+    ``_POOL_WIDTH`` threads and the scheduler interleaves them across
+    the executors; a paced resumable copy is the exception and runs one
+    range at a time. Every copy unit is coalesced to ~1M-row files
+    (``_coalesced``), so the target never inherits the source's
+    fragmentation and a range does not write one file per input split.
   - Row counts (A7, and the copy report) are parquet footer metadata:
     no Spark job. The content checksum (A8) is one pass per table,
     aggregation-only — an order-insensitive reduction, so it needs no
@@ -33,6 +40,7 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,6 +103,17 @@ def schema_manifest(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFram
 def _options(fmt: str) -> dict:
     # CSV is the one sink that needs a header line to carry column names
     return {"header": True} if fmt == "csv" else {}
+
+
+# copy jobs submitted at once, by migrate_keyspace (one per table) and by
+# an unpaced copy_table_resumable (one per token range)
+_POOL_WIDTH = 8
+
+
+def _coalesced(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` merged, without a shuffle, into one partition (one written
+    file) per ~1M of its estimated ``n_rows`` rows."""
+    return df.coalesce(max(1, -(-n_rows // 1_000_000)))
 
 
 def _write(df: DataFrame, path: str, fmt: str = "parquet", partition_by=()) -> None:
@@ -217,15 +236,16 @@ def copy_table_resumable(
     fail_after: int | None = None,
 ) -> DataFrame:
     """Resumable, optionally throttled bulk copy (A9/A10): the table is
-    copied one token range at a time; each completed range writes its
-    data then a done-marker, and a restarted run skips every marked range.
+    copied by token range; each completed range writes its data then a
+    done-marker, and a restarted run skips every marked range.
 
     This is the reference's core control loop (per-token-range copy with
     persisted progress — SURVEY.md §3.1) expressed over Spark jobs: each
-    range copy is one Spark job, a filtered write of ``range=i``.
-    Idempotence: re-running a range overwrites the same subdirectory, so
-    at-least-once execution is safe — no coordination needed beyond the
-    marker (written only after the range's data is durable).
+    range copy is one Spark job, a filtered write of ``range=i``
+    coalesced to ~1M-row files (the token is uniform, so a range holds
+    about ``rows / n_splits`` rows). An unpaced copy submits its pending
+    ranges concurrently from a pool of ``min(_POOL_WIDTH, pending)``
+    threads; a paced copy runs them one at a time, in plan order.
 
     Range i copies the rows whose key token lies in ``[lo_i, hi_i)`` of
     ``plan_key_ranges(n_splits)``. The plan depends on ``n_splits`` alone
@@ -234,6 +254,17 @@ def copy_table_resumable(
     copied by exactly one range; rows that changed under a range copied
     earlier are left to a ``snapshot_diff`` repair. A marker records its
     range's ``lo..hi``, and one from another plan raises ``ValueError``.
+    The plan and every marker are checked before anything is created, so
+    a refused call leaves the target as it found it.
+
+    Restart safety needs no coordination beyond the markers, serial or
+    concurrent: each range overwrites its own ``range=i`` directory and
+    writes its marker only after that write's job has committed. A crash
+    with ranges in flight leaves some set of ranges marked, each with
+    complete data; the resume skips those and overwrites the rest. If
+    one range's write raises, the ranges already in flight still finish
+    and are marked before the error propagates, so a failed range is
+    reported, and the resume copies exactly the unmarked ones.
 
     ``rows_per_second`` paces the loop to a rows/second budget so the
     migration never overruns the source cluster's serving capacity:
@@ -243,36 +274,55 @@ def copy_table_resumable(
     ranges it still copies. ``clock`` (``now``/``sleep``) is
     injectable so tests assert the sleep schedule exactly; the default
     is the real monotonic clock. This driver-side pacing bounds SOURCE
-    read pressure; executor-side write throttling maps to the
-    connector's throughput option (see sources/cassandra.py).
+    read pressure, which is why a paced copy never runs two ranges at
+    once; executor-side write throttling maps to the connector's
+    throughput option (see sources/cassandra.py).
 
-    ``fail_after=k`` aborts after k ranges to let tests exercise the
-    resume path. Returns the re-read of the completed target.
+    ``fail_after=k`` copies the first k pending ranges in plan order and
+    then raises ``SimulatedFailure``, to let tests exercise the resume
+    path; with k or fewer ranges pending nothing is injected. Returns
+    the re-read of the completed target.
     """
-    clock = clock or WallClock()
     src = load_table(spark, src_dir, name)
     table_dir = os.path.join(dst_dir, f"{name}.parquet")
-    os.makedirs(table_dir, exist_ok=True)
-    start, copied, done = clock.now(), 0, 0
+
+    def marker(i: int) -> str:
+        return os.path.join(dst_dir, f"_{name}_range_{i}.done")
+
+    pending = []
     for i, (lo, hi) in enumerate(plan_key_ranges(n_splits)):
-        marker = os.path.join(dst_dir, f"_{name}_range_{i}.done")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                if fh.read().strip() != f"{lo}..{hi}":
-                    raise ValueError(f"{marker} is not {lo}..{hi}, range {i} of {n_splits}")
+        if not os.path.exists(marker(i)):
+            pending.append((i, lo, hi))
             continue
-        if fail_after is not None and done >= fail_after:
-            raise SimulatedFailure(f"injected failure before range {i}")
-        if rows_per_second and copied:
-            delay = start + copied / rows_per_second - clock.now()
-            if delay > 0:
-                clock.sleep(delay)
+        with open(marker(i)) as fh:
+            if fh.read().strip() != f"{lo}..{hi}":
+                raise ValueError(f"{marker(i)} is not {lo}..{hi}, range {i} of {n_splits}")
+    os.makedirs(table_dir, exist_ok=True)
+    range_rows = -(-footer_rows(table_path(src_dir, name)) // n_splits)
+
+    def copy_range(i: int, lo: str, hi: str) -> str:
         part = os.path.join(table_dir, f"range={i}")
-        _write(src.filter(token_in_range(F.col(key), lo, hi)), part)
-        with open(marker, "w") as fh:
+        _write(_coalesced(src.filter(token_in_range(F.col(key), lo, hi)), range_rows), part)
+        with open(marker(i), "w") as fh:
             fh.write(f"{lo}..{hi}\n")
-        copied += footer_rows(part)
-        done += 1
+        return part
+
+    todo = pending[:fail_after] if fail_after is not None else pending
+    if rows_per_second:
+        clock = clock or WallClock()
+        start, copied = clock.now(), 0
+        for rng in todo:
+            if copied:
+                delay = start + copied / rows_per_second - clock.now()
+                if delay > 0:
+                    clock.sleep(delay)
+            copied += footer_rows(copy_range(*rng))
+    elif todo:
+        with ThreadPoolExecutor(max_workers=min(_POOL_WIDTH, len(todo))) as ex:
+            for done in [ex.submit(copy_range, *rng) for rng in todo]:
+                done.result()
+    if len(todo) < len(pending):
+        raise SimulatedFailure(f"injected failure before range {pending[len(todo)][0]}")
     # the range=i directories read back as a partition column: dropped
     return _read_back(spark, table_dir, src.schema).select(*src.columns)
 
@@ -408,11 +458,13 @@ def migrate_keyspace(
     over the full keyspace.
 
     Each table's copy is the shuffle-free scan→write pass of
-    ``copy_table``, coalesced to ~1M-row output files so the target
-    never inherits the source's fragmentation (coalesce is narrow — it
-    merges read splits without a shuffle; a4f's repartition form is the
+    ``copy_table``, coalesced to ~1M-row output files (``_coalesced``,
+    the rule the resumable copy's ranges share) so the target never
+    inherits the source's fragmentation (coalesce is narrow — it merges
+    read splits without a shuffle; a4f's repartition form is the
     rebalancing alternative). Tables are independent, so their copy
-    jobs are SUBMITTED CONCURRENTLY from a thread pool — the standard
+    jobs are SUBMITTED CONCURRENTLY from a thread pool of
+    ``_POOL_WIDTH`` threads — the standard
     Spark pattern for fleets of small independent jobs (the scheduler
     interleaves them across executors; per-job fixed overhead stops
     serializing). The report is emitted as one local frame in
@@ -425,19 +477,17 @@ def migrate_keyspace(
     footers — what a fresh reader of the target sees, independent of
     the writer. Scale note: ``footer_rows`` reads one footer per part
     file on the driver, for the source and again for the target."""
-    from concurrent.futures import ThreadPoolExecutor
-
     def copy_one(name: str):
         src = load_table(spark, src_dir, name)
         dst = os.path.join(dst_dir, f"{name}.parquet")
         n_src = footer_rows(table_path(src_dir, name))
-        _write(src.coalesce(max(1, -(-n_src // 1_000_000))), dst)
+        _write(_coalesced(src, n_src), dst)
         n_dst = footer_rows(dst)
         return (name, n_src, n_dst, n_src == n_dst)
 
     rows = []
     if tables:
-        with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:
+        with ThreadPoolExecutor(max_workers=min(_POOL_WIDTH, len(tables))) as ex:
             rows = list(ex.map(copy_one, tables))  # preserves tables order
     return local_frame(spark, rows, _REPORT_SCHEMA)
 

@@ -184,10 +184,12 @@ def a6_writetime_copy(spark, sf_dir):
 
 @register("a9_resumable_copy", oracle="SELECT * FROM orders")
 def a9_resumable_copy(spark, sf_dir):
-    """Resumable range-by-range copy: 8 token ranges of o_orderkey, each
-    a filtered write + done-marker (restart skips marked ranges —
-    interruption path tested in tests/test_migrate.py). The hash-match
-    proves the range union reassembles the table exactly."""
+    """Resumable token-range copy: 8 token ranges of o_orderkey, each a
+    filtered write (one file per ~1M rows) + done-marker, submitted
+    concurrently from a thread pool; restart skips marked ranges
+    (interruption, failed-range and concurrency laws in
+    tests/test_migrate.py). The hash-match proves the range union
+    reassembles the table exactly."""
     dst = scratch_dir_unique("a9")
     return mig.copy_table_resumable(
         spark, sf_dir, dst, "orders", "o_orderkey", n_splits=8
@@ -232,12 +234,13 @@ class _FakeClock:
 
 @register("a10_throttled_copy", oracle="SELECT * FROM orders")
 def a10_throttled_copy(spark, sf_dir):
-    """Rate-limited range-by-range copy (A10): the per-range loop paces
-    itself to a rows/second budget before submitting each range —
-    source-cluster protection made executable. Runs against the
-    injectable clock (deterministic; the sleep schedule itself is
-    asserted in tests/test_migrate.py); hash-match proves throttling
-    changes WHEN ranges copy, never WHAT arrives."""
+    """Rate-limited range-by-range copy (A10): a paced copy runs its
+    ranges one at a time and paces itself to a rows/second budget before
+    submitting each range — source-cluster protection made executable.
+    Runs against the injectable clock (deterministic; the sleep schedule
+    and the one-write-in-flight law are asserted in
+    tests/test_migrate.py); hash-match proves throttling changes WHEN
+    ranges copy, never WHAT arrives."""
     dst = scratch_dir_unique("a10")
     return mig.copy_table_resumable(
         spark, sf_dir, dst, "orders", "o_orderkey", n_splits=8,

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import re
 import tempfile
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -183,8 +184,13 @@ def test_resume_trusts_only_markers_of_its_own_plan(spark, tmp_path):
     between the two) is copied again, and the target equals the source
     exactly. A resume under another plan (a different ``n_splits``) is
     refused with a ValueError naming the first mismatched marker rather
-    than mixing two plans' overlapping ranges."""
-    dst = str(tmp_path)
+    than mixing two plans' overlapping ranges; the refusal creates
+    nothing, even in a target that holds only the foreign marker."""
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        ring_ranges,
+    )
+
+    dst = str(tmp_path / "dst")
     args = (spark, SMOKE_SF, dst, "orders", "o_orderkey")
     src = load_table(spark, SMOKE_SF, "orders")
     mig.copy_table_resumable(*args, n_splits=4)
@@ -194,6 +200,13 @@ def test_resume_trusts_only_markers_of_its_own_plan(spark, tmp_path):
     assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
     with pytest.raises(ValueError, match=re.escape("_orders_range_0.done")):
         mig.copy_table_resumable(*args, n_splits=8)
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    lo, hi = ring_ranges(4)[0]
+    (fresh / "_orders_range_0.done").write_text(f"{lo}..{hi}\n")
+    with pytest.raises(ValueError, match=re.escape("_orders_range_0.done")):
+        mig.copy_table_resumable(spark, SMOKE_SF, str(fresh), "orders", "o_orderkey", n_splits=8)
+    assert sorted(os.listdir(fresh)) == ["_orders_range_0.done"]
 
 
 @pytest.mark.parametrize(
@@ -287,6 +300,125 @@ def test_paced_copy_resumes_and_repaces_remaining_ranges(spark, tmp_path):
     assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
 
 
+def test_failed_range_is_reported_and_resumed(spark, tmp_path, monkeypatch):
+    """A range whose write raises is reported, never dropped: an unpaced
+    copy over 8 ranges raises that range's error after every other range
+    has written all its rows and its marker, the failed range has
+    neither, and the resume submits one job, for that range, and
+    completes the table exactly."""
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        ring_ranges,
+        token_of,
+    )
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        footer_rows,
+    )
+
+    dst = str(tmp_path)
+    args = (spark, SMOKE_SF, dst, "orders", "o_orderkey")
+    write = mig._write
+
+    def failing(df, path, *a, **k):
+        if path.endswith("range=2"):
+            raise OSError("no space left for range=2")
+        write(df, path, *a, **k)
+
+    monkeypatch.setattr(mig, "_write", failing)
+    with pytest.raises(OSError, match="range=2"):
+        mig.copy_table_resumable(*args, n_splits=8)
+    src = load_table(spark, SMOKE_SF, "orders")
+    keys = [r.o_orderkey for r in src.select("o_orderkey").collect()]
+    for i, (lo, hi) in enumerate(ring_ranges(8)):
+        marker = os.path.join(dst, f"_orders_range_{i}.done")
+        part = os.path.join(dst, "orders.parquet", f"range={i}")
+        if i == 2:
+            assert not os.path.exists(marker) and not os.path.exists(part)
+            continue
+        with open(marker) as fh:
+            assert fh.read() == f"{lo}..{hi}\n"
+        assert footer_rows(part) == sum(lo <= token_of(k) < hi for k in keys), i
+
+    monkeypatch.setattr(mig, "_write", write)
+    resumed = []
+    assert jobs_submitted(
+        spark, lambda: resumed.append(mig.copy_table_resumable(*args, n_splits=8))
+    ) == 1
+    out = resumed[0]
+    assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
+
+
+def test_unpaced_copy_writes_ranges_concurrently(spark, tmp_path, monkeypatch):
+    """An unpaced copy has range writes in flight together: every write
+    waits at a two-party barrier before it starts, which only a second
+    concurrent write can release (a serial copy breaks the barrier)."""
+    barrier = threading.Barrier(2, timeout=60)
+    write = mig._write
+
+    def gated(*a, **k):
+        barrier.wait()
+        write(*a, **k)
+
+    monkeypatch.setattr(mig, "_write", gated)
+    out = mig.copy_table_resumable(
+        spark, SMOKE_SF, str(tmp_path), "orders", "o_orderkey", n_splits=4
+    )
+    src = load_table(spark, SMOKE_SF, "orders")
+    assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
+
+
+def test_paced_copy_writes_one_range_at_a_time(spark, tmp_path, monkeypatch):
+    """A paced copy bounds source read pressure, so it never has two
+    range writes in flight, and its sleep schedule is exact: before each
+    range but the first it sleeps the previous range's rows / rate."""
+    from cassandra_migrate_keyspace_from_cluster_spark.queries.part_a_migration import (
+        _FakeClock,
+    )
+
+    lock, in_flight, peak = threading.Lock(), [0], [0]
+    write = mig._write
+
+    def counted(*a, **k):
+        with lock:
+            in_flight[0] += 1
+            peak[0] = max(peak[0], in_flight[0])
+        try:
+            write(*a, **k)
+        finally:
+            with lock:
+                in_flight[0] -= 1
+
+    monkeypatch.setattr(mig, "_write", counted)
+    rate, clock = 500.0, _FakeClock()
+    mig.copy_table_resumable(
+        spark, SMOKE_SF, str(tmp_path), "orders", "o_orderkey",
+        n_splits=4, rows_per_second=rate, clock=clock,
+    )
+    assert peak[0] == 1
+    counts = _range_rows(tmp_path, 4)
+    assert clock.slept == pytest.approx([n / rate for n in counts[:-1]], abs=1e-9)
+
+
+def test_copies_write_one_file_per_million_rows(spark, tmp_path):
+    """File-shape law: both copy paths coalesce a copy unit to one file
+    per ~1M rows, however many splits its source has. sf0.001 orders
+    rewritten as three part files (three input splits) copies to exactly
+    one part file per ``range=i`` over 4 ranges, and migrate_keyspace
+    writes one part file per table, as it did before the rule was
+    shared."""
+    _split_table(tmp_path, "orders")
+    _split_table(tmp_path, "events")
+    src_dir = str(tmp_path)
+    ranged = tmp_path / "ranged"
+    mig.copy_table_resumable(spark, src_dir, str(ranged), "orders", "o_orderkey", n_splits=4)
+    for i in range(4):
+        assert len(list((ranged / "orders.parquet" / f"range={i}").glob("*.parquet"))) == 1, i
+    keyspace = tmp_path / "keyspace"
+    report = mig.migrate_keyspace(spark, src_dir, str(keyspace), ["orders", "events"])
+    assert all(r.counts_match for r in report.collect())
+    for name in ("orders", "events"):
+        assert len(list((keyspace / f"{name}.parquet").glob("*.parquet"))) == 1, name
+
+
 def test_migrate_keyspace_without_tables_reports_nothing(spark, tmp_path):
     """An empty table list is an empty four-column report, not a thread
     pool error."""
@@ -314,7 +446,7 @@ def test_cluster_source_token_ranges(spark, tmp_path):
     )
 
     path = "/root/testdata/sf0.001/orders.parquet"
-    events_dir, n_events = _split_events(tmp_path)
+    events_dir, n_events = _split_table(tmp_path)
     null_dir = str(tmp_path / "nulls")
     os.makedirs(null_dir)
     null_keys = [None, 3, None, -7] * 5 + list(range(40))
@@ -386,6 +518,7 @@ def test_non_positive_range_count_is_refused(spark, tmp_path):
     with pytest.raises(ValueError, match="got -1$"):
         mig.copy_table_resumable(spark, SMOKE_SF, str(dst), "orders", "o_orderkey", n_splits=-1)
     assert not [f for f in dst.rglob("*") if f.is_file()]
+    assert not (dst / "orders.parquet").exists()
 
 
 def test_cluster_source_reads_list_columns(spark):
@@ -673,14 +806,14 @@ def test_wallclock_stable_under_session_timezone(spark):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def _split_events(tmp_path):
-    """sf0.001's events table rewritten as ``<tmp_path>/events.parquet``,
+def _split_table(tmp_path, name="events"):
+    """sf0.001's ``name`` table rewritten as ``<tmp_path>/<name>.parquet``,
     a directory of three part files with heterogeneous writer profiles
     (zstd / dict-off / tiny row groups). Returns (directory, rows)."""
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(f"{SMOKE_SF}/events.parquet")
-    d = tmp_path / "events.parquet"
+    tbl = pq.read_table(f"{SMOKE_SF}/{name}.parquet")
+    d = tmp_path / f"{name}.parquet"
     d.mkdir()
     n = tbl.num_rows
     profiles = [
@@ -718,7 +851,7 @@ def test_sources_read_directory_shaped_tables(spark, tmp_path):
         list_part_files,
     )
 
-    d, n = _split_events(tmp_path)
+    d, n = _split_table(tmp_path)
     assert len(list_part_files(str(d))) == 3
 
     # load_table path: footer sniff must not crash on a directory, and
@@ -758,7 +891,7 @@ def test_footer_metadata_paths_submit_no_spark_jobs(spark, tmp_path):
     directory), table_counts and schema_manifest (results collected)
     submit no Spark job, and migrate_keyspace submits exactly one job
     per table: its write."""
-    _split_events(tmp_path)
+    _split_table(tmp_path)
     calls = {
         "load_table file": lambda: load_table(spark, SMOKE_SF, "orders"),
         "load_table dir": lambda: load_table(spark, str(tmp_path), "events"),
