@@ -53,11 +53,6 @@ def is_finite(col) -> Column:
     return F.abs(c) <= F.lit(_DBL_MAX)
 
 
-def sql_finite(expr: str) -> str:
-    """DuckDB SQL of :func:`finite` — DuckDB has a real isfinite()."""
-    return f"CASE WHEN isfinite({expr}) THEN {expr} END"
-
-
 # ---------------------------------------------------------------------------
 # Metric-domain tier (the second finding of the extremes probe): the
 # finiteness gate is NOT enough for DISPLAYED raw moments. A group
@@ -86,25 +81,14 @@ def sql_finite(expr: str) -> str:
 METRIC_DOMAIN = 1.0e7
 
 
-def in_domain(col, bound: float = METRIC_DOMAIN) -> Column:
+def in_domain(col) -> Column:
     """``value`` if within the declared metric domain (finite AND
-    |v| <= bound) else NULL (Spark side)."""
+    |v| <= METRIC_DOMAIN) else NULL (Spark side)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.abs(c) <= F.lit(bound), c)
+    return F.when(F.abs(c) <= F.lit(METRIC_DOMAIN), c)
 
 
-def is_in_domain(col, bound: float = METRIC_DOMAIN) -> Column:
+def is_in_domain(col) -> Column:
     """Boolean metric-domain predicate (Spark side)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.abs(c) <= F.lit(bound)
-
-
-def sql_in_domain(expr: str, bound: float = METRIC_DOMAIN) -> str:
-    """DuckDB SQL of :func:`in_domain` (same comparison, same NaN
-    total-order exclusion)."""
-    return f"CASE WHEN abs({expr}) <= {bound!r} THEN {expr} END"
-
-
-def sql_is_in_domain(expr: str, bound: float = METRIC_DOMAIN) -> str:
-    """DuckDB SQL of :func:`is_in_domain`."""
-    return f"(abs({expr}) <= {bound!r})"
+    return F.abs(c) <= F.lit(METRIC_DOMAIN)

@@ -22,7 +22,7 @@
     by graph size from the job that fetches the edges: union-find on
     the driver up to ``_DRIVER_CC_EDGES`` edges, past it
     neardup_clusters_star, the distributed small-star–large-star loop.
-  - Pinned-hash MinHash (minhash_signatures[_wide], minhash_bands,
+  - Pinned-hash MinHash (minhash_signatures_wide, minhash_bands,
     minhash_band_candidates) and simhash60_pinned: md5-derived token
     hashes any engine reproduces, so results are hash-checked against
     DuckDB. minhash_lsh_pairs is the MLlib form (engine-specific seeds,
@@ -310,14 +310,13 @@ def minhash_lsh_pairs(
     threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hash_tables: int = 8,
-    k_shingle: int = 3,
 ) -> DataFrame:
-    """Near-dup pairs via MLlib MinHashLSH over hashed SHINGLE vectors.
+    """Near-dup pairs via MLlib MinHashLSH (8 hash tables, seed 42) over
+    hashed SHINGLE vectors.
 
     approxSimilarityJoin generates candidates from band-bucket joins
     and filters on exact Jaccard distance of the vectors — the
-    scalable shape of jaccard_pairs. Features are k-token shingles,
+    scalable shape of jaccard_pairs. Features are 3-token shingles,
     not unigrams: MLlib's tables are 1-row bands (P(candidate) =
     1-(1-s)^tables), so candidate pruning exists ONLY if random-pair
     similarity is near zero — true for shingles (~0.003 here), false
@@ -327,6 +326,7 @@ def minhash_lsh_pairs(
     is the pinned-hash tier (minhash_band_candidates)."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
+    k_shingle = 3
     d = docs.filter(
         F.size(F.split(F.col(text_col), " ")) >= k_shingle
     ).select(
@@ -349,7 +349,7 @@ def minhash_lsh_pairs(
     # of query wall at sf0.1). Same index-persistence contract as the
     # pinned-hash tier (minhash_band_candidates).
     feat = bounded_persist(tf.transform(d))
-    lsh = MinHashLSH(inputCol="features", outputCol="bands", numHashTables=num_hash_tables, seed=42)
+    lsh = MinHashLSH(inputCol="features", outputCol="bands", numHashTables=8, seed=42)
     model = lsh.fit(feat)
     # pre-compute the minhash signatures ONCE and hand the join a frame
     # that already carries the outputCol: approxSimilarityJoin only
@@ -450,7 +450,6 @@ def neardup_clusters_star(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 30,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components via alternating small-star / large-star —
@@ -470,7 +469,8 @@ def neardup_clusters_star(
     so convergence is O(log n) rounds versus min-label propagation's
     O(diameter) (tests assert the bound on a worst-case path graph).
     The fixpoint test is (edge count, order-insensitive edge checksum)
-    — one tiny aggregate per round, no edge-set anti-join.
+    — one tiny aggregate per round, no edge-set anti-join; the loop
+    stops after at most 30 rounds.
 
     At convergence components are stars centered at their minimum id:
     the label read-off is a single left join (docs without any pair stay
@@ -494,7 +494,7 @@ def neardup_clusters_star(
 
     rounds = 0
     sig = checksum(e)
-    for _ in range(max_iter):
+    for _ in range(30):
         sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         gmin = sym.groupBy("u").agg(F.min("v").alias("mn"))
         gmin = gmin.select("u", F.least("u", "mn").alias("m"))
@@ -687,33 +687,6 @@ def minhash_signatures_wide(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    n_hashes: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k_shingle: int = 3,
-) -> DataFrame:
-    """Long-form MinHash signatures (doc_id, j, mh) — the classic
-    row-per-hash shape, derived by unpivoting the wide form (one cheap
-    per-row explode AFTER the min-aggregation, so the heavy path is
-    still the single doc-keyed groupBy of minhash_signatures_wide)."""
-    wide = minhash_signatures_wide(
-        docs, n_hashes=n_hashes, id_col=id_col, text_col=text_col, k_shingle=k_shingle
-    )
-    return wide.select(
-        id_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("j"), F.col(f"mh{j}").alias("mh")
-                )
-                for j in range(n_hashes)
-            ])
-        ).alias("jm"),
-    ).select(id_col, F.col("jm.j").alias("j"), F.col("jm.mh").alias("mh"))
-
-
 def minhash_bands(
     docs: DataFrame,
     n_hashes: int = 16,
@@ -803,16 +776,14 @@ def minhash_band_candidates(
     )
 
 
-def lsh_band_rows_for_threshold(
-    threshold: float, n_hashes: int = 16, margin: float = 0.8
-) -> int:
+def lsh_band_rows_for_threshold(threshold: float, n_hashes: int = 16) -> int:
     """Pick the MinHash band height r from the operating threshold.
 
     The banding S-curve's midpoint is t*(r) = (1/b)^(1/r) with
     b = n_hashes/r bands; recall at similarity s is
     1 − (1 − s^r)^b, which is high only when t* sits safely BELOW the
     acceptance threshold. So: the largest power-of-two divisor r of
-    n_hashes with t*(r) <= margin·threshold — taller bands (better
+    n_hashes with t*(r) <= 0.8·threshold — taller bands (better
     pruning) whenever the operating point affords them, falling back
     to r=1 (pure min-hash equality buckets) for very low thresholds.
     A mismatched fixed r is the classic silent-recall-loss mistake
@@ -823,7 +794,7 @@ def lsh_band_rows_for_threshold(
     while r <= n_hashes:
         if n_hashes % r == 0:
             t_star = (r / n_hashes) ** (1.0 / r)
-            if t_star <= margin * threshold:
+            if t_star <= 0.8 * threshold:
                 best = r
         r *= 2
     return best

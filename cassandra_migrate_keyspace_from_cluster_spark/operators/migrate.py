@@ -82,8 +82,9 @@ _MANIFEST_SCHEMA = T.StructType(
 )
 
 
-def schema_manifest(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFrame:
-    """Schema discovery (A2): enumerate (table, column, ordinal, type).
+def schema_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Schema discovery (A2): enumerate (table, column, ordinal, type)
+    over every keyspace table (``TABLES``).
 
     The Cassandra analogue reads ``system_schema.{tables,columns}``; here
     the parquet footers are the schema registry. This is a driver-side
@@ -91,7 +92,7 @@ def schema_manifest(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFram
     exactly how a migrator plans its copy before moving a single row.
     """
     rows = []
-    for name in tables:
+    for name in TABLES:
         for i, field in enumerate(load_table(spark, sf_dir, name).schema.fields):
             canonical = _SPARK_TO_CANONICAL.get(
                 field.dataType.simpleString(), field.dataType.simpleString()

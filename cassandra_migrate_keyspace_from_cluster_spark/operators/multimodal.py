@@ -5,19 +5,17 @@ metadata (mime, byte length); decode / feature-extraction runs as
 Arrow-batched ``mapInPandas`` so the heavy per-item work is vectorized
 per partition and never leaves executor memory as Python rows.
 
-Every modality decodes FOR REAL, no media library (r3): audio =
-pure-python RIFF/WAVE PCM16 codec; image = uncompressed 24-bit BMP,
-baseline JPEG (pure-numpy T.81: Annex K tables, canonical Huffman,
-zigzag, byte stuffing, DCT), and RGB8 PNG (stdlib zlib + all five
-scanline filters); video = MJPEG in an AVI (RIFF) container with real
-frame sampling over the JPEG decoder. Each branch feeds per-payload
-features through the same mapInPandas path and is hash-checked
-end-to-end against a DuckDB oracle that recomputes the features from
-the deterministic generative formulas (f17b audio, f17c/f17d/f17e
-image, f17f video); the lossy JPEG chain stays oracle-exact because
-the synthesized images are constant 8×8 tiles (lone DC coefficient +
-half-up rounding contract). Only inter-frame video codecs (H.264 …)
-remain out of scope — those genuinely need ffmpeg.
+Every modality decodes for real, no media library: audio = RIFF/WAVE
+PCM16; image = 24-bit BMP, baseline JPEG (pure-numpy T.81) and RGB8
+PNG (stdlib zlib); video = MJPEG in an AVI (RIFF) container, frame
+sampled over the JPEG decoder. Each modality is one per-doc payload
+formula (``_synthesized``) and one per-payload feature row
+(``_guarded_feature_batches``), hash-checked against a DuckDB oracle
+that recomputes the features from the same integer formulas (f17b
+audio, f17c/f17d/f17e image, f17f video). The lossy JPEG chain stays
+oracle-exact because the synthesized images are constant 8×8 tiles
+(lone DC coefficient + half-up rounding contract). Inter-frame video
+codecs (H.264 …) stay out of scope — those need ffmpeg.
 """
 
 from __future__ import annotations
@@ -60,6 +58,28 @@ def _spread(df: DataFrame) -> DataFrame:
     shuffled rows are just ids (cheap); the downstream mapInPandas
     inherits the widened partitioning."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _synthesized(docs: DataFrame, mime: str, payload_of) -> DataFrame:
+    """One ``(doc_id, payload, mime)`` row per doc of ``docs``, the
+    payload bytes built by ``payload_of(doc_id) -> bytes`` — the shared
+    body of every ``attach_*_payload`` synthesizer."""
+
+    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [payload_of(doc_id) for doc_id in pdf["doc_id"]],
+                    "mime": mime,
+                }
+            )
+
+    # spread the synthesis/codec work across cores: the source is often
+    # one parquet split, which would otherwise serialize the python codec
+    return _spread(docs.select("doc_id")).mapInPandas(
+        gen, "doc_id bigint, payload binary, mime string"
+    )
 
 
 def _guarded_feature_batches(decode_row, columns):
@@ -227,28 +247,14 @@ def attach_wav_payload(docs: DataFrame) -> DataFrame:
     the REAL codec for f17b to hash-match."""
     import numpy as np
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                n = 64 + doc_id % 64
-                i = np.arange(n, dtype=np.int64)
-                s = (doc_id * 31 + i * 17) % 2003 - 1001
-                rate = 8000 + (doc_id % 4) * 4000
-                payloads.append(encode_wav_pcm16(s, int(rate)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "audio/wav",
-                }
-            )
+    def payload(doc_id):
+        n = 64 + doc_id % 64
+        i = np.arange(n, dtype=np.int64)
+        s = (doc_id * 31 + i * 17) % 2003 - 1001
+        rate = 8000 + (doc_id % 4) * 4000
+        return encode_wav_pcm16(s, int(rate))
 
-    # spread the synthesis/codec work across cores: the source is often
-    # one parquet split, which would otherwise serialize the python codec
-    return _spread(docs.select("doc_id")).mapInPandas(
-        gen, "doc_id bigint, payload binary, mime string"
-    )
+    return _synthesized(docs, "audio/wav", payload)
 
 
 def extract_wav_features(media: DataFrame) -> DataFrame:
@@ -285,8 +291,7 @@ def extract_wav_features(media: DataFrame) -> DataFrame:
 # Uncompressed 24-bit BMP (BITMAPINFOHEADER) is a fixed header + padded
 # bottom-up BGR rows — parseable with struct/numpy alone, making the
 # image branch of the multimodal path real end-to-end (f17c), exactly
-# like the WAV audio branch above. Compressed formats (png/jpeg) still
-# need Pillow — see decode_image below.
+# like the WAV audio branch above.
 
 
 def encode_bmp_24(pixels) -> bytes:
@@ -335,7 +340,7 @@ def decode_bmp_24(payload: bytes):
     return rows[:, :, ::-1].copy()  # BGR -> RGB
 
 
-BMP_FEATURE_SCHEMA = (
+IMAGE_FEATURE_SCHEMA = (
     "doc_id bigint, width bigint, height bigint, "
     "mean_r double, mean_g double, mean_b double"
 )
@@ -349,36 +354,22 @@ def attach_bmp_payload(docs: DataFrame) -> DataFrame:
     arithmetically while the bytes must round-trip the REAL codec."""
     import numpy as np
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                w = 8 + doc_id % 9
-                h = 6 + doc_id % 7
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                img = np.stack(
-                    [
-                        (doc_id + 3 * x + 5 * y) % 256,
-                        (2 * doc_id + 7 * x + y) % 256,
-                        (5 * doc_id + x + 11 * y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                payloads.append(encode_bmp_24(img))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "image/bmp",
-                }
-            )
+    def payload(doc_id):
+        w = 8 + doc_id % 9
+        h = 6 + doc_id % 7
+        x = np.arange(w, dtype=np.int64)[None, :]
+        y = np.arange(h, dtype=np.int64)[:, None]
+        img = np.stack(
+            [
+                (doc_id + 3 * x + 5 * y) % 256,
+                (2 * doc_id + 7 * x + y) % 256,
+                (5 * doc_id + x + 11 * y) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        return encode_bmp_24(img)
 
-    # spread the synthesis/codec work across cores: the source is often
-    # one parquet split, which would otherwise serialize the python codec
-    return _spread(docs.select("doc_id")).mapInPandas(
-        gen, "doc_id bigint, payload binary, mime string"
-    )
+    return _synthesized(docs, "image/bmp", payload)
 
 
 _IMAGE_FEATURE_COLS = [
@@ -415,7 +406,7 @@ def extract_bmp_features(media: DataFrame) -> DataFrame:
         _guarded_feature_batches(
             _image_feature_row(decode_bmp_24), _IMAGE_FEATURE_COLS
         ),
-        schema=BMP_FEATURE_SCHEMA,
+        schema=IMAGE_FEATURE_SCHEMA,
     )
 
 
@@ -436,7 +427,7 @@ def resize_bmp_features(media: DataFrame, factor: int = 2) -> DataFrame:
             ),
             _IMAGE_FEATURE_COLS,
         ),
-        schema=BMP_FEATURE_SCHEMA,
+        schema=IMAGE_FEATURE_SCHEMA,
     )
 
 
@@ -1020,15 +1011,9 @@ def decode_png_rgb8(payload: bytes):
     return img.reshape(h, w, bpp)
 
 
-JPEG_FEATURE_SCHEMA = (
-    "doc_id bigint, width bigint, height bigint, "
-    "mean_r double, mean_g double, mean_b double"
-)
-
-
-def attach_jpeg_payload(docs: DataFrame, quality: int = 90) -> DataFrame:
-    """Synthesize a deterministic baseline-JPEG payload per doc (binary
-    column): a (1 + doc_id % 2) × (2 + doc_id % 3) grid of CONSTANT
+def attach_jpeg_payload(docs: DataFrame) -> DataFrame:
+    """Synthesize a deterministic quality-90 baseline-JPEG payload per
+    doc (binary column): a (1 + doc_id % 2) × (2 + doc_id % 3) grid of CONSTANT
     8×8 tiles with r=(doc_id+37tx+53ty)%256, g=(2·doc_id+11tx+29ty)%256,
     b=(3·doc_id+17tx+7ty)%256. Constant tiles quantize to a lone DC
     coefficient, so the whole lossy chain (YCbCr → DC → half-up
@@ -1038,34 +1023,20 @@ def attach_jpeg_payload(docs: DataFrame, quality: int = 90) -> DataFrame:
     to hash-match."""
     import numpy as np
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                wt = 2 + doc_id % 3
-                ht = 1 + doc_id % 2
-                img = np.zeros((ht * 8, wt * 8, 3), dtype=np.uint8)
-                for ty in range(ht):
-                    for tx in range(wt):
-                        img[ty * 8 : (ty + 1) * 8, tx * 8 : (tx + 1) * 8] = (
-                            (doc_id + 37 * tx + 53 * ty) % 256,
-                            (2 * doc_id + 11 * tx + 29 * ty) % 256,
-                            (3 * doc_id + 17 * tx + 7 * ty) % 256,
-                        )
-                payloads.append(encode_jpeg_baseline(img, quality))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                }
-            )
+    def payload(doc_id):
+        wt = 2 + doc_id % 3
+        ht = 1 + doc_id % 2
+        img = np.zeros((ht * 8, wt * 8, 3), dtype=np.uint8)
+        for ty in range(ht):
+            for tx in range(wt):
+                img[ty * 8 : (ty + 1) * 8, tx * 8 : (tx + 1) * 8] = (
+                    (doc_id + 37 * tx + 53 * ty) % 256,
+                    (2 * doc_id + 11 * tx + 29 * ty) % 256,
+                    (3 * doc_id + 17 * tx + 7 * ty) % 256,
+                )
+        return encode_jpeg_baseline(img, 90)
 
-    # spread the synthesis/codec work across cores: the source is often
-    # one parquet split, which would otherwise serialize the python codec
-    return _spread(docs.select("doc_id")).mapInPandas(
-        gen, "doc_id bigint, payload binary, mime string"
-    )
+    return _synthesized(docs, "image/jpeg", payload)
 
 
 def extract_jpeg_features(media: DataFrame) -> DataFrame:
@@ -1077,14 +1048,8 @@ def extract_jpeg_features(media: DataFrame) -> DataFrame:
         _guarded_feature_batches(
             _image_feature_row(decode_jpeg_baseline), _IMAGE_FEATURE_COLS
         ),
-        schema=JPEG_FEATURE_SCHEMA,
+        schema=IMAGE_FEATURE_SCHEMA,
     )
-
-
-PNG_FEATURE_SCHEMA = (
-    "doc_id bigint, width bigint, height bigint, "
-    "mean_r double, mean_g double, mean_b double"
-)
 
 
 def attach_png_payload(docs: DataFrame) -> DataFrame:
@@ -1096,36 +1061,22 @@ def attach_png_payload(docs: DataFrame) -> DataFrame:
     lossless round trip keeps the oracle purely arithmetic."""
     import numpy as np
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                w = 5 + doc_id % 11
-                h = 4 + doc_id % 6
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                img = np.stack(
-                    [
-                        (7 * doc_id + 2 * x + 13 * y) % 256,
-                        (doc_id + 9 * x + 4 * y) % 256,
-                        (4 * doc_id + 5 * x + 3 * y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                payloads.append(encode_png_rgb8(img))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "image/png",
-                }
-            )
+    def payload(doc_id):
+        w = 5 + doc_id % 11
+        h = 4 + doc_id % 6
+        x = np.arange(w, dtype=np.int64)[None, :]
+        y = np.arange(h, dtype=np.int64)[:, None]
+        img = np.stack(
+            [
+                (7 * doc_id + 2 * x + 13 * y) % 256,
+                (doc_id + 9 * x + 4 * y) % 256,
+                (4 * doc_id + 5 * x + 3 * y) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        return encode_png_rgb8(img)
 
-    # spread the synthesis/codec work across cores: the source is often
-    # one parquet split, which would otherwise serialize the python codec
-    return _spread(docs.select("doc_id")).mapInPandas(
-        gen, "doc_id bigint, payload binary, mime string"
-    )
+    return _synthesized(docs, "image/png", payload)
 
 
 def extract_png_features(media: DataFrame) -> DataFrame:
@@ -1137,26 +1088,8 @@ def extract_png_features(media: DataFrame) -> DataFrame:
         _guarded_feature_batches(
             _image_feature_row(decode_png_rgb8), _IMAGE_FEATURE_COLS
         ),
-        schema=PNG_FEATURE_SCHEMA,
+        schema=IMAGE_FEATURE_SCHEMA,
     )
-
-
-# --- video decoder: stub (libs not in container) ------------------------
-
-
-def decode_image(payload: bytes, mime: str):
-    """Decode an image payload to an HxWxC array — every format decodes
-    for real, no media library: uncompressed 24-bit BMP
-    (``decode_bmp_24``), baseline JPEG (pure-numpy
-    ``decode_jpeg_baseline``), RGB8 PNG (stdlib-zlib
-    ``decode_png_rgb8``)."""
-    if payload[:2] == b"BM":
-        return decode_bmp_24(payload)
-    if payload[:2] == b"\xff\xd8":
-        return decode_jpeg_baseline(payload)
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_png_rgb8(payload)
-    raise NotImplementedError("unsupported image format (BMP/JPEG/PNG decode)")
 
 
 # --- video: REAL pure-python MJPEG-AVI container ------------------------
@@ -1169,14 +1102,15 @@ def decode_image(payload: bytes, mime: str):
 # demux + sample every Nth frame → JPEG-decode → per-frame features.
 
 
-def encode_avi_mjpeg(frames, fps: int = 10) -> bytes:
-    """Mux a list of HxWx3 uint8 RGB frames into an MJPEG AVI: RIFF
-    header, 'hdrl' (avih + one 'vids'/'MJPG' stream), 'movi' with one
-    '00dc' JPEG chunk per frame (word-aligned), and an idx1 index."""
+def encode_avi_mjpeg(frames) -> bytes:
+    """Mux a list of HxWx3 uint8 RGB frames into a 10 fps MJPEG AVI:
+    RIFF header, 'hdrl' (avih + one 'vids'/'MJPG' stream), 'movi' with
+    one '00dc' JPEG chunk per frame (word-aligned), and an idx1 index."""
     import struct
 
     import numpy as np
 
+    fps = 10
     frames = [np.asarray(f, dtype=np.uint8) for f in frames]
     h, w, _ = frames[0].shape
     payloads = [encode_jpeg_baseline(f) for f in frames]
@@ -1283,34 +1217,20 @@ def attach_video_payload(docs: DataFrame) -> DataFrame:
     features are oracle-checkable end-to-end."""
     import numpy as np
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                frames = []
-                for fi in range(2 + doc_id % 3):
-                    img = np.zeros((8, 16, 3), np.uint8)
-                    for tx in range(2):
-                        img[:, tx * 8 : (tx + 1) * 8] = (
-                            (doc_id + 37 * tx + 19 * fi) % 256,
-                            (2 * doc_id + 11 * tx + 23 * fi) % 256,
-                            (3 * doc_id + 17 * tx + 29 * fi) % 256,
-                        )
-                    frames.append(img)
-                payloads.append(encode_avi_mjpeg(frames))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "video/x-msvideo",
-                }
-            )
+    def payload(doc_id):
+        frames = []
+        for fi in range(2 + doc_id % 3):
+            img = np.zeros((8, 16, 3), np.uint8)
+            for tx in range(2):
+                img[:, tx * 8 : (tx + 1) * 8] = (
+                    (doc_id + 37 * tx + 19 * fi) % 256,
+                    (2 * doc_id + 11 * tx + 23 * fi) % 256,
+                    (3 * doc_id + 17 * tx + 29 * fi) % 256,
+                )
+            frames.append(img)
+        return encode_avi_mjpeg(frames)
 
-    # spread the synthesis/codec work across cores: the source is often
-    # one parquet split, which would otherwise serialize the python codec
-    return _spread(docs.select("doc_id")).mapInPandas(
-        gen, "doc_id bigint, payload binary, mime string"
-    )
+    return _synthesized(docs, "video/x-msvideo", payload)
 
 
 def extract_video_features(media: DataFrame, every_n: int = 2) -> DataFrame:

@@ -56,7 +56,6 @@ def with_global_row_number(
     order_cols: list[Column],
     rn_col: str = "rn",
     total_col: str | None = None,
-    num_partitions: int | None = None,
     materialize: str = "persist",
 ) -> DataFrame:
     """Add ``rn_col`` = global 1-based row number under ``order_cols``.
@@ -65,7 +64,8 @@ def with_global_row_number(
     must form a total order for the numbering to be deterministic.
     With ``total_col`` set, also attaches the constant total row count N
     (needed by percent_rank/cume_dist/ntile rewrites) — derived from the
-    same per-partition counts, no extra pass.
+    same per-partition counts, no extra pass. The frame is range-
+    partitioned into ``spark.sql.shuffle.partitions`` (default 32) parts.
 
     ``materialize`` picks how the range-partitioned frame is pinned so
     both passes see the same partition ids: ``"persist"`` (default;
@@ -77,10 +77,9 @@ def with_global_row_number(
     block-manager replication bookkeeping). With ``"persist"`` the
     caller owns ``unpersist`` once the result is consumed.
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+    num_partitions = int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
     ranged = df.repartitionByRange(num_partitions, *order_cols).withColumn(
         _PID, F.spark_partition_id()
     )

@@ -935,10 +935,9 @@ def semantic_dedup_kmeans(
     k: int = 16,
     threshold: float = 0.8,
     id_col: str = "vec_id",
-    seed: int = 42,
 ) -> DataFrame:
     """The SCALE tier of ``semantic_dedup``: coarse clusters come from
-    MLlib KMeans (distributed fit + distributed ``model.transform``
+    MLlib KMeans (seed 42; distributed fit + distributed ``model.transform``
     assignment — no driver-side corpus anywhere) instead of the
     deterministic seed vectors the oracle-checkable tier uses. Same
     within-cluster earlier-member rule afterwards, so the pair work
@@ -975,7 +974,7 @@ def semantic_dedup_kmeans(
         # the fit ran all 10 iterations (no tol stop) and k-means||
         # init costs ~0.6 s over seeded random at sf0.1; maxIter=5 +
         # random init holds the floor at less than half the fit cost.
-        k=min(k, n_corpus), seed=seed, maxIter=5, initMode="random",
+        k=min(k, n_corpus), seed=42, maxIter=5, initMode="random",
         featuresCol="features",
     ).fit(d)
     assigned = model.transform(d).select(

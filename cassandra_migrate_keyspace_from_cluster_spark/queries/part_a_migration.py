@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators import migrate as mig
 from ..registry import register
+from ..sources.parquet_keyspace import footer_rows, table_path
 from ..util import scratch_dir, scratch_dir_unique
 from .util import r2, t
 
@@ -316,13 +317,15 @@ def a4f_copy_compacted(spark, sf_dir):
     table lands in ceil(rows / 20k) balanced files instead of
     inheriting the source's fragmentation — the small-files remedy a
     100-TB target layout needs (file count asserted in
-    tests/test_migrate.py). The file count comes from a metadata-only
-    parquet count, and the round-robin repartition is the one balanced
-    shuffle a compaction copy fundamentally requires."""
+    tests/test_migrate.py). The file count comes from the footer row
+    count (``footer_rows``, no Spark job), and the round-robin
+    repartition is the one balanced shuffle a compaction copy
+    fundamentally requires."""
     dst = scratch_dir_unique("a4f")
+    n_rows = footer_rows(table_path(sf_dir, "lineitem"))
     return mig.copy_table(
         spark, sf_dir, dst, "lineitem",
-        layout=lambda df: df.repartition(max(1, -(-df.count() // 20000))),
+        layout=lambda df: df.repartition(max(1, -(-n_rows // 20000))),
     )
 
 

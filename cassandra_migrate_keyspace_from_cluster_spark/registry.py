@@ -31,7 +31,6 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None
-    tags: tuple[str, ...] = ()
 
     @property
     def doc(self) -> str:
@@ -41,13 +40,13 @@ class QuerySpec:
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None):
     """Decorator: register a query implementation + its DuckDB oracle."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query id: {name}")
-        QUERIES[name] = QuerySpec(name=name, fn=fn, oracle=oracle, tags=tuple(tags))
+        QUERIES[name] = QuerySpec(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

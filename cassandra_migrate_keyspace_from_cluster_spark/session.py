@@ -20,8 +20,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def build_session(
     app_name: str = "cassandra-migrate-keyspace-spark",

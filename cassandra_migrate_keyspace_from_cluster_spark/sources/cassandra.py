@@ -27,6 +27,12 @@ surface:
   - Throughput control (A10): ``spark.cassandra.output.throughputMBPerSec``,
     ``output.concurrent.writes``, ``output.batch.size.rows`` bound write
     pressure on the target cluster.
+  - Progress/resume (A9): the driver persists one row per completed
+    (table, token_range) (a done-marker file per range in the
+    simulation, ``operators/migrate.copy_table_resumable``); a restart
+    plans only the remaining ranges. With idempotent writes (same
+    primary keys, same writetime via A6) re-running a completed range
+    is harmless, so at-least-once + idempotence suffices.
 """
 
 from __future__ import annotations
@@ -45,7 +51,8 @@ class ClusterConfig:
     consistency: str = "LOCAL_QUORUM"
     extra: dict[str, str] = field(default_factory=dict)
 
-    def spark_conf(self, prefix: str = "spark.cassandra") -> dict[str, str]:
+    def spark_conf(self) -> dict[str, str]:
+        prefix = "spark.cassandra"
         conf = {
             f"{prefix}.connection.host": ",".join(self.hosts),
             f"{prefix}.connection.port": str(self.port),
@@ -58,31 +65,6 @@ class ClusterConfig:
             conf[f"{prefix}.auth.password"] = self.password
         conf.update(self.extra)
         return conf
-
-
-@dataclass(frozen=True)
-class CopyTuning:
-    """A5/A10 — scan-split and write-throttle knobs, with defaults that
-    hold at 100-TB scale: ~64 MB splits keep partitions executor-sized;
-    write throughput bounded so the target cluster's compaction keeps up.
-    """
-
-    input_split_size_mb: int = 64
-    output_throughput_mb_per_sec: int = 50
-    output_concurrent_writes: int = 5
-    output_batch_size_rows: str = "auto"
-
-    def spark_conf(self) -> dict[str, str]:
-        return {
-            "spark.cassandra.input.split.sizeInMB": str(self.input_split_size_mb),
-            "spark.cassandra.output.throughputMBPerSec": str(
-                self.output_throughput_mb_per_sec
-            ),
-            "spark.cassandra.output.concurrent.writes": str(
-                self.output_concurrent_writes
-            ),
-            "spark.cassandra.output.batch.size.rows": self.output_batch_size_rows,
-        }
 
 
 def reader_options(
@@ -135,11 +117,3 @@ def ddl_for(schema, keyspace: str, table: str, partition_keys, clustering_keys=(
         f"  PRIMARY KEY {key}\n)"
     )
 
-
-# A9 — progress/resume design: the migration driver persists one row per
-# completed (table, token_range) to a progress table (or _SUCCESS-marked
-# parquet partition in the simulation); restart reads it and plans only
-# the remaining ranges. With idempotent writes (same primary keys, same
-# writetime via A6) re-running a completed range is harmless, so
-# exactly-once is not required — at-least-once + idempotence suffices.
-RESUME_DESIGN = "see module docstring / this comment block"

@@ -20,11 +20,10 @@ Scale notes:
     reads only what it needs.
   - Both footer helpers run on the driver: the schema costs one footer
     read per table, a count one per part file.
-  - A table is one file or a flat directory of part files. Partitioned
-    on a high-cardinality key (e.g. ``o_orderdate`` month), it would be
-    a tree of directories; ``list_part_files`` and the footer schema
-    (which would gain the partition columns) are the two places that
-    change would touch.
+  - A table is one file or a directory tree of part files (the
+    resumable copy writes one ``range=i`` subdirectory per token range).
+    The tree is read recursively, so a ``key=value`` directory never
+    becomes a partition column: every column lives in the part files.
 """
 
 from __future__ import annotations
@@ -48,25 +47,35 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _hidden(name: str) -> bool:
+    # Spark's and pyarrow's rule: _SUCCESS, _temporary/, .crc files
+    return name.startswith(("_", "."))
+
+
 def list_part_files(path: str) -> list[str]:
     """Physical part files of a table path — a single parquet file, or
-    the sorted ``*.parquet`` parts of a DIRECTORY. At 100 TB a table
+    the sorted ``*.parquet`` parts of a DIRECTORY and its subdirectories,
+    skipping every hidden path component (one starting with ``_`` or
+    ``.``, so an in-flight ``_temporary/`` stays out). At 100 TB a table
     is always a directory of many writers' part files (and a commitlog
     is segment files), so nothing may assume one footer per table; the
     fixtures just happen to be single files. Sorted for deterministic
     global order wherever a source assigns positions across parts."""
     if os.path.isdir(path):
-        import glob
-
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        parts = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            parts += [
+                os.path.join(root, f)
+                for f in files
+                if f.endswith(".parquet") and not _hidden(f)
+            ]
+        parts.sort()
         if not parts:
             raise FileNotFoundError(f"no *.parquet part files under {path}")
         return parts
@@ -120,7 +129,9 @@ def load_path(spark: SparkSession, path: str) -> DataFrame:
     to the reader — so opening a table submits no Spark job: no
     schema-inference job, no data read until an action.
 
-    A missing table path raises ``FileNotFoundError`` naming the path.
+    A directory is read recursively (``recursiveFileLookup``), so its
+    subdirectories add no partition column. A missing table path raises
+    ``FileNotFoundError`` naming the path.
 
     Timestamp normalization (the generated fixtures have drifted across
     driver rounds; the query layer always sees plain ``TimestampType``):
@@ -139,6 +150,13 @@ def load_path(spark: SparkSession, path: str) -> DataFrame:
       ``stabilize_wallclock`` then keeps the rendered wall-clock equal to
       DuckDB's naive read under any session zone.
     """
+    return _open(spark.read, path)
+
+
+def _open(reader, path: str) -> DataFrame:
+    """``load_path`` over ``reader`` — ``spark.read`` or
+    ``spark.readStream`` (a stream takes the same footer schema, so it
+    needs no inference job either)."""
     import pyarrow.parquet as pq
     import pyarrow.types as pat
 
@@ -148,7 +166,7 @@ def load_path(spark: SparkSession, path: str) -> DataFrame:
     schema = T.StructType(
         [T.StructField(f.name, _spark_type(f.type)) for f in footer]
     )
-    df = spark.read.schema(schema).parquet(path)
+    df = reader.schema(schema).option("recursiveFileLookup", "true").parquet(path)
     for f in footer:
         if pat.is_timestamp(f.type) and f.type.unit == "ns":
             df = df.withColumn(

@@ -17,25 +17,17 @@ from pyspark.sql import functions as F
 
 
 def read_events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """File-source stream of the events table (schema pinned, no
-    inference — streaming sources require an explicit schema).
-
-    ``ts`` is normalized to a µs ``TimestampType`` exactly like the
-    batch loader (sources/parquet_keyspace): the fixtures have carried
-    nanos-since-epoch (r1/r2) and TIMESTAMP_NTZ (r3) encodings across
-    driver rounds, and watermarks/windows must see the same event-time
-    type as the batch twin either way.
+    """File-source stream of the events table, opened like the batch
+    loader (``sources/parquet_keyspace.load_path``): the schema is the
+    first part file's footer (streaming sources require an explicit
+    one, and reading it submits no Spark job), and ``ts`` is normalized
+    to a µs ``TimestampType`` whether the fixtures carry nanos-since-
+    epoch (r1/r2) or TIMESTAMP_NTZ (r3) — watermarks and windows see
+    the same event-time type as the batch twin either way.
     """
-    static = spark.read.parquet(src_dir)
-    stream = spark.readStream.schema(static.schema).parquet(src_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    for col, dt in stream.dtypes:
-        if dt == "timestamp_ntz":
-            stream = stream.withColumn(col, F.col(col).cast("timestamp"))
-    from ..sources.parquet_keyspace import stabilize_wallclock
+    from ..sources.parquet_keyspace import _open
 
-    return stabilize_wallclock(stream)
+    return _open(spark.readStream, src_dir)
 
 
 def tumbling_stream(events: DataFrame) -> DataFrame:

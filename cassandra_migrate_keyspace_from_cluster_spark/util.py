@@ -119,13 +119,13 @@ _PERSIST_CAP = 8
 _PERSISTED_LOCK = threading.Lock()
 
 
-def bounded_persist(df, storage_level=None):
+def bounded_persist(df):
     """``df.persist()`` registered in a process-wide FIFO of size
     ``_PERSIST_CAP``; the oldest cached frame is unpersisted (non-
     blocking) when the cap is exceeded. The registry is locked:
     operators submit jobs from thread pools (a13), and an unguarded
     append/pop race could let the FIFO exceed its cap."""
-    df = df.persist(storage_level) if storage_level is not None else df.persist()
+    df = df.persist()
     evict = []
     with _PERSISTED_LOCK:
         _PERSISTED.append(df)

@@ -419,6 +419,66 @@ def test_copies_write_one_file_per_million_rows(spark, tmp_path):
         assert len(list((keyspace / f"{name}.parquet").glob("*.parquet"))) == 1, name
 
 
+def test_resumable_copy_target_is_a_keyspace_table(spark, tmp_path):
+    """The resumable copy's target (one ``range=i`` directory per token
+    range) opens and counts like any keyspace table: ``footer_rows``
+    equals the source's, ``load_table`` has the source schema (no
+    ``range`` column) and the source rows, and ``table_counts`` (A7)
+    reports the source count. Hidden paths (``_temporary/``, dot files)
+    are not part files."""
+    import shutil
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        footer_rows,
+        list_part_files,
+        table_path,
+    )
+
+    dst = str(tmp_path / "dst")
+    mig.copy_table_resumable(spark, SMOKE_SF, dst, "orders", "o_orderkey", n_splits=4)
+    n = footer_rows(table_path(SMOKE_SF, "orders"))
+    assert footer_rows(table_path(dst, "orders")) == n
+    src = load_table(spark, SMOKE_SF, "orders")
+    got = load_table(spark, dst, "orders")
+    assert got.schema == src.schema
+    assert got.exceptAll(src).count() == 0
+    assert src.exceptAll(got).count() == 0
+    assert [tuple(r) for r in mig.table_counts(spark, dst, ["orders"]).collect()] == [
+        ("orders", n)
+    ]
+
+    parts = list_part_files(table_path(dst, "orders"))
+    stray = tmp_path / "dst" / "orders.parquet" / "_temporary" / "0"
+    stray.mkdir(parents=True)
+    shutil.copy(parts[0], stray / "part-0.parquet")
+    shutil.copy(parts[0], stray.parent.parent / ".part-0.parquet")
+    assert list_part_files(table_path(dst, "orders")) == parts
+
+
+def test_compacted_copy_sizes_from_footers(spark, tmp_path):
+    """a4f sizes its compaction from the footer row count: it submits
+    exactly the jobs of the same ``copy_table`` with the file count
+    given, and no counting job of its own."""
+    from cassandra_migrate_keyspace_from_cluster_spark.queries.part_a_migration import (
+        a4f_copy_compacted,
+    )
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        footer_rows,
+        table_path,
+    )
+
+    k = max(1, -(-footer_rows(table_path(SMOKE_SF, "lineitem")) // 20000))
+    a4f = jobs_submitted(spark, lambda: a4f_copy_compacted(spark, SMOKE_SF))
+    given = jobs_submitted(
+        spark,
+        lambda: mig.copy_table(
+            spark, SMOKE_SF, str(tmp_path), "lineitem",
+            layout=lambda df: df.repartition(k),
+        ),
+    )
+    assert a4f == given
+
+
 def test_migrate_keyspace_without_tables_reports_nothing(spark, tmp_path):
     """An empty table list is an empty four-column report, not a thread
     pool error."""

@@ -959,21 +959,6 @@ def test_hof_let_binds_value_once_and_nests(spark):
     rows = [tuple(r) for r in out.collect()]
     assert rows == [(1, 3), (2, -1)], rows
 
-    # long-form minhash signatures (unpivoted from wide) keep the
-    # (doc, j, mh) contract: n_hashes rows per doc, j densely 0..n-1
-    import cassandra_migrate_keyspace_from_cluster_spark.operators.dedup as dd
-
-    docs = spark.createDataFrame(
-        [(1, "one two three four"), (2, "alpha beta gamma")],
-        "doc_id bigint, text string",
-    )
-    sig = dd.minhash_signatures(docs, n_hashes=8).collect()
-    assert len(sig) == 16
-    per_doc = {}
-    for r in sig:
-        per_doc.setdefault(r.doc_id, []).append(r.j)
-    assert all(sorted(js) == list(range(8)) for js in per_doc.values())
-
 
 def test_jaccard_three_forms_on_adversarial_shapes(spark):
     """The three exact-Jaccard implementations must agree on shapes the

@@ -11,7 +11,7 @@ import pytest
 from cassandra_migrate_keyspace_from_cluster_spark.registry import specs
 from cassandra_migrate_keyspace_from_cluster_spark.streaming import twins
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, jobs_submitted
 from .parity import compare_frames
 
 
@@ -20,6 +20,12 @@ def events_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("events_stream")
     shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), d / "events.parquet")
     return str(d)
+
+
+def test_opening_the_events_stream_submits_no_job(spark, events_dir):
+    """The stream takes its schema from the parquet footer, as the batch
+    loader does, so opening it submits no Spark job."""
+    assert jobs_submitted(spark, lambda: twins.read_events_stream(spark, events_dir)) == 0
 
 
 def test_tumbling_twin_matches_batch(spark, events_dir):
