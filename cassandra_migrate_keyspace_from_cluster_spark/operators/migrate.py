@@ -31,9 +31,10 @@ Scale notes (100-TB design point):
     (``_coalesced``), so the target never inherits the source's
     fragmentation and a range does not write one file per input split.
   - Row counts (A7, and the copy report) are parquet footer metadata:
-    no Spark job. The content checksum (A8) is one pass per table,
-    aggregation-only — an order-insensitive reduction, so it needs no
-    sort and shuffles only the tiny partial-agg state.
+    no Spark job. The content checksum (A8) is one pass per table and
+    an order-insensitive reduction, so it needs no sort; its exact
+    distinct count does need one hash shuffle of every distinct row
+    hash (16 bytes plus its count).
 """
 
 from __future__ import annotations
@@ -349,26 +350,44 @@ def table_counts(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFrame:
     return local_frame(spark, rows, _COUNTS_SCHEMA)
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted, a backtick inside it
+    doubled, so a dot (CQL quoted identifiers may hold one) stays part of
+    the name instead of reading as a struct-field path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def content_checksum(df: DataFrame, table_name: str) -> DataFrame:
     """Content checksum validation (A8): order-insensitive content hash.
 
     Per-row ``md5(concat_ws('|', cols))`` (md5 is standardized → identical
     across engines) reduced with order-insensitive aggregates. Matching
-    (n_rows, n_distinct, min, max) on source and target proves the copy
-    preserved values without sorting either side. Restricted to
-    exact-typed columns (int/string) by callers — float formatting is not
-    cross-engine stable (SURVEY.md §5.4). Blind spot: ``concat_ws`` skips
-    NULLs, so ``(1, NULL, 'x')`` and ``(1, 'x', NULL)`` hash identical.
+    (n_rows, n_distinct_hashes, min_hash, max_hash) on source and target
+    proves the copy preserved values without sorting either side.
+    Restricted to exact-typed columns (int/string) by callers — float
+    formatting is not cross-engine stable (SURVEY.md §5.4). Blind spot:
+    ``concat_ws`` skips NULLs, so ``(1, NULL, 'x')`` and ``(1, 'x', NULL)``
+    hash identical.
+
+    Plan shape: rows are grouped by their 16-byte binary hash with a
+    per-hash count, then one global aggregate over those groups gives
+    the row count, the exact distinct count and the extrema (unsigned
+    byte order is the order of the lowercase hex). The exact distinct
+    count costs one hash shuffle of every distinct row hash (16 bytes
+    plus its count); nothing is sorted.
     """
-    row_hash = F.md5(
-        F.concat_ws("|", *[F.col(c).cast("string") for c in df.columns])
+    args = ", ".join(["'|'"] + [f"cast({_quoted(c)} as string)" for c in df.columns])
+    per_hash = (
+        df.select(F.expr(f"unhex(md5(concat_ws({args})))").alias("h"))
+        .groupBy("h")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    return df.select(row_hash.alias("h")).agg(
+    return per_hash.agg(
         F.lit(table_name).alias("table_name"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("h").alias("n_distinct_hashes"),
-        F.min("h").alias("min_hash"),
-        F.max("h").alias("max_hash"),
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows"),
+        F.count(F.lit(1)).alias("n_distinct_hashes"),
+        F.lower(F.hex(F.min("h"))).alias("min_hash"),
+        F.lower(F.hex(F.max("h"))).alias("max_hash"),
     )
 
 
@@ -400,10 +419,15 @@ def snapshot_diff(
     PostgreSQL COPY convention. A naive ``concat_ws`` hash silently
     skips NULLs, so rows differing only in WHICH column is NULL (or via
     an injected delimiter) would hash identical and a drifted row would
-    be reported in-sync — a missed repair."""
+    be reported in-sync — a missed repair.
+
+    ``key`` and ``cols`` are column names, not paths: a dot or backtick
+    in one is part of the name."""
+    k = _quoted(key)
+
     def hashed(df: DataFrame, out: str) -> DataFrame:
         def enc(c: str):
-            s = F.col(c).cast("string")
+            s = F.col(_quoted(c)).cast("string")
             esc = F.replace(
                 F.replace(s, F.lit("\\"), F.lit("\\\\")),
                 F.lit("|"),
@@ -412,28 +436,28 @@ def snapshot_diff(
             return F.when(s.isNull(), F.lit("\\N")).otherwise(esc)
 
         return df.select(
-            F.col(key),
+            F.col(k),
             F.md5(F.concat_ws("|", *[enc(c) for c in cols])).alias(out),
         )
 
     s = hashed(source, "h_src")
     tg = hashed(target, "h_tgt").withColumnRenamed(key, "_tgt_key")
-    j = s.join(tg, s[key] == tg["_tgt_key"], "full_outer")
+    j = s.join(tg, s[k] == tg["_tgt_key"], "full_outer")
     status = (
         F.when(F.col("_tgt_key").isNull(), "missing_in_target")
-        .when(F.col(key).isNull(), "extra_in_target")
+        .when(F.col(k).isNull(), "extra_in_target")
         .when(F.col("h_src") != F.col("h_tgt"), "changed")
     )
     action = (
         F.when(F.col("_tgt_key").isNull(), "copy")
-        .when(F.col(key).isNull(), "delete")
+        .when(F.col(k).isNull(), "delete")
         .otherwise("recopy")
     )
     return (
         j.withColumn("status", status)
         .filter(F.col("status").isNotNull())
         .select(
-            F.coalesce(F.col(key), F.col("_tgt_key")).alias(key),
+            F.coalesce(F.col(k), F.col("_tgt_key")).alias(key),
             "status",
             action.alias("action"),
         )

@@ -3,6 +3,7 @@ Cassandra-path design helpers that are string/config-only here)."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import tempfile
@@ -10,6 +11,7 @@ import threading
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
 from cassandra_migrate_keyspace_from_cluster_spark.sources import cassandra as cass
@@ -653,6 +655,78 @@ def test_snapshot_diff_null_and_delimiter_drift_detected(spark):
     )
     diff = mig.snapshot_diff(src, tgt, "k", ("c1", "c2")).collect()
     assert {(r.k, r.status) for r in diff} == {(1, "changed"), (2, "changed")}
+
+
+CHECKSUM_SCHEMA = T.StructType(
+    [
+        T.StructField("table_name", T.StringType(), False),
+        T.StructField("n_rows", T.LongType(), False),
+        T.StructField("n_distinct_hashes", T.LongType(), False),
+        T.StructField("min_hash", T.StringType(), True),
+        T.StructField("max_hash", T.StringType(), True),
+    ]
+)
+
+
+def _reference_checksum(rows, table_name):
+    """content_checksum in pure Python: md5 of the '|'-joined values,
+    NULLs skipped as concat_ws skips them."""
+    hashes = [
+        hashlib.md5("|".join(str(v) for v in row if v is not None).encode()).hexdigest()
+        for row in rows
+    ]
+    return (
+        table_name, len(hashes), len(set(hashes)),
+        min(hashes, default=None), max(hashes, default=None),
+    )
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        pytest.param([(1, "a", "x"), (1, "a", "x"), (2, "b", "y"), (1, "a", "x")], id="duplicates"),
+        # concat_ws skips NULLs: the first two rows hash the same
+        pytest.param([(1, None, "x"), (1, "x", None), (None, None, None), (2, "", "")], id="nulls"),
+        pytest.param([(1, "héllo", "日本"), (2, "ß|ü", "😀"), (3, "naïve", None)], id="non_ascii"),
+        pytest.param([], id="empty"),
+    ],
+)
+def test_content_checksum_equals_python_reference(spark, rows):
+    """content_checksum's row is the pure-Python md5 reduction of the
+    same rows, and its schema is (table_name, n_rows, n_distinct_hashes,
+    min_hash, max_hash) with only the extrema nullable; an empty frame
+    gives 0, 0, NULL, NULL."""
+    df = spark.createDataFrame(rows, "k int, c1 string, c2 string")
+    got = mig.content_checksum(df, "t")
+    assert got.schema == CHECKSUM_SCHEMA
+    assert [tuple(r) for r in got.collect()] == [_reference_checksum(rows, "t")]
+
+
+def test_dotted_and_backticked_column_names_are_names(spark):
+    """A column name is a name, not a struct-field path: a table whose
+    columns are ``k.id``, ``v.x`` and ``w`y`` checksums and diffs exactly
+    as the same table with plain names does."""
+    src_rows = [(1, "a", 10), (2, None, 20), (3, "c", 30), (4, "d", 40)]
+    tgt_rows = [(1, "a", 10), (2, "b", 20), (3, "c", 31), (5, "e", 50)]
+
+    def run(key, v, w):
+        schema = f"{key} int, {v} string, {w} int"
+        src = spark.createDataFrame(src_rows, schema)
+        tgt = spark.createDataFrame(tgt_rows, schema)
+        names = [f.name for f in src.schema.fields]
+        diff = mig.snapshot_diff(src, tgt, names[0], tuple(names[1:]))
+        assert diff.columns == [names[0], "status", "action"]
+        return (
+            [tuple(r) for r in mig.content_checksum(src, "t").collect()],
+            sorted(tuple(r) for r in diff.collect()),
+        )
+
+    plain = run("k", "v", "w")
+    assert plain[1] == [
+        (2, "changed", "recopy"), (3, "changed", "recopy"),
+        (4, "missing_in_target", "copy"), (5, "extra_in_target", "delete"),
+    ]
+    assert run("`k.id`", "`v.x`", "`w``y`") == plain
 
 
 def test_copy_with_observed_metrics(spark):

@@ -582,3 +582,29 @@ def test_configure_existing_keeps_one_partition_per_range(spark):
         assert scan.rdd.getNumPartitions() == 8
     finally:
         spark.conf.set("spark.sql.unionOutputPartitioning", "false")
+
+
+def test_content_checksum_hash_aggregates_binary_row_hashes(spark):
+    """A8's checksum groups rows by their 16-byte binary hash (one hash
+    exchange, keyed on ``unhex(md5(...))``) and reduces the groups with
+    one global aggregate: no Sort anywhere in the executed plan, so no
+    side sorts its row hashes. Building the frame submits no Spark job."""
+    import re
+
+    from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
+    from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
+
+    orders = load_table(spark, SF_SMOKE, "orders")
+    built = []
+    assert jobs_submitted(
+        spark, lambda: built.append(mig.content_checksum(orders, "orders"))
+    ) == 0
+    checksum = built[0]
+    checksum.collect()
+    plan = physical_plan(checksum)
+    nodes = set(re.findall(r"^\(\d+\) (\w+)", plan, re.M))
+    assert "Sort" not in nodes, plan
+    keys = set(re.findall(r"hashpartitioning\(([^,)]+),", plan))
+    assert len(keys) == 1, plan
+    (key,) = keys
+    assert re.search(rf"\[unhex\(md5\(.*\) AS {re.escape(key)}\]", plan), plan
