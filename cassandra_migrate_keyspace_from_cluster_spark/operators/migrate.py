@@ -13,7 +13,7 @@ A1/A3/A6/A9/A10, which are not exercisable in this sandbox).
 Every copy goes through one write/read-back core (``_write`` /
 ``_read_back``) behind two entry points: ``copy_table`` for a whole-table
 copy with an optional layout reshape, and ``copy_table_resumable`` for the
-range-by-range loop (done-markers, pacing, injected failure).
+range-by-range loop (done-markers, pacing).
 
 Scale notes (100-TB design point):
   - Bulk copy is pure ``read → write``: no shuffle at all. Parallelism
@@ -24,11 +24,10 @@ Scale notes (100-TB design point):
     Spark job). A5's ntile over a distributed rank is an exact per-range
     row-count report, not a copy plan.
   - Copy jobs are small and independent (one per table, one per token
-    range), so both copy paths submit them from a thread pool of
-    ``_POOL_WIDTH`` threads and the scheduler interleaves them across
-    the executors; a paced resumable copy is the exception and runs one
-    range at a time. Every copy unit is coalesced to ~1M-row files
-    (``_coalesced``), so the target never inherits the source's
+    range), so both copy paths submit them from one pool (``_pooled``)
+    and the scheduler interleaves them across the executors; a paced
+    resumable copy is the exception and runs one range at a time. Every
+    copy unit is coalesced to ~1M-row files (``_coalesced``), so the target never inherits the source's
     fragmentation and a range does not write one file per input split.
   - Row counts (A7, and the copy report) are parquet footer metadata:
     no Spark job. The content checksum (A8) is one pass per table and
@@ -51,7 +50,7 @@ from ..sources import TABLES, load_table
 # the resumable copy's plan is the A1 scan's token ranges, pure ring math
 from ..sources.cluster_source import ring_ranges as plan_key_ranges, token_in_range
 from ..sources.parquet_keyspace import footer_rows, table_path
-from ..util import local_frame
+from ..util import local_frame, quoted
 
 # Canonical cross-engine type vocabulary: Spark simpleString → canonical.
 # The DuckDB oracle maps information_schema data_type strings into the
@@ -110,6 +109,16 @@ def _options(fmt: str) -> dict:
 # copy jobs submitted at once, by migrate_keyspace (one per table) and by
 # an unpaced copy_table_resumable (one per token range)
 _POOL_WIDTH = 8
+
+
+def _pooled(fn, items: list) -> list:
+    """``[fn(x) for x in items]`` on ``min(_POOL_WIDTH, len(items))``
+    threads. On an error, running calls finish and queued ones are not
+    started."""
+    if not items:
+        return []
+    with ThreadPoolExecutor(max_workers=min(_POOL_WIDTH, len(items))) as ex:
+        return list(ex.map(fn, items))
 
 
 def _coalesced(df: DataFrame, n_rows: int) -> DataFrame:
@@ -189,30 +198,27 @@ def range_split_counts(df: DataFrame, key: str, n_splits: int = 16) -> DataFrame
 
     # local_checkpoint: single-JVM sandbox, where executor loss is job
     # loss anyway — a real cluster deployment passes "persist"
+    k = F.col(quoted(key))
     ranked = with_global_row_number(
-        df.select(F.col(key)),
-        [F.col(key).asc()],
+        df.select(k),
+        [k.asc()],
         "__rn",
         total_col="__n",
         materialize="local_checkpoint",
     )
     return (
         ranked.select(
-            F.col(key),
+            k,
             ntile_from_rn(F.col("__rn"), F.col("__n"), n_splits).alias("bucket"),
         )
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.min(key).alias("min_key"),
-            F.max(key).alias("max_key"),
+            F.min(k).alias("min_key"),
+            F.max(k).alias("max_key"),
         )
         .select(F.col("bucket").cast("bigint").alias("bucket"), "n_rows", "min_key", "max_key")
     )
-
-
-class SimulatedFailure(RuntimeError):
-    """Raised by copy_table_resumable(fail_after=k) to test resume."""
 
 
 class WallClock:
@@ -235,7 +241,6 @@ def copy_table_resumable(
     *,
     rows_per_second: float | None = None,
     clock=None,
-    fail_after: int | None = None,
 ) -> DataFrame:
     """Resumable, optionally throttled bulk copy (A9/A10): the table is
     copied by token range; each completed range writes its data then a
@@ -246,8 +251,9 @@ def copy_table_resumable(
     range copy is one Spark job, a filtered write of ``range=i``
     coalesced to ~1M-row files (the token is uniform, so a range holds
     about ``rows / n_splits`` rows). An unpaced copy submits its pending
-    ranges concurrently from a pool of ``min(_POOL_WIDTH, pending)``
-    threads; a paced copy runs them one at a time, in plan order.
+    ranges concurrently from ``_pooled``; a paced copy runs them one at a
+    time, in plan order. ``key`` is a column name, not a path: a dot in
+    it is part of the name.
 
     Range i copies the rows whose key token lies in ``[lo_i, hi_i)`` of
     ``plan_key_ranges(n_splits)``. The plan depends on ``n_splits`` alone
@@ -266,7 +272,8 @@ def copy_table_resumable(
     complete data; the resume skips those and overwrites the rest. If
     one range's write raises, the ranges already in flight still finish
     and are marked before the error propagates, so a failed range is
-    reported, and the resume copies exactly the unmarked ones.
+    reported, and the resume copies exactly the unmarked ones. Tests
+    inject faults at the write (``_write``); the copy has no fault hook.
 
     ``rows_per_second`` paces the loop to a rows/second budget so the
     migration never overruns the source cluster's serving capacity:
@@ -280,10 +287,7 @@ def copy_table_resumable(
     once; executor-side write throttling maps to the connector's
     throughput option (see sources/cassandra.py).
 
-    ``fail_after=k`` copies the first k pending ranges in plan order and
-    then raises ``SimulatedFailure``, to let tests exercise the resume
-    path; with k or fewer ranges pending nothing is injected. Returns
-    the re-read of the completed target.
+    Returns the re-read of the completed target.
     """
     src = load_table(spark, src_dir, name)
     table_dir = os.path.join(dst_dir, f"{name}.parquet")
@@ -302,31 +306,27 @@ def copy_table_resumable(
     os.makedirs(table_dir, exist_ok=True)
     range_rows = -(-footer_rows(table_path(src_dir, name)) // n_splits)
 
-    def copy_range(i: int, lo: str, hi: str) -> str:
+    def copy_range(rng: tuple[int, int, int]) -> str:
+        i, lo, hi = rng
         part = os.path.join(table_dir, f"range={i}")
-        _write(_coalesced(src.filter(token_in_range(F.col(key), lo, hi)), range_rows), part)
+        _write(_coalesced(src.filter(token_in_range(key, lo, hi)), range_rows), part)
         with open(marker(i), "w") as fh:
             fh.write(f"{lo}..{hi}\n")
         return part
 
-    todo = pending[:fail_after] if fail_after is not None else pending
     if rows_per_second:
         clock = clock or WallClock()
         start, copied = clock.now(), 0
-        for rng in todo:
+        for rng in pending:
             if copied:
                 delay = start + copied / rows_per_second - clock.now()
                 if delay > 0:
                     clock.sleep(delay)
-            copied += footer_rows(copy_range(*rng))
-    elif todo:
-        with ThreadPoolExecutor(max_workers=min(_POOL_WIDTH, len(todo))) as ex:
-            for done in [ex.submit(copy_range, *rng) for rng in todo]:
-                done.result()
-    if len(todo) < len(pending):
-        raise SimulatedFailure(f"injected failure before range {pending[len(todo)][0]}")
+            copied += footer_rows(copy_range(rng))
+    else:
+        _pooled(copy_range, pending)
     # the range=i directories read back as a partition column: dropped
-    return _read_back(spark, table_dir, src.schema).select(*src.columns)
+    return _read_back(spark, table_dir, src.schema).select(*map(quoted, src.columns))
 
 
 _COUNTS_SCHEMA = T.StructType(
@@ -350,13 +350,6 @@ def table_counts(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFrame:
     return local_frame(spark, rows, _COUNTS_SCHEMA)
 
 
-def _quoted(name: str) -> str:
-    """``name`` as a SQL identifier: backtick-quoted, a backtick inside it
-    doubled, so a dot (CQL quoted identifiers may hold one) stays part of
-    the name instead of reading as a struct-field path."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def content_checksum(df: DataFrame, table_name: str) -> DataFrame:
     """Content checksum validation (A8): order-insensitive content hash.
 
@@ -376,7 +369,7 @@ def content_checksum(df: DataFrame, table_name: str) -> DataFrame:
     count costs one hash shuffle of every distinct row hash (16 bytes
     plus its count); nothing is sorted.
     """
-    args = ", ".join(["'|'"] + [f"cast({_quoted(c)} as string)" for c in df.columns])
+    args = ", ".join(["'|'"] + [f"cast({quoted(c)} as string)" for c in df.columns])
     per_hash = (
         df.select(F.expr(f"unhex(md5(concat_ws({args})))").alias("h"))
         .groupBy("h")
@@ -423,11 +416,11 @@ def snapshot_diff(
 
     ``key`` and ``cols`` are column names, not paths: a dot or backtick
     in one is part of the name."""
-    k = _quoted(key)
+    k = quoted(key)
 
     def hashed(df: DataFrame, out: str) -> DataFrame:
         def enc(c: str):
-            s = F.col(_quoted(c)).cast("string")
+            s = F.col(quoted(c)).cast("string")
             esc = F.replace(
                 F.replace(s, F.lit("\\"), F.lit("\\\\")),
                 F.lit("|"),
@@ -488,8 +481,8 @@ def migrate_keyspace(
     inherits the source's fragmentation (coalesce is narrow — it merges
     read splits without a shuffle; a4f's repartition form is the
     rebalancing alternative). Tables are independent, so their copy
-    jobs are SUBMITTED CONCURRENTLY from a thread pool of
-    ``_POOL_WIDTH`` threads — the standard
+    jobs are SUBMITTED CONCURRENTLY from ``_pooled``'s thread pool (at
+    most ``_POOL_WIDTH`` threads) — the standard
     Spark pattern for fleets of small independent jobs (the scheduler
     interleaves them across executors; per-job fixed overhead stops
     serializing). The report is emitted as one local frame in
@@ -510,11 +503,7 @@ def migrate_keyspace(
         n_dst = footer_rows(dst)
         return (name, n_src, n_dst, n_src == n_dst)
 
-    rows = []
-    if tables:
-        with ThreadPoolExecutor(max_workers=min(_POOL_WIDTH, len(tables))) as ex:
-            rows = list(ex.map(copy_one, tables))  # preserves tables order
-    return local_frame(spark, rows, _REPORT_SCHEMA)
+    return local_frame(spark, _pooled(copy_one, list(tables)), _REPORT_SCHEMA)
 
 
 def expectations_report(
@@ -522,38 +511,34 @@ def expectations_report(
 ) -> DataFrame:
     """Declarative data-quality expectations (the deequ/dbt-test shape):
     each rule is (name, boolean Column that is True when the ROW
-    VIOLATES the rule); the report is one row per rule with violation
-    count, row count, and pass flag.
+    VIOLATES the rule); the report is one row per rule, in rule order,
+    with violation count, row count, and pass flag.
 
-    Scale shape: every rule compiles into ONE conditional-sum aggregate
-    over a SINGLE scan of the table (no per-rule passes, no shuffle at
-    all — the aggregation is global partial+final over k counters), so
-    adding rules is free at 100 TB: the cost is the scan you were
-    already paying. Uniqueness-style rules that need a groupBy are the
-    exception — express those as a separate key-partitioned check (cf.
+    Scale shape: k rules are ONE global partial+final aggregate of k+1
+    counters (the row count and a conditional sum per rule) over a
+    SINGLE scan, so the plan has one scan and one exchange of one row
+    per input partition; ``inline`` turns the result row into the k
+    report rows. Adding rules is free at 100 TB: the cost is the scan
+    you were already paying. Uniqueness-style rules that need a groupBy
+    are the exception — express those as a separate key-partitioned check (cf.
     a18's orphan scans) rather than forcing them through this one-pass
     report."""
-    aggs = [F.count(F.lit(1)).alias("__n_rows")]
-    for name, violated in rules:
-        # coalesce: sum over an EMPTY table is NULL, but zero rows means
-        # zero violations (and the rule passes)
-        aggs.append(
-            F.coalesce(F.sum(violated.cast("bigint")), F.lit(0)).alias(
-                f"__v_{name}"
-            )
+    # coalesce: sum over an EMPTY table is NULL, but zero rows means
+    # zero violations (and the rule passes)
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.coalesce(F.sum(violated.cast("bigint")), F.lit(0)).alias(f"v{i}")
+            for i, (_, violated) in enumerate(rules)
+        ],
+    )
+    per_rule = [
+        F.struct(
+            F.lit(name).alias("rule_name"),
+            F.col(f"v{i}").alias("n_violations"),
+            F.col("n").alias("n_rows"),
+            (F.col(f"v{i}") == 0).cast("bigint").alias("passed"),
         )
-    row = df.agg(*aggs)
-    reports = []
-    for name, _ in rules:
-        reports.append(
-            row.select(
-                F.lit(name).alias("rule_name"),
-                F.col(f"__v_{name}").alias("n_violations"),
-                F.col("__n_rows").alias("n_rows"),
-                (F.col(f"__v_{name}") == 0).cast("bigint").alias("passed"),
-            )
-        )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out
+        for i, (name, _) in enumerate(rules)
+    ]
+    return row.select(F.inline(F.array(*per_rule)))

@@ -945,10 +945,12 @@ def a20_schema_drift_report(spark, sf_dir):
 def a21_data_expectations(spark, sf_dir):
     """Declarative data-quality expectations over the migrated corpus
     (operators/migrate.py::expectations_report — the deequ/dbt-test
-    shape): every rule compiles into one conditional sum over a SINGLE
-    table scan, so the whole rule suite costs exactly one pass however
-    many rules it holds. Rules here: n_chars consistency with text,
-    language allow-list, non-negative ids, non-empty text. Output is
+    shape): the whole rule suite is one global partial+final aggregate
+    of k+1 counters (the row count and a conditional sum per rule) over
+    a SINGLE table scan, so it costs exactly one pass and one exchange
+    however many rules it holds (pinned in tests/test_plans.py). Rules
+    here: n_chars consistency with text, language allow-list,
+    non-negative ids, non-empty text. Output is
     per-rule (violations, rows, pass) — the validation gate a
     migration (a13) or a curation pipeline (f27) signs off on."""
     docs = t(spark, sf_dir, "documents")

@@ -1,13 +1,9 @@
 """SparkSession builder with the engine's required configuration.
 
-Every query in the registry assumes:
-  - session timezone UTC (testdata timestamps are naive; the DuckDB
-    oracle treats them as UTC — SURVEY.md §5.4),
-  - AQE enabled (runtime join-strategy + partition coalescing; this is
-    the main 100-TB-scale lever we rely on instead of hand-tuning),
-  - Arrow enabled (Part G pandas UDFs),
-  - ``spark.sql.unionOutputPartitioning`` off (the A1 token-range scan
-    keeps one partition per range).
+Every query in the registry assumes the runtime invariants of
+``_INVARIANTS`` and AQE enabled (runtime join-strategy + partition
+coalescing; this is the main 100-TB-scale lever we rely on instead of
+hand-tuning).
 
 Scale note: ``shuffle_partitions`` defaults to the local core count; on
 a real 1000-executor cluster you would set it to ~2-3x total cores (or
@@ -19,6 +15,32 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Runtime-settable confs every query relies on. ``build_session`` starts
+# from them and ``configure_existing`` forces them on a session the
+# driver harness built.
+_INVARIANTS = {
+    # testdata timestamps are naive; the DuckDB oracle treats them as
+    # UTC (SURVEY.md §5.4)
+    "spark.sql.session.timeZone": "UTC",
+    # Part G pandas UDFs
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # r1/r2 fixtures store TIMESTAMP(NANOS), which Spark cannot read
+    # natively: read as long and convert in the loader
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # r3 fixtures store naive TIMESTAMP(MICROS); without this, Spark 4
+    # infers TIMESTAMP_NTZ, which LTZ-only expressions reject. Reading
+    # them as TimestampType matches DuckDB's naive read wall-clock under
+    # the UTC session zone (load_table also normalizes defensively for
+    # sessions that bypass this config).
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # The A1 scan (sources/cluster_source.py) is a union of one
+    # coalesce(1) scan per token range. With this on (Spark 4.1's
+    # default), a union whose children all have one partition is zipped
+    # into one partition; off (Spark 4.0's behaviour) it keeps one
+    # partition per range.
+    "spark.sql.unionOutputPartitioning": "false",
+}
 
 
 def build_session(
@@ -46,8 +68,6 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Driver heap: 16g default leaves headroom inside the 128 GiB
         # sandbox for the 32 local executor threads that share this JVM;
         # raise via $SPARK_GRAFT_DRIVER_MEM only for driver-heavy runs
@@ -70,17 +90,8 @@ def build_session(
         #   arrow_batch_7 axis).
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # events.parquet stores ts as TIMESTAMP(NANOS) which Spark cannot
-        # read natively; read as long and convert in the loader.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # r3 fixtures: naive TIMESTAMP(MICROS) must read as TimestampType
-        # (see configure_existing) — LTZ-only expressions reject NTZ.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # A1 token-range scan: keep a union of coalesce(1) ranges one
-        # partition per range (see configure_existing).
-        .config("spark.sql.unionOutputPartitioning", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_INVARIANTS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -88,24 +99,11 @@ def build_session(
 
 
 def configure_existing(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable invariants to a session we didn't build.
+    """Apply ``_INVARIANTS`` to a session we didn't build.
 
-    The driver harness passes us its own SparkSession; timezone and Arrow
-    are runtime-settable and required for oracle parity, so force them.
+    The driver harness passes us its own SparkSession; every invariant is
+    runtime-settable and required for oracle parity, so force them all.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # r3 fixtures store naive TIMESTAMP(MICROS); without this, Spark 4
-    # infers TIMESTAMP_NTZ, which LTZ-only expressions reject. Reading
-    # them as TimestampType matches DuckDB's naive read wall-clock under
-    # the UTC session zone (load_table also normalizes defensively for
-    # sessions that bypass this config).
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # The A1 scan (sources/cluster_source.py) is a union of one
-    # coalesce(1) scan per token range. With this on (Spark 4.1's
-    # default), a union whose children all have one partition is zipped
-    # into one partition; off (Spark 4.0's behaviour) it keeps one
-    # partition per range.
-    spark.conf.set("spark.sql.unionOutputPartitioning", "false")
+    for k, v in _INVARIANTS.items():
+        spark.conf.set(k, v)
     return spark

@@ -50,6 +50,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import quoted
 from .parquet_keyspace import load_path
 
 RING_BITS = 64
@@ -66,11 +67,13 @@ def token_of(key) -> int:
     return int.from_bytes(h[:8], "big")
 
 
-def token_in_range(col, lo: int, hi: int):
-    """Spark predicate ``lo <= token_of(col) < hi`` for integer and string
-    keys: fixed-width lowercase hex compares in numeric order, and an md5
-    compares with a 16-digit bound as its first 16 digits (the token) do."""
-    h = F.coalesce(F.md5(col.cast("string")), F.lit("0" * 16))
+def token_in_range(key: str, lo: int, hi: int):
+    """Spark predicate ``lo <= token_of(key) < hi`` over the column named
+    ``key`` (a name, not a struct-field path: a dot in it is part of the
+    name), for integer and string keys: fixed-width lowercase hex
+    compares in numeric order, and an md5 compares with a 16-digit bound
+    as its first 16 digits (the token) do."""
+    h = F.coalesce(F.md5(F.col(quoted(key)).cast("string")), F.lit("0" * 16))
     above = h >= F.lit(f"{lo:016x}")
     return above if hi == _RING else above & (h < F.lit(f"{hi:016x}"))
 
@@ -96,7 +99,7 @@ def read_keyspace_table(spark, path: str, key: str, n_ranges: int = 8) -> DataFr
     return reduce(
         DataFrame.unionAll,
         [
-            table.filter(token_in_range(F.col(key), lo, hi)).coalesce(1)
+            table.filter(token_in_range(key, lo, hi)).coalesce(1)
             for lo, hi in ring_ranges(n_ranges)
         ],
     )

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..util import quoted
+
 TABLES = (
     "region",
     "nation",
@@ -170,7 +172,7 @@ def _open(reader, path: str) -> DataFrame:
     for f in footer:
         if pat.is_timestamp(f.type) and f.type.unit == "ns":
             df = df.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
+                f.name, F.timestamp_micros(F.expr(f"{quoted(f.name)} div 1000"))
             )
     return stabilize_wallclock(df)
 
@@ -219,7 +221,7 @@ def stabilize_wallclock(df: DataFrame) -> DataFrame:
         return df
     for col, dt in df.dtypes:
         if dt == "timestamp":
-            df = df.withColumn(col, F.to_utc_timestamp(F.col(col), tz))
+            df = df.withColumn(col, F.to_utc_timestamp(F.col(quoted(col)), tz))
     return df
 
 

@@ -159,6 +159,13 @@ def drain_persisted() -> None:
             pass
 
 
+def quoted(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted, a backtick inside it
+    doubled, so a dot (CQL quoted identifiers may hold one) stays part of
+    the name instead of reading as a struct-field path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def local_frame(spark, rows: list[tuple], schema):
     """A small driver-side result as a DataFrame that submits no Spark job.
 

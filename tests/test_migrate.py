@@ -69,7 +69,21 @@ def test_range_split_covers_all_rows(spark):
         assert prev.max_key < cur.min_key
 
 
-def test_resumable_copy_skips_completed_ranges(spark):
+def _fail_ranges_from(monkeypatch, k: int) -> None:
+    """Make the copy core's write raise for every ``range=i`` with
+    i >= k, before it submits a job: a crash that leaves ranges 0..k-1
+    copied and marked."""
+    write = mig._write
+
+    def failing(df, path, *a, **kw):
+        if int(re.search(r"range=(\d+)$", path).group(1)) >= k:
+            raise OSError(f"injected write failure for {os.path.basename(path)}")
+        write(df, path, *a, **kw)
+
+    monkeypatch.setattr(mig, "_write", failing)
+
+
+def test_resumable_copy_skips_completed_ranges(spark, monkeypatch):
     """A9: an interrupted copy resumes where it stopped — completed
     ranges are skipped (markers untouched) and the final content equals
     the source. Planning submits no Spark job: each run submits exactly
@@ -81,8 +95,10 @@ def test_resumable_copy_skips_completed_ranges(spark):
     args = (spark, SMOKE_SF, dst, "orders", "o_orderkey")
 
     def crash():
-        with pytest.raises(mig.SimulatedFailure):
-            mig.copy_table_resumable(*args, n_splits=8, fail_after=3)
+        with monkeypatch.context() as m:
+            _fail_ranges_from(m, 3)
+            with pytest.raises(OSError, match="injected write failure for range=3"):
+                mig.copy_table_resumable(*args, n_splits=8)
 
     assert jobs_submitted(spark, crash) == 3
     markers = sorted(f for f in os.listdir(dst) if f.endswith(".done"))
@@ -149,7 +165,7 @@ def _publish(src_dir, keys) -> None:
     )
 
 
-def test_resume_after_source_change_copies_each_key_once(spark, tmp_path):
+def test_resume_after_source_change_copies_each_key_once(spark, tmp_path, monkeypatch):
     """ROADMAP item 1's repro: copy 1,000 keys over 4 ranges, crash after
     2, replace the source with 2,000 keys (1,000 below the old minimum)
     and resume. The target holds no key twice, and the only drift left
@@ -164,8 +180,10 @@ def test_resume_after_source_change_copies_each_key_once(spark, tmp_path):
     os.makedirs(src_dir)
     args = (spark, src_dir, dst, "orders", "k")
     _publish(src_dir, list(range(1000, 2000)))
-    with pytest.raises(mig.SimulatedFailure):
-        mig.copy_table_resumable(*args, n_splits=4, fail_after=2)
+    with monkeypatch.context() as m:
+        _fail_ranges_from(m, 2)
+        with pytest.raises(OSError, match="range=2"):
+            mig.copy_table_resumable(*args, n_splits=4)
     _publish(src_dir, list(range(2000)))
     out = mig.copy_table_resumable(*args, n_splits=4)
 
@@ -276,14 +294,21 @@ def test_paced_copy_resumes_and_repaces_remaining_ranges(spark, tmp_path):
         _FakeClock,
     )
 
+    class _CrashingClock(_FakeClock):
+        """Crashes the copy at its second pacing sleep, before range 2,
+        with virtual time left at the first sleep's end."""
+
+        def sleep(self, seconds):
+            if self.slept:
+                raise RuntimeError("crash before range 2")
+            super().sleep(seconds)
+
     rate = 500.0
     dst = str(tmp_path / "paced")
     args = (spark, SMOKE_SF, dst, "orders", "o_orderkey")
-    first = _FakeClock()
-    with pytest.raises(mig.SimulatedFailure):
-        mig.copy_table_resumable(
-            *args, n_splits=4, rows_per_second=rate, clock=first, fail_after=2
-        )
+    first = _CrashingClock()
+    with pytest.raises(RuntimeError, match="before range 2"):
+        mig.copy_table_resumable(*args, n_splits=4, rows_per_second=rate, clock=first)
     src = load_table(spark, SMOKE_SF, "orders")
     assert abs(first.t - _range_rows(dst, 2)[0] / rate) < 1e-6
     markers = sorted(f for f in os.listdir(dst) if f.endswith(".done"))
@@ -554,7 +579,7 @@ def test_cluster_source_token_ranges(spark, tmp_path):
         keyed = spark.createDataFrame([(k,) for k in keys], ddl)
         for n in (1, 3, 8):
             rng = ring_ranges(n)
-            flags = [token_in_range(F.col("k"), lo, hi) for lo, hi in rng]
+            flags = [token_in_range("k", lo, hi) for lo, hi in rng]
             for row in keyed.select("k", F.array(*flags).alias("in")).collect():
                 want = [i for i, (lo, hi) in enumerate(rng) if lo <= token_of(row.k) < hi]
                 assert len(want) == 1
@@ -727,6 +752,55 @@ def test_dotted_and_backticked_column_names_are_names(spark):
         (4, "missing_in_target", "copy"), (5, "extra_in_target", "delete"),
     ]
     assert run("`k.id`", "`v.x`", "`w``y`") == plain
+
+
+def test_dotted_key_names_are_names(spark, tmp_path):
+    """A key column named ``k.id`` is a name, not a struct-field path:
+    the A1 token-range scan, the resumable copy and the a5 range report
+    each return every row of a table keyed on it (NULL and repeated keys
+    included)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        read_keyspace_table,
+    )
+
+    keys = list(range(-50, 150)) + [None, 7, 7]
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    pq.write_table(
+        pa.table({"k.id": pa.array(keys, pa.int64()), "v": [f"v{k}" for k in keys]}),
+        src_dir / "orders.parquet",
+    )
+    src = load_table(spark, str(src_dir), "orders")
+    scan = read_keyspace_table(spark, str(src_dir / "orders.parquet"), "k.id", n_ranges=4)
+    copied = mig.copy_table_resumable(
+        spark, str(src_dir), str(tmp_path / "dst"), "orders", "k.id", n_splits=3
+    )
+    for got in (scan, copied):
+        assert got.columns == ["k.id", "v"]
+        assert got.exceptAll(src).count() == 0 and src.exceptAll(got).count() == 0
+    splits = mig.range_split_counts(src, "k.id", 4).collect()
+    assert sum(r.n_rows for r in splits) == len(keys)
+
+
+def test_expectation_rule_names_are_labels(spark):
+    """A rule name is a label, not a column path: a rule named
+    ``users.id_non_negative`` reports its row, in rule order, like a
+    plain one."""
+    df = spark.createDataFrame([(1,), (-2,), (3,)], "id int")
+    report = mig.expectations_report(
+        df,
+        [
+            ("users.id_non_negative", F.col("id") < 0),
+            ("id_not_null", F.col("id").isNull()),
+        ],
+    )
+    assert [tuple(r) for r in report.collect()] == [
+        ("users.id_non_negative", 1, 3, 0),
+        ("id_not_null", 0, 3, 1),
+    ]
 
 
 def test_copy_with_observed_metrics(spark):
@@ -936,6 +1010,37 @@ def test_wallclock_stable_under_session_timezone(spark):
             b = base[n][cols].sort_values(by=cols).reset_index(drop=True)
             g = got[cols].sort_values(by=cols).reset_index(drop=True)
             assert b.astype(str).equals(g.astype(str)), n
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_loader_timestamp_names_are_names(spark, tmp_path):
+    """``load_path``'s timestamp handling reads a column name as a name:
+    a micros column named ``t.s`` keeps its wall-clock under a non-UTC
+    session, and a nanos column named ``t`s`` converts to micros."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.parquet_keyspace import (
+        load_path,
+    )
+
+    from cassandra_migrate_keyspace_from_cluster_spark.util import quoted
+
+    def rendered(path, name):
+        df = load_path(spark, path)
+        return [r[0] for r in df.select(F.col(quoted(name)).cast("string")).collect()]
+
+    noon = dt.datetime(2020, 1, 1, 12)
+    micros, nanos = str(tmp_path / "micros.parquet"), str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"t.s": pa.array([noon], pa.timestamp("us"))}), micros)
+    pq.write_table(pa.table({"t`s": pa.array([noon], pa.timestamp("ns"))}), nanos)
+    assert rendered(nanos, "t`s") == ["2020-01-01 12:00:00"]
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "Etc/GMT-8")
+        assert rendered(micros, "t.s") == ["2020-01-01 12:00:00"]
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 

@@ -566,22 +566,58 @@ def test_cluster_scan_is_jvm_only_and_shuffle_free(spark):
 
 def test_configure_existing_keeps_one_partition_per_range(spark):
     """A session the engine did not build (the driver harness's, through
-    ``configure_existing``) gets ``spark.sql.unionOutputPartitioning``
-    off, so the A1 scan still has one partition per token range there;
-    with it on, Spark 4.1 zips the union of one-partition range scans."""
-    from cassandra_migrate_keyspace_from_cluster_spark.session import configure_existing
+    ``configure_existing``) gets every runtime invariant back, whatever it
+    was set to: among them ``spark.sql.unionOutputPartitioning`` off, so
+    the A1 scan still has one partition per token range there; with it
+    on, Spark 4.1 zips the union of one-partition range scans."""
+    from cassandra_migrate_keyspace_from_cluster_spark.session import (
+        _INVARIANTS,
+        configure_existing,
+    )
     from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
         read_keyspace_table,
     )
 
-    spark.conf.set("spark.sql.unionOutputPartitioning", "true")
+    perturbed = {
+        "spark.sql.session.timeZone": "Etc/GMT-8",
+        "spark.sql.execution.arrow.pyspark.enabled": "false",
+        "spark.sql.legacy.parquet.nanosAsLong": "false",
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+        "spark.sql.unionOutputPartitioning": "true",
+    }
+    assert perturbed.keys() == _INVARIANTS.keys()
+    for k, v in perturbed.items():
+        spark.conf.set(k, v)
     try:
         configure_existing(spark)
-        assert spark.conf.get("spark.sql.unionOutputPartitioning") == "false"
+        assert {k: spark.conf.get(k) for k in perturbed} == {
+            "spark.sql.session.timeZone": "UTC",
+            "spark.sql.execution.arrow.pyspark.enabled": "true",
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+            "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+            "spark.sql.unionOutputPartitioning": "false",
+        }
         scan = read_keyspace_table(spark, f"{SF_SMOKE}/orders.parquet", "o_orderkey", 8)
         assert scan.rdd.getNumPartitions() == 8
     finally:
-        spark.conf.set("spark.sql.unionOutputPartitioning", "false")
+        for k, v in _INVARIANTS.items():
+            spark.conf.set(k, v)
+
+
+def test_expectations_report_reads_its_table_once(spark):
+    """a21's rule suite is one aggregate over one scan: its executed
+    (final adaptive) plan has exactly one parquet scan and one exchange
+    for its four rules, and building the frame submits no Spark job."""
+    import re
+
+    built = []
+    assert jobs_submitted(spark, lambda: built.append(q(spark, "a21_data_expectations"))) == 0
+    report = built[0]
+    report.collect()
+    plan = physical_plan(report)
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    nodes = re.findall(r"^\W*(Scan parquet|Exchange)\s+\(", final, re.M)
+    assert sorted(nodes) == ["Exchange", "Scan parquet"], plan
 
 
 def test_content_checksum_hash_aggregates_binary_row_hashes(spark):
