@@ -39,6 +39,7 @@ Scale notes (100-TB design point):
 from __future__ import annotations
 
 import os
+import re
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -109,6 +110,9 @@ def _options(fmt: str) -> dict:
 # copy jobs submitted at once, by migrate_keyspace (one per table) and by
 # an unpaced copy_table_resumable (one per token range)
 _POOL_WIDTH = 8
+
+# A range's done-marker holds exactly ``f"{lo}..{hi}\n"``.
+_MARKER = re.compile(r"-?\d+\.\.-?\d+\n")
 
 
 def _pooled(fn, items: list) -> list:
@@ -262,6 +266,10 @@ def copy_table_resumable(
     copied by exactly one range; rows that changed under a range copied
     earlier are left to a ``snapshot_diff`` repair. A marker records its
     range's ``lo..hi``, and one from another plan raises ``ValueError``.
+    A marker is written to a hidden temporary name, synced and renamed
+    into place; a marker file that is not one ``lo..hi`` line (empty, or
+    cut off mid-line by a crash) counts as absent, so its range is
+    recopied.
     The plan and every marker are checked before anything is created, so
     a refused call leaves the target as it found it.
 
@@ -297,12 +305,15 @@ def copy_table_resumable(
 
     pending = []
     for i, (lo, hi) in enumerate(plan_key_ranges(n_splits)):
-        if not os.path.exists(marker(i)):
+        try:
+            with open(marker(i)) as fh:
+                done = fh.read()
+        except FileNotFoundError:
+            done = ""
+        if not _MARKER.fullmatch(done):  # absent, or torn by a crash
             pending.append((i, lo, hi))
-            continue
-        with open(marker(i)) as fh:
-            if fh.read().strip() != f"{lo}..{hi}":
-                raise ValueError(f"{marker(i)} is not {lo}..{hi}, range {i} of {n_splits}")
+        elif done != f"{lo}..{hi}\n":
+            raise ValueError(f"{marker(i)} is not {lo}..{hi}, range {i} of {n_splits}")
     os.makedirs(table_dir, exist_ok=True)
     range_rows = -(-footer_rows(table_path(src_dir, name)) // n_splits)
 
@@ -310,8 +321,12 @@ def copy_table_resumable(
         i, lo, hi = rng
         part = os.path.join(table_dir, f"range={i}")
         _write(_coalesced(src.filter(token_in_range(key, lo, hi)), range_rows), part)
-        with open(marker(i), "w") as fh:
+        tmp = f"{marker(i)}.tmp"
+        with open(tmp, "w") as fh:
             fh.write(f"{lo}..{hi}\n")
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, marker(i))
         return part
 
     if rows_per_second:
@@ -400,10 +415,12 @@ def snapshot_diff(
 
     Scale shape: one md5 projection per side at scan speed, a full
     outer join that shuffles each side once on the key (co-located if
-    both sides are bucketed on it), and the output is proportional to
-    the DRIFT, not the table — the property that makes incremental
-    re-migration cheap. ``cols`` must be exact-typed (no floats):
-    float formatting is not cross-engine stable (SURVEY.md §5.4).
+    both sides are bucketed on it) carrying a 16-byte hash per row per
+    side (the binary md5, half the bytes of its hex form), and the
+    output is proportional to the DRIFT, not the table — the property
+    that makes incremental re-migration cheap. ``cols`` must be
+    exact-typed (no floats): float formatting is not cross-engine
+    stable (SURVEY.md §5.4).
 
     The per-row hash is NULL- and delimiter-unambiguous: every column
     is escaped (``\`` doubled, ``|`` → ``\|``) and NULL encodes as the
@@ -430,7 +447,7 @@ def snapshot_diff(
 
         return df.select(
             F.col(k),
-            F.md5(F.concat_ws("|", *[enc(c) for c in cols])).alias(out),
+            F.unhex(F.md5(F.concat_ws("|", *[enc(c) for c in cols]))).alias(out),
         )
 
     s = hashed(source, "h_src")

@@ -89,6 +89,17 @@ def build_session(
         #   Results are batch-size-invariant (conf-invariance gate's
         #   arrow_batch_7 axis).
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Every shuffle byte reaches the disk once. For a shuffle of at
+        # most bypassMergeThreshold (default 200) reduce partitions and
+        # no map-side combine (every SQL exchange of a session with
+        # <= 200 shuffle partitions) Spark picks the bypass-merge
+        # writer, which writes one file per reduce partition and then
+        # copies them all into the map output: every byte twice. At 0
+        # every SQL exchange takes the serialized writer, which renames
+        # an unspilled map output into place, as a cluster with more
+        # than 200 shuffle partitions already does. A core conf, so a
+        # running session cannot take it: not in ``_INVARIANTS``.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
     )
     for k, v in {**_INVARIANTS, **(extra_conf or {})}.items():
@@ -103,6 +114,8 @@ def configure_existing(spark: SparkSession) -> SparkSession:
 
     The driver harness passes us its own SparkSession; every invariant is
     runtime-settable and required for oracle parity, so force them all.
+    The harness-built session keeps its own shuffle writer: the writer is
+    chosen by a core conf, which a running session cannot change.
     """
     for k, v in _INVARIANTS.items():
         spark.conf.set(k, v)

@@ -229,6 +229,38 @@ def test_resume_trusts_only_markers_of_its_own_plan(spark, tmp_path):
     assert sorted(os.listdir(fresh)) == ["_orders_range_0.done"]
 
 
+@pytest.mark.parametrize("torn", ["", "92233720"], ids=["empty", "cut_off"])
+def test_torn_marker_is_recopied(spark, tmp_path, torn):
+    """A marker left empty or cut off mid-line (a crash while it was
+    written) counts as absent: the resume copies exactly that range, in
+    one write job, leaves a whole marker and no temporary file, and the
+    target equals the source."""
+    import shutil
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources.cluster_source import (
+        ring_ranges,
+    )
+
+    dst = str(tmp_path)
+    args = (spark, SMOKE_SF, dst, "orders", "o_orderkey")
+    mig.copy_table_resumable(*args, n_splits=4)
+    shutil.rmtree(os.path.join(dst, "orders.parquet", "range=2"))
+    marker = os.path.join(dst, "_orders_range_2.done")
+    with open(marker, "w") as fh:
+        fh.write(torn)
+    resumed = []
+    assert jobs_submitted(
+        spark, lambda: resumed.append(mig.copy_table_resumable(*args, n_splits=4))
+    ) == 1
+    lo, hi = ring_ranges(4)[2]
+    with open(marker) as fh:
+        assert fh.read() == f"{lo}..{hi}\n"
+    markers = [f"_orders_range_{i}.done" for i in range(4)]
+    assert sorted(os.listdir(dst)) == markers + ["orders.parquet"]
+    out, src = resumed[0], load_table(spark, SMOKE_SF, "orders")
+    assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
+
+
 @pytest.mark.parametrize(
     "keys", [[], [5, 5, -3, None, 7, None, 5] * 30], ids=["empty", "repeated_keys"]
 )

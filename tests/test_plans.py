@@ -644,3 +644,75 @@ def test_content_checksum_hash_aggregates_binary_row_hashes(spark):
     assert len(keys) == 1, plan
     (key,) = keys
     assert re.search(rf"\[unhex\(md5\(.*\) AS {re.escape(key)}\]", plan), plan
+
+
+def test_snapshot_diff_joins_binary_row_hashes(spark):
+    """The diff's join shuffles 16-byte binary row hashes: each side
+    projects its hash as ``unhex(md5(...))``, and each of the join's
+    exchanges carries one of those two columns. Building the frame
+    submits no Spark job."""
+    import re
+
+    from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
+    from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
+
+    orders = load_table(spark, SF_SMOKE, "orders")
+    cols = ("o_custkey", "o_orderstatus", "o_orderdate")
+    built = []
+    assert jobs_submitted(
+        spark, lambda: built.append(mig.snapshot_diff(orders, orders, "o_orderkey", cols))
+    ) == 0
+    diff = built[0]
+    diff.collect()
+    plan = physical_plan(diff)
+    hashes = set(re.findall(r"^Output .*, unhex\(md5\(.*\) AS (h_\w+#\d+)\]$", plan, re.M))
+    assert sorted(h.split("#")[0] for h in hashes) == ["h_src", "h_tgt"], plan
+    inputs = re.findall(r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]$", plan, re.M)
+    assert inputs, plan
+    for cols_in in inputs:
+        assert len(hashes & set(cols_in.split(", "))) == 1, plan
+
+
+def test_shuffle_writes_each_byte_once(spark):
+    """An exchange in a ``build_session`` session writes its map output
+    to disk once: over a groupBy whose shuffle carries incompressible
+    16-byte hashes, the JVM's disk writes stay below 1.3x the size of
+    that shuffle's ``shuffle_*.data`` files. Spark's bypass-merge writer
+    (its pick for at most 200 reduce partitions) writes each byte twice,
+    a ratio of about 2."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    jvm = spark.sparkContext._jvm
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    local_dirs = [
+        d.getPath()
+        for d in jvm.org.apache.spark.SparkEnv.get().blockManager().diskBlockManager().localDirs()
+    ]
+
+    def written() -> int:
+        with open(f"/proc/{pid}/io") as fh:
+            return next(int(ln.split()[1]) for ln in fh if ln.startswith("write_bytes:"))
+
+    def data_files() -> dict[str, int]:
+        return {
+            p: os.path.getsize(p)
+            for d in local_dirs
+            for p in glob.glob(os.path.join(d, "*", "shuffle_*.data"))
+        }
+
+    old = data_files()
+    grouped = (
+        spark.range(100_000)
+        .select(F.unhex(F.md5(F.col("id").cast("string"))).alias("h"))
+        .groupBy("h")
+        .count()
+    )
+    before = written()
+    grouped.write.format("noop").mode("overwrite").save()
+    delta = written() - before
+    shuffled = sum(size for p, size in data_files().items() if p not in old)
+    assert shuffled >= 1 << 20, shuffled
+    assert delta < 1.3 * shuffled, (delta, shuffled)
