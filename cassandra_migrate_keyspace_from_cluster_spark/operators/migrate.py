@@ -34,6 +34,11 @@ Scale notes (100-TB design point):
     an order-insensitive reduction, so it needs no sort; its exact
     distinct count does need one hash shuffle of every distinct row
     hash (16 bytes plus its count).
+  - A table of at most ``_ONE_TASK_BYTES`` (512 KiB by Catalyst's size
+    estimate) is checked in one task (``_one_task``): the checksum and
+    both sides of the diff read it as one partition, so the planner
+    adds no row exchange and no row is shuffled. Larger tables, and
+    frames of unknown size, keep the exchange plans above.
 """
 
 from __future__ import annotations
@@ -129,6 +134,31 @@ def _coalesced(df: DataFrame, n_rows: int) -> DataFrame:
     """``df`` merged, without a shuffle, into one partition (one written
     file) per ~1M of its estimated ``n_rows`` rows."""
     return df.coalesce(max(1, -(-n_rows // 1_000_000)))
+
+
+# The largest input, by Catalyst's size estimate, that ``_one_task``
+# reads as one partition. Measured on a 4-core host (``local[4]``, 8
+# part files per input, 9-11 alternating warm runs per point; CHANGES.md
+# has the table): one task checksums TPC-H orders in 0.124 s against
+# the exchange plan's 0.137 s at 0.505 MB (20k rows) and ties it at
+# 0.61 MB; it diffs orders against a drifted copy at par at 0.505 MB
+# (0.247 against 0.244 s) and 0.018 s slower at 0.61 MB. Above the
+# limit the exchange plan's parallelism wins: at 3.0 MB (150k rows)
+# one task checksums in 0.50 s against 0.30 s.
+_ONE_TASK_BYTES = 512 * 1024
+
+
+def _one_task(df: DataFrame) -> DataFrame:
+    """``df`` merged into one partition when Catalyst's size estimate of
+    it is at most ``_ONE_TASK_BYTES``, else ``df`` unchanged.
+
+    The estimate is plan metadata (file sizes for a scan), so this
+    submits no Spark job. One partition already satisfies what a
+    group-by, a global aggregate and a join require, so the planner adds
+    no exchange above it: the input is read, hashed and reduced in one
+    task, and no input row is shuffled."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return df.coalesce(1) if size <= _ONE_TASK_BYTES else df
 
 
 def _write(df: DataFrame, path: str, fmt: str = "parquet", partition_by=()) -> None:
@@ -382,21 +412,33 @@ def content_checksum(df: DataFrame, table_name: str) -> DataFrame:
     the row count, the exact distinct count and the extrema (unsigned
     byte order is the order of the lowercase hex). The exact distinct
     count costs one hash shuffle of every distinct row hash (16 bytes
-    plus its count); nothing is sorted.
+    plus its count); nothing is sorted. A table of at most
+    ``_ONE_TASK_BYTES`` (``_one_task``) is read as one partition
+    instead: one task hashes and reduces it with no row shuffle, and
+    only its one output row crosses an exchange. The output is the same.
     """
     args = ", ".join(["'|'"] + [f"cast({quoted(c)} as string)" for c in df.columns])
+    one = _one_task(df)
     per_hash = (
-        df.select(F.expr(f"unhex(md5(concat_ws({args})))").alias("h"))
+        one.select(F.expr(f"unhex(md5(concat_ws({args})))").alias("h"))
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return per_hash.agg(
+    out = per_hash.agg(
         F.lit(table_name).alias("table_name"),
         F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows"),
         F.count(F.lit(1)).alias("n_distinct_hashes"),
         F.lower(F.hex(F.min("h"))).alias("min_hash"),
         F.lower(F.hex(F.max("h"))).alias("max_hash"),
     )
+    # With no exchange, a one-task checksum would run in its job's final
+    # stage, so in a union with larger checksums it would wait for their
+    # shuffle stages and then run alone. The one-row exchange puts it in
+    # a map stage beside theirs. Source and target checksums of
+    # perfbench's ten-table keyspace, one union per side, 4 cores, 15
+    # alternating runs: 1.70 s with no table in one task, 2.03 s with
+    # the small ones in one task and no exchange, 1.55 s with it.
+    return out.repartition(1) if one is not df else out
 
 
 def snapshot_diff(
@@ -418,7 +460,10 @@ def snapshot_diff(
     both sides are bucketed on it) carrying a 16-byte hash per row per
     side (the binary md5, half the bytes of its hex form), and the
     output is proportional to the DRIFT, not the table — the property
-    that makes incremental re-migration cheap. ``cols`` must be
+    that makes incremental re-migration cheap. When both sides are at
+    most ``_ONE_TASK_BYTES`` (``_one_task``) each is read as one
+    partition and the join runs in one task with no exchange; if either
+    side is above it, the join shuffles both. ``cols`` must be
     exact-typed (no floats): float formatting is not cross-engine
     stable (SURVEY.md §5.4).
 
@@ -450,8 +495,8 @@ def snapshot_diff(
             F.unhex(F.md5(F.concat_ws("|", *[enc(c) for c in cols]))).alias(out),
         )
 
-    s = hashed(source, "h_src")
-    tg = hashed(target, "h_tgt").withColumnRenamed(key, "_tgt_key")
+    s = hashed(_one_task(source), "h_src")
+    tg = hashed(_one_task(target), "h_tgt").withColumnRenamed(key, "_tgt_key")
     j = s.join(tg, s[k] == tg["_tgt_key"], "full_outer")
     status = (
         F.when(F.col("_tgt_key").isNull(), "missing_in_target")

@@ -35,6 +35,7 @@ from cassandra_migrate_keyspace_from_cluster_spark.sources import TABLES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_T2 = "/root/testdata/sf0.01"
+SF_BENCH = os.path.join(os.path.dirname(SF_T2), "sf0.1")
 # Parity tests run at the same scale factor the driver's t2 uses unless
 # overridden (PARITY_SF=sf0.001 for a fast pre-check).
 PARITY_SF = os.environ.get("PARITY_SF", SF_T2)

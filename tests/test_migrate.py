@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
+from cassandra_migrate_keyspace_from_cluster_spark.plans.explain import physical_plan
 from cassandra_migrate_keyspace_from_cluster_spark.sources import cassandra as cass
 from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
 
@@ -259,6 +260,77 @@ def test_torn_marker_is_recopied(spark, tmp_path, torn):
     assert sorted(os.listdir(dst)) == markers + ["orders.parquet"]
     out, src = resumed[0], load_table(spark, SMOKE_SF, "orders")
     assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
+
+
+_KILLED_COPY = """
+import sys
+from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
+from cassandra_migrate_keyspace_from_cluster_spark.session import build_session
+spark = build_session(app_name="killed_copy", cpus=1, extra_conf={"spark.driver.memory": "1g"})
+mig.copy_table_resumable(spark, sys.argv[1], sys.argv[2], "orders", "o_orderkey", n_splits=8)
+"""
+
+
+@pytest.mark.parametrize("k", [0, 3, 7])
+def test_copy_killed_after_k_markers_resumes_exactly(spark, tmp_path, k):
+    """A real crash: a child process in its own session runs an unpaced
+    8-range copy of sf0.01 orders on one core, so its ranges commit one
+    at a time, and once its range writes have started and k markers
+    exist, its whole process group (Python and JVM) is SIGKILLed before
+    the copy ends. The resume in this session submits one write job
+    per unmarked range, ``load_table`` of the target lists no
+    ``_temporary`` file, and the target equals the source by
+    ``exceptAll`` both ways."""
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    from .conftest import SF_T2
+
+    dst = str(tmp_path / "dst")
+    table_dir = os.path.join(dst, "orders.parquet")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_LOCAL_DIRS": str(tmp_path / "local")}
+
+    def markers() -> int:
+        names = os.listdir(dst) if os.path.isdir(dst) else []
+        return sum(bool(re.fullmatch(r"_orders_range_\d+\.done", n)) for n in names)
+
+    def writing() -> bool:
+        return os.path.isdir(table_dir) and any(
+            n.startswith("range=") for n in os.listdir(table_dir)
+        )
+
+    with open(tmp_path / "child.log", "w") as log:
+        child = subprocess.Popen(
+            [sys.executable, "-c", _KILLED_COPY, SF_T2, dst],
+            cwd=root, env=env, stdout=log, stderr=log, start_new_session=True,
+        )
+    try:
+        deadline = time.monotonic() + 300
+        while not (writing() and markers() >= k) and child.poll() is None:
+            assert time.monotonic() < deadline, "the child copy never got going"
+            time.sleep(0.005)
+    finally:
+        os.killpg(child.pid, signal.SIGKILL)
+        child.wait(timeout=60)
+    log = (tmp_path / "child.log").read_text()
+    assert child.returncode == -signal.SIGKILL, log  # killed, not finished
+    assert writing() and k <= markers() < 8, log
+
+    unmarked = 8 - markers()
+    resumed = []
+    args = (spark, SF_T2, dst, "orders", "o_orderkey")
+    assert jobs_submitted(
+        spark, lambda: resumed.append(mig.copy_table_resumable(*args, n_splits=8))
+    ) == unmarked
+    assert markers() == 8
+    target = load_table(spark, dst, "orders")
+    assert not [f for f in target.inputFiles() if "_temporary" in f]
+    src = load_table(spark, SF_T2, "orders")
+    for out in (resumed[0], target):
+        assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
 
 
 @pytest.mark.parametrize(
@@ -738,16 +810,16 @@ def _reference_checksum(rows, table_name):
     )
 
 
-@pytest.mark.parametrize(
-    "rows",
-    [
-        pytest.param([(1, "a", "x"), (1, "a", "x"), (2, "b", "y"), (1, "a", "x")], id="duplicates"),
-        # concat_ws skips NULLs: the first two rows hash the same
-        pytest.param([(1, None, "x"), (1, "x", None), (None, None, None), (2, "", "")], id="nulls"),
-        pytest.param([(1, "héllo", "日本"), (2, "ß|ü", "😀"), (3, "naïve", None)], id="non_ascii"),
-        pytest.param([], id="empty"),
-    ],
-)
+CHECKSUM_CASES = [
+    pytest.param([(1, "a", "x"), (1, "a", "x"), (2, "b", "y"), (1, "a", "x")], id="duplicates"),
+    # concat_ws skips NULLs: the first two rows hash the same
+    pytest.param([(1, None, "x"), (1, "x", None), (None, None, None), (2, "", "")], id="nulls"),
+    pytest.param([(1, "héllo", "日本"), (2, "ß|ü", "😀"), (3, "naïve", None)], id="non_ascii"),
+    pytest.param([], id="empty"),
+]
+
+
+@pytest.mark.parametrize("rows", CHECKSUM_CASES)
 def test_content_checksum_equals_python_reference(spark, rows):
     """content_checksum's row is the pure-Python md5 reduction of the
     same rows, and its schema is (table_name, n_rows, n_distinct_hashes,
@@ -757,6 +829,68 @@ def test_content_checksum_equals_python_reference(spark, rows):
     got = mig.content_checksum(df, "t")
     assert got.schema == CHECKSUM_SCHEMA
     assert [tuple(r) for r in got.collect()] == [_reference_checksum(rows, "t")]
+
+
+def _parquet_frame(spark, path, rows, schema: str):
+    """``rows`` written to parquet at ``path`` and read back: a frame
+    whose size Catalyst knows from its files (a frame made from local
+    rows has no size estimate)."""
+    spark.createDataFrame(rows, schema).write.parquet(str(path))
+    return spark.read.schema(schema).parquet(str(path))
+
+
+@pytest.mark.parametrize("rows", CHECKSUM_CASES)
+def test_content_checksum_is_the_same_on_both_plans(spark, tmp_path, monkeypatch, rows):
+    """The one-task plan (input at most ``_ONE_TASK_BYTES``: no row
+    hash is shuffled) and the exchange plan (the limit lowered below
+    every input: a hash exchange of the row hashes) of content_checksum
+    return the same row with the same schema."""
+    df = _parquet_frame(spark, tmp_path / "t", rows, "k int, c1 string, c2 string")
+
+    def checksum():
+        out = mig.content_checksum(df, "t")
+        return out.schema, out.collect(), physical_plan(out)
+
+    schema, got, plan = checksum()
+    monkeypatch.setattr(mig, "_ONE_TASK_BYTES", -1)
+    schema_ex, got_ex, plan_ex = checksum()
+    assert (schema_ex, got_ex) == (schema, got)
+    if rows:
+        assert "hashpartitioning" not in plan and "hashpartitioning" in plan_ex, (plan, plan_ex)
+
+
+def test_snapshot_diff_is_the_same_on_both_plans(spark, tmp_path, monkeypatch):
+    """snapshot_diff's one-task plan and its exchange plan (the limit
+    lowered below every input) report the same repair rows, as a
+    multiset, with the same schema, over a drifted pair with missing,
+    changed, extra and NULL-moved rows."""
+    src = {k: (k, f"a{k}", f"b{k}") for k in range(200)}
+    src.update({200: (200, "x", None), 201: (201, None, None)})
+    tgt = {k: row for k, row in src.items() if k % 7}  # k % 7 == 0: missing
+    tgt.update({k: (k, "changed", f"b{k}") for k in (1, 2, 3)})
+    tgt[200] = (200, None, "x")  # the NULL moved to the other column
+    tgt.update({k: (k, f"a{k}", f"b{k}") for k in range(300, 305)})  # extra
+    schema = "k int, c1 string, c2 string"
+    source = _parquet_frame(spark, tmp_path / "src", list(src.values()), schema)
+    target = _parquet_frame(spark, tmp_path / "tgt", list(tgt.values()), schema)
+
+    def diff():
+        out = mig.snapshot_diff(source, target, "k", ("c1", "c2"))
+        return out.schema, sorted(tuple(r) for r in out.collect()), physical_plan(out)
+
+    schema, rows, plan = diff()
+    monkeypatch.setattr(mig, "_ONE_TASK_BYTES", -1)
+    schema_ex, rows_ex, plan_ex = diff()
+    assert "Exchange" not in plan and "Exchange" in plan_ex, (plan, plan_ex)
+    assert (schema_ex, rows_ex) == (schema, rows)
+    by_status = {}
+    for k, status, _ in rows:
+        by_status.setdefault(status, []).append(k)
+    assert by_status == {
+        "missing_in_target": list(range(0, 200, 7)),
+        "changed": [1, 2, 3, 200],
+        "extra_in_target": list(range(300, 305)),
+    }
 
 
 def test_dotted_and_backticked_column_names_are_names(spark):

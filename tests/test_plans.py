@@ -18,7 +18,7 @@ from cassandra_migrate_keyspace_from_cluster_spark.plans.explain import (
 )
 from cassandra_migrate_keyspace_from_cluster_spark.registry import specs
 
-from .conftest import SF_SMOKE, jobs_submitted
+from .conftest import SF_BENCH, SF_SMOKE, jobs_submitted
 
 ALL_SPECS = specs()
 
@@ -620,17 +620,25 @@ def test_expectations_report_reads_its_table_once(spark):
     assert sorted(nodes) == ["Exchange", "Scan parquet"], plan
 
 
+def _size_estimate(df) -> int:
+    """Catalyst's size estimate of ``df``, the figure ``_one_task``
+    compares with ``_ONE_TASK_BYTES``."""
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
 def test_content_checksum_hash_aggregates_binary_row_hashes(spark):
-    """A8's checksum groups rows by their 16-byte binary hash (one hash
-    exchange, keyed on ``unhex(md5(...))``) and reduces the groups with
-    one global aggregate: no Sort anywhere in the executed plan, so no
-    side sorts its row hashes. Building the frame submits no Spark job."""
+    """Above ``_ONE_TASK_BYTES`` (sf0.1 orders, ~2.7 MB), A8's checksum
+    groups rows by their 16-byte binary hash (one hash exchange, keyed
+    on ``unhex(md5(...))``) and reduces the groups with one global
+    aggregate: no Sort anywhere in the executed plan, so no side sorts
+    its row hashes. Building the frame submits no Spark job."""
     import re
 
     from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
     from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
 
-    orders = load_table(spark, SF_SMOKE, "orders")
+    orders = load_table(spark, SF_BENCH, "orders")
+    assert _size_estimate(orders) > mig._ONE_TASK_BYTES
     built = []
     assert jobs_submitted(
         spark, lambda: built.append(mig.content_checksum(orders, "orders"))
@@ -647,16 +655,17 @@ def test_content_checksum_hash_aggregates_binary_row_hashes(spark):
 
 
 def test_snapshot_diff_joins_binary_row_hashes(spark):
-    """The diff's join shuffles 16-byte binary row hashes: each side
-    projects its hash as ``unhex(md5(...))``, and each of the join's
-    exchanges carries one of those two columns. Building the frame
-    submits no Spark job."""
+    """Above ``_ONE_TASK_BYTES`` (sf0.1 orders), the diff's join
+    shuffles 16-byte binary row hashes: each side projects its hash as
+    ``unhex(md5(...))``, and each of the join's exchanges carries one of
+    those two columns. Building the frame submits no Spark job."""
     import re
 
     from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
     from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
 
-    orders = load_table(spark, SF_SMOKE, "orders")
+    orders = load_table(spark, SF_BENCH, "orders")
+    assert _size_estimate(orders) > mig._ONE_TASK_BYTES
     cols = ("o_custkey", "o_orderstatus", "o_orderdate")
     built = []
     assert jobs_submitted(
@@ -671,6 +680,42 @@ def test_snapshot_diff_joins_binary_row_hashes(spark):
     assert inputs, plan
     for cols_in in inputs:
         assert len(hashes & set(cols_in.split(", "))) == 1, plan
+
+
+def test_small_checksum_and_diff_run_as_one_task(spark):
+    """At most ``_ONE_TASK_BYTES`` (sf0.001 orders, ~36 kB) the checksum
+    and the diff read their input as one partition: building either
+    frame submits no Spark job, every stage that collecting it runs has
+    one task, and no input row crosses an exchange. The diff's plan has
+    no Exchange; the checksum's one Exchange carries its output row."""
+    import re
+
+    from cassandra_migrate_keyspace_from_cluster_spark.operators import migrate as mig
+    from cassandra_migrate_keyspace_from_cluster_spark.sources import load_table
+
+    orders = load_table(spark, SF_SMOKE, "orders")
+    assert _size_estimate(orders) <= mig._ONE_TASK_BYTES
+    cols = ("o_custkey", "o_orderstatus", "o_orderdate")
+    tracker = spark.sparkContext.statusTracker()
+    for build, exchanged in (
+        (lambda: mig.content_checksum(orders, "orders"),
+         {("table_name", "n_rows", "n_distinct_hashes", "min_hash", "max_hash")}),
+        (lambda: mig.snapshot_diff(orders, orders, "o_orderkey", cols), set()),
+    ):
+        built = []
+        assert jobs_submitted(spark, lambda: built.append(build())) == 0
+        before = max(tracker.getJobIdsForGroup(), default=-1)
+        assert jobs_submitted(spark, built[0].collect) >= 1
+        stages = [
+            tracker.getStageInfo(s)
+            for j in tracker.getJobIdsForGroup() if j > before
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert {s.numTasks for s in stages if s is not None} == {1}
+        plan = physical_plan(built[0])
+        inputs = re.findall(r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]$", plan, re.M)
+        # the formatted plan lists each exchange under the final and the initial plan
+        assert {tuple(c.split("#")[0] for c in i.split(", ")) for i in inputs} == exchanged, plan
 
 
 def test_shuffle_writes_each_byte_once(spark):
